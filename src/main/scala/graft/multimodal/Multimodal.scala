@@ -684,11 +684,14 @@ object Multimodal {
       // registry walk + writer construction is per-partition, not
       // per-image; bytes identical (jpegRgb24With resets per image)
       val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-      it.map { id =>
+      val images = it.map { id =>
         val w = (id % 7 + 10).toInt
         val h = (id % 5 + 10).toInt
         (id, jpegRgb24With(writer, w, h, imgPx(id)))
       }
+      // `++` evaluates its argument only once `images` is exhausted:
+      // the writer's native encoder is released when the batch is done
+      images ++ { writer.dispose(); Iterator.empty }
     }.toDF("asset_id", "payload")
   }
 

@@ -15,9 +15,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: each fill is window-function-only — partition by the
   * series key so a 100 TB table parallelizes per series; no collect, no
-  * shuffle beyond the one hash-partition per window spec (and all four
-  * window passes below share the SAME partitioning+ordering, so Catalyst
-  * plans a single sort, not four).
+  * shuffle beyond the one hash-partition per window spec. The previous
+  * and next non-null observation come from the frameless offset
+  * functions `lag`/`lead(…, ignoreNulls = true)` and the forward fill
+  * from a running `last` frame: each is one linear pass per partition
+  * (an unbounded-FOLLOWING frame would be re-evaluated per row, which is
+  * quadratic in the series length). All of them share the SAME
+  * partitioning+ordering, so Catalyst plans one sort for all of them.
   */
 object Fill {
 
@@ -43,8 +47,30 @@ object Fill {
 
   /** First non-null value at or after each row (backward fill). */
   def bfill(c: Column, partitionBy: Seq[String], orderBy: Seq[String]): Column =
-    first(c, ignoreNulls = true)
-      .over(part(partitionBy, orderBy).rowsBetween(0, Window.unboundedFollowing))
+    coalesce(c, lead(c, 1, null, ignoreNulls = true).over(part(partitionBy, orderBy)))
+
+  /** The nearest non-null observation strictly before / after each row,
+    * as `(t, v)` structs (null when there is none): `t` and `v` always
+    * come from the same row, so the interpolation below reads a
+    * consistent pair.
+    */
+  private def neighbours(v: Column, tsSec: Column, partitionBy: Seq[String],
+                         orderBy: Seq[String]): (Column, Column) = {
+    val w = part(partitionBy, orderBy)
+    val s = when(v.isNotNull, struct(tsSec.as("t"), v.as("v")))
+    (lag(s, 1, null, ignoreNulls = true).over(w), lead(s, 1, null, ignoreNulls = true).over(w))
+  }
+
+  /** The observed value, else the linear value between `prev` and `next`,
+    * else `prev`'s value. Duplicate-timestamp guard: when the surrounding
+    * observations share a timestamp the slope is 0/0, so fall through to
+    * the carry-forward branch instead of emitting NaN.
+    */
+  private def linear(v: Column, tsSec: Column, prev: Column, next: Column): Column =
+    when(v.isNotNull, v)
+      .when(prev.isNotNull && next.isNotNull && next("t") =!= prev("t"),
+        prev("v") + (next("v") - prev("v")) * (tsSec - prev("t")) / (next("t") - prev("t")))
+      .when(prev.isNotNull, prev("v"))
 
   /** Forward-only linear interpolation — pandas
     * `interpolate(method='linear', limit_direction='forward')` semantics
@@ -54,15 +80,8 @@ object Fill {
     * stay null (nothing precedes them to interpolate from).
     */
   def interpolateForward(v: Column, tsSec: Column, partitionBy: Seq[String], orderBy: Seq[String]): Column = {
-    val before = part(partitionBy, orderBy).rowsBetween(Window.unboundedPreceding, -1)
-    val after = part(partitionBy, orderBy).rowsBetween(1, Window.unboundedFollowing)
-    val prev = last(when(v.isNotNull, struct(tsSec.as("t"), v.as("v"))), ignoreNulls = true).over(before)
-    val next = first(when(v.isNotNull, struct(tsSec.as("t"), v.as("v"))), ignoreNulls = true).over(after)
-    when(v.isNotNull, v)
-      .when(prev.isNotNull && next.isNotNull && next("t") =!= prev("t"),
-        prev("v") + (next("v") - prev("v")) * (tsSec - prev("t")) / (next("t") - prev("t")))
-      .when(prev.isNotNull, prev("v"))
-    // no otherwise: leading nulls remain null under forward-only limits
+    val (prev, next) = neighbours(v, tsSec, partitionBy, orderBy)
+    linear(v, tsSec, prev, next) // no otherwise: leading nulls remain null under forward-only limits
   }
 
   /** The reference's per-column fill POLICY (`fill_missing_values_in_df`,
@@ -106,17 +125,7 @@ object Fill {
     * (mirroring the reference's backfill fallback).
     */
   def interpolate(v: Column, tsSec: Column, partitionBy: Seq[String], orderBy: Seq[String]): Column = {
-    val before = part(partitionBy, orderBy).rowsBetween(Window.unboundedPreceding, -1)
-    val after = part(partitionBy, orderBy).rowsBetween(1, Window.unboundedFollowing)
-    val prev = last(when(v.isNotNull, struct(tsSec.as("t"), v.as("v"))), ignoreNulls = true).over(before)
-    val next = first(when(v.isNotNull, struct(tsSec.as("t"), v.as("v"))), ignoreNulls = true).over(after)
-    // duplicate-timestamp guard: when the surrounding observations share
-    // a timestamp the slope is 0/0 — fall through to the ffill branch
-    // instead of emitting NaN
-    when(v.isNotNull, v)
-      .when(prev.isNotNull && next.isNotNull && next("t") =!= prev("t"),
-        prev("v") + (next("v") - prev("v")) * (tsSec - prev("t")) / (next("t") - prev("t")))
-      .when(prev.isNotNull, prev("v"))
-      .otherwise(next("v"))
+    val (prev, next) = neighbours(v, tsSec, partitionBy, orderBy)
+    linear(v, tsSec, prev, next).otherwise(next("v"))
   }
 }

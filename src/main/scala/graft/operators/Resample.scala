@@ -60,9 +60,13 @@ object Resample {
     * anchor, so no leading nulls arise.
     *
     * Scale shape: one generator (explode(sequence), shuffle-free) plus
-    * ONE keyed window — a single hash shuffle on the series key, same
-    * budget as [[Fill.interpolate]]; grid values are exact integer
-    * doubles so the interpolation arithmetic is engine-identical.
+    * ONE keyed window — a single hash shuffle and sort on the series key,
+    * same budget as [[Fill.interpolate]]. The neighbouring anchors come
+    * from `lag`/`lead(…, ignoreNulls)`, so the window is one linear pass
+    * over each series' grid (an unbounded-following frame would be
+    * re-evaluated per row, quadratic in the grid length); grid values
+    * are exact integer doubles so the interpolation arithmetic is
+    * engine-identical.
     * Emits `ts_up` (epoch-seconds grid) and `<valueCol>_lin`.
     */
   def upsampleLinear(df: DataFrame, tsCol: String, valueCol: String,

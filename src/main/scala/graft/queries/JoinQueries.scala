@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.sources.Tables
 import graft.functions.TimeFns
+import graft.operators.Fill
 
 /** Join / set operators. The reference has NO relational join (SURVEY
   * §2.3) — its "multi-source data fusion" is per-source pipeline runs.
@@ -115,24 +116,22 @@ object JoinQueries {
   // (backward) click. The variant a sensor-fusion pipeline needs when
   // the reference channel may lag OR lead the aligned one. Same
   // distributed-safe shape as join_asof: union the tagged streams once,
-  // ONE shuffle on the series key, a backward ffill frame and a forward
-  // bfill frame over the same (key, time) sort — the exchange and sort
-  // are shared by both frames — then an exact integer-µs comparison
-  // picks the side. No inequality join anywhere.
+  // ONE shuffle on the series key, a backward ffill and a forward bfill
+  // ([[Fill]]: a running frame and a frameless `lead`, both linear in
+  // the series length) over the same (key, time) sort — the exchange
+  // and sort are shared — then an exact integer-µs comparison picks
+  // the side. No inequality join anywhere.
   // ========================================================================
   def joinAsofNearest(s: SparkSession, d: String): DataFrame = {
     val e = ev(s, d).filter(col("event_type").isin("purchase", "click"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         epochUs.as("e_us"))
-    val wB = Window.partitionBy(col("user_id")).orderBy(col("e_us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wF = Window.partitionBy(col("user_id")).orderBy(col("e_us"), col("event_id"))
-      .rowsBetween(0, Window.unboundedFollowing)
+    val (key, order) = (Seq("user_id"), Seq("e_us", "event_id"))
     val click = col("event_type") === "click"
-    e.withColumn("bv", last(when(click, col("value")), ignoreNulls = true).over(wB))
-      .withColumn("bt", last(when(click, col("e_us")), ignoreNulls = true).over(wB))
-      .withColumn("fv", first(when(click, col("value")), ignoreNulls = true).over(wF))
-      .withColumn("ft", first(when(click, col("e_us")), ignoreNulls = true).over(wF))
+    e.withColumn("bv", Fill.ffill(when(click, col("value")), key, order))
+      .withColumn("bt", Fill.ffill(when(click, col("e_us")), key, order))
+      .withColumn("fv", Fill.bfill(when(click, col("value")), key, order))
+      .withColumn("ft", Fill.bfill(when(click, col("e_us")), key, order))
       .filter(col("event_type") === "purchase")
       .withColumn("nearest_click_value",
         when(col("bt").isNull, col("fv"))

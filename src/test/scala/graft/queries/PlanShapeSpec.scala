@@ -634,6 +634,32 @@ class PlanShapeSpec extends SparkSpec {
     assert("hashpartitioning\\(user_id".r.findAllIn(p).length <= 2, p)
   }
 
+  test("fill keys: prev/next from frameless lead/lag over ONE series-key sort, no ordered unbounded-following frame") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, SpecifiedWindowFrame, UnboundedFollowing, WindowSpecDefinition}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    for (key <- Seq("resample_up_linear", "fill_interpolate", "fill_policy", "join_asof_nearest")) {
+      val exec = graft.SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan
+      // an ordered frame ending at UNBOUNDED FOLLOWING is re-evaluated per
+      // row (quadratic per series); the whole-partition count in
+      // fillMissing has no ORDER BY and is a single pass
+      val quadratic = aqe.collect(exec) { case w: WindowExec => w.windowExpression }.flatten
+        .flatMap(_.collect {
+          case s @ WindowSpecDefinition(_, order, SpecifiedWindowFrame(_, _, UnboundedFollowing))
+              if order.nonEmpty => s
+        })
+      assert(quadratic.isEmpty, s"$key:\n$exec")
+      val seriesSorts = aqe.collect(exec) {
+        case s: SortExec if (s.sortOrder.head.child match {
+          case a: Attribute => a.name == "user_id"
+          case _ => false
+        }) => s
+      }
+      assert(seriesSorts.size == 1, s"$key:\n$exec")
+    }
+  }
+
   test("data_card: one scan, broadcast membership joins, map-side-combined rollup") {
     val p = plan("data_card")
     assert(!p.contains("CartesianProduct"), p)
