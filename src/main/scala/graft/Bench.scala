@@ -1,780 +1,226 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark entrypoint. Prints TWO stdout lines:
+import com.fasterxml.jackson.databind.{ObjectMapper, PropertyNamingStrategies}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.queries.{MemoTrace, Registry}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{avg, col}
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
+
+/** Benchmark entrypoint: times every registry key at `SPARK_GRAFT_SF_DIR`
+  * on `local[SPARK_GRAFT_CPUS]`, or only the keys named in the optional
+  * argument (comma-separated; an unknown name fails before the session
+  * starts).
   *
-  *  1. a diagnostic JSON line — per-query sample lists (all attempts,
-  *     run order, rounded to ms for stdout compactness), per-sample
-  *     system load averages, and per-family subtotals;
-  *  2. the headline JSON line (LAST, so a parser taking the final stdout
-  *     line gets valid JSON): total, per-query best-of-samples seconds
-  *     rounded to 2 decimals, failed list, load summary, re-passed
-  *     queries, sf.
+  *   SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.Bench [q1,q2]"
   *
-  * The consumer of this output keeps only the TAIL of stdout (~2000
-  * chars), so the headline is deliberately compact (83 queries at full
-  * double precision is ~3× that window) and ordered so the aggregate
-  * fields trail the line; the diagnostic line puts families LAST for the
-  * same reason. Everything, uncompacted, also lands in `bench_full.json`
-  * in the working directory. build.sbt sets `showSuccess := false` so
-  * sbt's "[success] Total time" trailer cannot displace the headline as
-  * the final line.
+  * Protocol, per key: one COLD sample, then [[WarmSamples]] WARM samples,
+  * each timed around `fn(spark, sfDir).count()`. Keys run in family order,
+  * alphabetical within a family, and the cache is cleared after each
+  * family, so the cold sample pays what the key needs first: a shared memo
+  * build or re-persist, new plan shapes. `sec` is the fastest warm sample
+  * and `sec_cold` the cold one; cold and warm are reported as separate
+  * numbers, as Shark does. Nothing is re-selected: the load average before
+  * each sample and each sample's MemoTrace build events are recorded so a
+  * reader can attribute a delta from the artifact alone.
   *
-  * LOAD AWARENESS: three consecutive rounds needed manual adjudication
-  * of co-tenant box load (r12: 83.5 s reported vs 40.7 s measured idle
-  * on identical code). Two mechanisms make the artifact self-attributing:
-  *
-  *  - the 1-minute system load average is recorded immediately before
-  *    every sample ("loads" maps, parallel to "samples"; summary
-  *    min/max/mean in the headline), so a reader can see load ramp in
-  *    and out of the run without re-running anything;
-  *  - an end-of-run RE-PASS: any successful query whose best time
-  *    exceeds 3× its value in the previous round's artifact (highest-N
-  *    `BENCH_r*.json` in the working directory) is re-sampled once
-  *    after the main sweep. Load spikes are transient — the re-pass
-  *    lands after they decay, exactly as an idle-box re-run would. The
-  *    min of old and re-passed samples is the reported time, and the
-  *    headline's "repassed" list names every query that got one, so a
-  *    residual 3× outlier there is a real regression, not noise;
-  *  - a LOAD-GATED re-pass: the two mechanisms above both failed in a
-  *    round where the ENTIRE run sat under co-tenant load (recorded
-  *    mean 5.6) — min-of-3 can't help when all three samples are
-  *    loaded, and the vs-previous re-pass keys on within-run variance
-  *    that uniform load doesn't produce. A reported min is only
-  *    trusted if at least one successful sample was taken while the
-  *    1-minute load average sat at or below ~cpus/8; every query
-  *    without such a sample is re-sampled after the sweep (slowest
-  *    first, short decay sleeps between tries, bounded per-query tries
-  *    and global wall-clock budget). The headline's
-  *    "load_gated_repassed" lists every query the gate re-sampled, so
-  *    a reader can see which minima are load-validated. A below-gate
-  *    sample that comes back SLOWER than a loaded one also terminates
-  *    the loop: it proves the loaded min wasn't inflated.
-  *  - BEST-SAMPLE LOAD ATTRIBUTION: every reported min carries the
-  *    1-min load its winning sample ran under (bench_full.json
-  *    "queries" objects: sec / best_load / below_gate), and the
-  *    headline's "over_gate" names every query whose min stayed
-  *    above-gate after the retry budget — each of the minima is
-  *    load-validated or explicitly flagged, never silently loaded.
-  *  - BELOW-GATE HEADLINE RULE (r18): the reported `sec` is the best
-  *    below-gate successful sample when one exists — a minimum recorded
-  *    under load stays in the samples array but never becomes the
-  *    headline number (r17's data_card_incremental shipped a min taken
-  *    at load 9.2; per the artifact's own trust rules that number was
-  *    unusable for regression tracking). Every reported sec therefore
-  *    has below_gate=true or the key sits in over_gate.
-  *  - MEMO-BUILD ATTRIBUTION (r18): ~15 expensive relations (LSH pair
-  *    lists, unigram counts, IVF indexes, image/video pipelines) are
-  *    session-memoized and shared across consumers; their build cost
-  *    lands on whichever query runs first — and after each
-  *    between-family cache clear, on whichever triggers the lazy
-  *    re-persist. Every memoized builder reports build/re-persist
-  *    events to [[graft.queries.MemoTrace]]; Bench drains the trace
-  *    around each sample and stamps the WINNING sample's events into
-  *    bench_full.json ("memo_build" flag + "builds" labels per query,
-  *    raw per-sample events under "builds", headline list
-  *    "memo_built"). A ≥1.5× round-over-round delta with
-  *    memo_build=true is attribution drift, not a regression — the r17
-  *    adjudication that previously needed a manual diff of the round's
-  *    code changes.
-  *  - MEMO-BUILD RE-PASS + raw_min (r18): a key whose only below-gate
-  *    samples paid a shared build gets one extra warm attempt after the
-  *    sweeps (so the trusted number can be steady-state, not
-  *    build-inclusive), and every bench_full query object carries
-  *    `raw_min` — the plain fastest successful sample — as the reader's
-  *    lower bound alongside the conservatively-chosen `sec`.
-  *  - HARNESS SPLIT (r18): Registry.harnessKeys tags eval-harness
-  *    queries (recall/precision/accuracy locks, sweeps, audits);
-  *    bench_full carries per-query "harness" flags, "families_op"
-  *    (family totals excluding harnesses) and "harness_total", so the
-  *    operator-vs-measurement cost split is readable from the artifact.
-  *  - WARM-THEN-MEASURE + ≤2×RAW_MIN ELIGIBILITY (r22, closing VERDICT
-  *    r21 "What's wrong #1"): post-sweep re-pass samples run CACHE-COLD
-  *    (the between-family clearCache dropped every memo), so the first
-  *    below-gate success was routinely 10-35× the key's own warm
-  *    minimum — and the below-gate headline rule then shipped it
-  *    (r21: bm25_topk 16.37 s reported vs raw_min 0.47 s). Two fixes:
-  *    (a) a re-pass sample that lands below-gate but above 2× the
-  *    key's fastest success is followed by ONE immediate extra sample —
-  *    the cold pass just warmed the caches, the second sample measures
-  *    the operator; (b) a below-gate candidate is only ELIGIBLE to be
-  *    the headline when it is ≤ 2× the key's raw_min — otherwise the
-  *    raw minimum (taken under load: an UPPER bound on the quiet time,
-  *    since load only inflates) is reported and the key is flagged in
-  *    "sec_from_raw". Every headline sec is therefore within 2× of its
-  *    raw_min or explicitly flagged.
-  *  - ALWAYS-FRESH HEADLINE (r22, VERDICT r21 "What's wrong #2"): the
-  *    quiet-minimum substitution below only applies LAP-FRESH quiet
-  *    samples; carried cross-lap minima are recorded as per-key
-  *    "quiet_best" side fields in bench_full.json (and still roll
-  *    forward in bench_quiet.json) but never replace a headline sec —
-  *    the headline total is always this lap's own measurement.
-  *  - COMPACT HEADLINE (r22, VERDICT r21 "What's wrong #3"): the
-  *    consumer's stdout tail window is finite and 258 keys brush it;
-  *    the large name lists (repassed / load_gated_repassed /
-  *    memo_built / cache_evicted) now live on the DIAGNOSTIC line only,
-  *    with counts (n_*) in the headline — failed / over_gate /
-  *    sec_from_quiet / sec_from_raw stay as lists (normally empty).
-  *  - CROSS-LAP QUIET-BEST (r20): a rolling per-key minimum over
-  *    samples taken at 1-min load ≤ 2.5, carried between laps in
-  *    `bench_quiet.json` STAMPED WITH (source-tree content hash, sf
-  *    dir, cpu count) — the hash covers src/main/scala + build.sbt, so
-  *    ANY code edit (committed or not) resets the carry, while
-  *    artifact-only commits (bench_full.json itself is tracked) keep
-  *    it valid; minima are never carried across scales/parallelism and
-  *    never overwritten from an unresolvable source state, so a
-  *    carried number can never mask a real regression or substitute a
-  *    different scale's timing.
-  *    When a lap's winning sample ran above 2.5 the quiet minimum
-  *    becomes the headline `sec`; "sec_from_quiet" (headline +
-  *    per-query flags) names every substitution. This closes the last
-  *    adjudication gap: r19 shipped five keys at 4-5× their quiet
-  *    numbers as below_gate headlines (all capture samples at load
-  *    3.1-3.9 under the 4.0 gate) and proving them environmental took
-  *    git archaeology; now the artifact carries the evidence itself.
-  *  - RECALLS BY SF (r20): the "recalls" summaries (mean recall of
-  *    every ann_recall* key, split by variant) are also emitted at all
-  *    three scales under "recalls_by_sf", so index-quality-vs-scale
-  *    drift (flat graph/IVF vs decaying) is visible from the JSON
-  *    alone, round over round.
+  * Outputs:
+  *  - `bench_full.json` in the working directory. Per key: `sec`,
+  *    `sec_cold`, `samples`, `loads`, `builds`, `evictions` (RDD blocks
+  *    dropped during each sample), the Spark `jobs`, `stages`, `tasks` and
+  *    `job_sites` of the last warm sample, the `harness` flag, and the
+  *    exception class and message of each failed sample (`errors`). Plus
+  *    family totals with and without the eval-harness keys and the mean
+  *    recall of every ann_recall* key at each sibling scale.
+  *  - the headline, the LAST stdout line: a consumer keeps only the tail
+  *    of stdout, so it holds just `metric`, `unit`, `queries` (per-key
+  *    `sec` to 2 decimals), `failed`, `sf` and `value` (the total), and
+  *    build.sbt sets `showSuccess := false` so sbt's trailer cannot follow
+  *    it. A key with any failed sample is in `failed` and reports a
+  *    negative time.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  val WarmSamples = 2
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+    .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+
+  /** A Spark job: its stage and task counts at submission, and its job
+    * description, else its call site, else its result stage's name.
+    */
+  private final case class Job(stages: Int, tasks: Int, site: String)
+
+  private final case class Sample(sec: Double, load: Double, builds: Seq[String],
+                          evictions: Long, jobs: Seq[Job], error: Option[Throwable])
+
+  final case class Failure(sample: Int, exception: String, message: String)
+
+  /** One key's object in bench_full.json. */
+  final case class KeyReport(sec: Double, secCold: Double, samples: Seq[Double],
+      loads: Seq[Double], builds: Seq[Seq[String]], evictions: Seq[Long],
+      jobs: Int, stages: Int, tasks: Int, jobSites: Seq[String],
+      harness: Boolean, errors: Seq[Failure])
+
+  /** Records every job start and counts RDD-block evictions until taken.
+    * Samples run one at a time and the listener bus is drained before and
+    * after each, so what is taken after a sample is exactly that sample's,
+    * including jobs the query submits from its own threads. (A local
+    * property set around the sample would miss those: a pool thread keeps
+    * the property of the sample that created it, and 22 of
+    * ann_recall_kmeans's 25 warm jobs carried its cold sample's tag.)
+    */
+  private final class Profile extends SparkListener {
+    private var jobs = Vector.empty[Job]
+    private var evicted = 0L
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      val site = prop("spark.job.description").orElse(prop("callSite.short"))
+        .getOrElse(e.stageInfos.maxBy(_.stageId).name)
+      val job = Job(e.stageInfos.size, e.stageInfos.map(_.numTasks).sum, site)
+      synchronized { jobs :+= job }
+    }
+
+    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+      val info = e.blockUpdatedInfo
+      if (info.blockId.isRDD && !info.storageLevel.isValid) synchronized { evicted += 1 }
+    }
+
+    def take(): (Seq[Job], Long) = synchronized {
+      val taken = (jobs, evicted)
+      jobs = Vector.empty
+      evicted = 0
+      taken
+    }
+  }
+
+  private def sample(spark: SparkSession, sfDir: String, fn: Query, profile: Profile): Sample = {
+    val sc = spark.sparkContext
+    GraftBus.drain(sc) // earlier work's events must not land in this sample
+    profile.take()
+    MemoTrace.drain()
+    val load = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .getSystemLoadAverage
+    val t0 = System.nanoTime()
+    val error = try { fn(spark, sfDir).count(); None } catch { case e: Throwable => Some(e) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    GraftBus.drain(sc)
+    val (jobs, evicted) = profile.take()
+    Sample(if (error.isEmpty) sec else -sec, load, MemoTrace.drain(), evicted, jobs, error)
+  }
+
+  private def measure(spark: SparkSession, sfDir: String, name: String, fn: Query,
+                      profile: Profile): KeyReport = {
+    val ss = (0 to WarmSamples).map(_ => sample(spark, sfDir, fn, profile))
+    val secs = ss.map(_.sec)
+    val errors = ss.zipWithIndex.flatMap { case (s, i) =>
+      s.error.map(e => Failure(i, e.getClass.getName, e.getMessage))
+    }
+    val jobs = ss.last.jobs
+    KeyReport(
+      // a failed sample is negative, so a failed key reports a negative time
+      sec = if (errors.isEmpty) secs.tail.min else secs.min,
+      secCold = secs.head, samples = secs, loads = ss.map(_.load),
+      builds = ss.map(_.builds), evictions = ss.map(_.evictions),
+      jobs = jobs.size, stages = jobs.map(_.stages).sum, tasks = jobs.map(_.tasks).sum,
+      jobSites = jobs.map(_.site), harness = Registry.harnessKeys(name), errors = errors)
+  }
+
+  /** Mean recall of every ann_recall* key at `dir`, split by the variant
+    * column when the key has one. Runs after the timed samples, on warm
+    * memos; a key that fails is left out.
+    */
+  private def recalls(spark: SparkSession, dir: String,
+                      keys: Seq[(String, Query)]): ListMap[String, Double] =
+    ListMap(keys.filter(_._1.startsWith("ann_recall")).sortBy(_._1).flatMap {
+      case (name, fn) =>
+        try {
+          val df = fn(spark, dir)
+          Seq("n_probe", "method", "quantizer", "dims").find(df.columns.contains) match {
+            case Some(v) => df.groupBy(col(v)).agg(avg(col("recall"))).collect().toSeq
+              .map(r => s"$name:${r.get(0)}" -> r.getDouble(1))
+            case None => Seq(name -> df.agg(avg(col("recall"))).head().getDouble(0))
+          }
+        } catch { case NonFatal(_) => Nil }
+    }: _*)
+
+  /** Measures `families` in order and returns the bench_full.json text and
+    * the headline line.
+    */
+  def lap(spark: SparkSession, sfDir: String,
+          families: Seq[(String, Seq[(String, Query)])]): (String, String) = {
+    val profile = new Profile
+    spark.sparkContext.addSparkListener(profile)
+    val measured = try families.map { case (family, keys) =>
+      val reports = keys.map { case (name, fn) => name -> measure(spark, sfDir, name, fn, profile) }
+      spark.catalog.clearCache()
+      family -> reports
+    } finally spark.sparkContext.removeSparkListener(profile)
+
+    val reports = measured.flatMap(_._2)
+    def total(ks: Seq[(String, KeyReport)]) = ks.map(k => math.max(k._2.sec, 0.0)).sum
+    val failed = reports.collect { case (name, r) if r.errors.nonEmpty => name }
+    val keys = families.flatMap(_._2)
+    val here = recalls(spark, sfDir, keys)
+    val sfPath = Paths.get(sfDir).toAbsolutePath
+    val recallsBySf = ListMap(Seq("sf0.001", "sf0.01", "sf0.1").flatMap { sub =>
+      Option(sfPath.getParent).map(_.resolve(sub)).filter(Files.isDirectory(_)).map { dir =>
+        sub -> (if (Files.isSameFile(dir, sfPath)) here else recalls(spark, dir.toString, keys))
+      }
+    }: _*)
+    val full = ListMap(
+      "metric" -> "total", "unit" -> "sec", "value" -> total(reports), "sf" -> sfDir,
+      "failed" -> failed,
+      "families" -> ListMap(measured.map { case (f, ks) => f -> total(ks) }: _*),
+      "families_op" -> ListMap(measured.map { case (f, ks) => f -> total(ks.filterNot(_._2.harness)) }: _*),
+      "harness_total" -> total(reports.filter(_._2.harness)),
+      "recalls" -> here, "recalls_by_sf" -> recallsBySf,
+      "queries" -> ListMap(reports: _*))
+    // a failure rounded to 2 decimals must stay visibly negative
+    def r2(v: Double) = { val r = math.rint(v * 100) / 100; if (v < 0) math.min(r, -0.01) else r }
+    val sf: Any = "sf([0-9]+(?:\\.[0-9]+)?)/?$".r.findFirstMatchIn(sfDir)
+      .map(_.group(1).toDouble).getOrElse("unknown")
+    val headline = ListMap(
+      "metric" -> "total", "unit" -> "sec",
+      "queries" -> ListMap(reports.map { case (n, r) => n -> r2(r.sec) }: _*),
+      "failed" -> failed, "sf" -> sf,
+      "value" -> math.rint(total(reports) * 1000) / 1000)
+    (mapper.writeValueAsString(full), mapper.writeValueAsString(headline))
+  }
+
   def main(args: Array[String]): Unit = {
+    val only = args.headOption.map(_.split(",").toSet)
+    only.foreach { o =>
+      val unknown = o -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm up the session (codegen compiler, parquet footer reads, shuffle
-    // machinery) so the first measured query isn't charged ~3s of JVM init.
-    // EVERY table is touched — r3/r4 warmed only lineitem, so the first
-    // documents/embeddings query paid footer+dictionary costs and read as a
-    // spurious multi-second regression whenever query order shifted.
+    // Warm up the codegen compiler, the shuffle machinery and EVERY
+    // table's footer, so the first key that reads a table is not charged
+    // seconds of JVM and footer start-up.
     spark.range(1000000).selectExpr("sum(id)").collect()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).collect()
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case NonFatal(_) => () }
     }
-    // 1-minute system load average, read immediately before each sample.
-    // getSystemLoadAverage returns -1.0 where unsupported; /proc/loadavg is
-    // the fallback, and -1.0 stands for "unknown" in the artifact.
-    def loadAvg(): Double = {
-      val mx = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      if (mx >= 0) mx
-      else try {
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-          .split("\\s+")(0).toDouble
-      } catch { case _: Throwable => -1.0 }
-    }
-    // Deterministic execution order (family order, alphabetical within) —
-    // a HashMap walk reorders everything whenever a query is added, which
-    // moves cold-cache costs between queries and breaks round-over-round
-    // comparability. Cache is cleared between families so one family's
-    // persisted intermediates (e.g. the dedup shingle index) can't skew
-    // another's numbers.
-    val perQuery = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // both raw samples per query (run order), so a loaded box is visible
-    // from the artifact alone: min(successful samples) is the headline, and
-    // a large spread between the two runs IS the load diagnosis that
-    // previously required an idle-box re-run
-    val perQuerySamples = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val perQueryLoads = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // per-sample shared-relation build events (MemoTrace): which memoized
-    // builds/re-persists the sample paid for. The winning sample's flag
-    // lands in bench_full.json so a reader can tell a real regression
-    // from "this run happened to be charged the shared build" (the r17
-    // attribution gap: 8 keys regressed ≥1.5× with zero code change).
-    val perQueryBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Seq[String]]]
-    // CACHE-EVICTION ATTRIBUTION (r19, closing the r18 gap): a persisted
-    // memo whose blocks are evicted under memory pressure recomputes
-    // partitions SILENTLY inside the consuming query — no MemoTrace
-    // build event fires, and the r18 artifact could not adjudicate the
-    // resulting 7-11× outliers (pipeline_curate_full 7.46 s vs 0.99 s
-    // quiet-box, memo_build=false, below_gate=true). Two signals make it
-    // decidable from the JSON: (a) the pre-sample CACHED FRACTION — the
-    // minimum numCachedPartitions/numPartitions across live persisted
-    // RDDs, < 1.0 means the sample starts by recomputing evicted blocks;
-    // (b) an RDD-block EVICTION COUNTER (SparkListener onBlockUpdated
-    // with an invalid storage level) drained around each sample —
-    // evictions DURING the sample mean mid-query recompute pressure.
-    // Listener events post asynchronously, so a burst settling after a
-    // sample ends is charged to the next one — ±1-sample precision,
-    // enough to adjudicate a multi-second delta.
-    val evictionCount = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onBlockUpdated(
-          ev: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit = {
-        val info = ev.blockUpdatedInfo
-        if (info.blockId.isRDD && !info.storageLevel.isValid)
-          evictionCount.incrementAndGet()
+    val families = Registry.families
+      .map { case (f, ks) =>
+        f -> ks.filter(k => only.forall(_(k))).map(k => k -> SparkEntry.queries(k))
       }
-    })
-    def cachedFrac(): Double = {
-      val fracs = spark.sparkContext.getRDDStorageInfo
-        .filter(_.numPartitions > 0)
-        .map(i => i.numCachedPartitions.toDouble / i.numPartitions)
-      if (fracs.isEmpty) 1.0 else fracs.min
-    }
-    val perQueryFracs = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val perQueryEvicts = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
-    // a query whose EVERY attempt throws must not read as a fast success:
-    // its best time is negated and its name listed under "failed". A
-    // per-attempt failure negates only THAT attempt's sample, so a
-    // succeed-then-throw query still reports its one real measurement.
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    def sampleOf(name: String): Double = {
-      val fn = SparkEntry.queries(name)
-      perQueryLoads(name) = perQueryLoads.getOrElse(name, Seq.empty) :+ loadAvg()
-      perQueryFracs(name) = perQueryFracs.getOrElse(name, Seq.empty) :+ cachedFrac()
-      val ev0 = evictionCount.get()
-      graft.queries.MemoTrace.drain() // discard events from outside the sample
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      perQueryBuilds(name) =
-        perQueryBuilds.getOrElse(name, Seq.empty) :+ graft.queries.MemoTrace.drain()
-      perQueryEvicts(name) =
-        perQueryEvicts.getOrElse(name, Seq.empty) :+ (evictionCount.get() - ev0)
-      if (ok) elapsed else -elapsed
-    }
-    graft.queries.Registry.families.foreach { case (_, keys) =>
-      keys.foreach { name =>
-        // min-of-2: a single timing is hostage to whatever else the box is
-        // doing (two rounds running, driver artifacts mis-read load spikes
-        // as 3x regressions on unchanged code). The min of two back-to-back
-        // runs discards a one-off stall; it also measures the steady state
-        // the memoized pipelines (dedup LSH) are designed for.
-        val base = (0 until 2).map(_ => sampleOf(name))
-        // expensive queries get a THIRD sample: with 3-4x per-query swings
-        // observed on unchanged code between rounds, min-of-2 still lets a
-        // loaded box double a multi-second query's best time, and those
-        // few queries dominate the headline total. The 0.4s floor bounds
-        // the extra wall clock to the ~dozen queries where noise actually
-        // moves the total.
-        val good2 = base.filter(_ > 0)
-        val samples = if (good2.nonEmpty && good2.min >= 0.4) base :+ sampleOf(name) else base
-        val good = samples.filter(_ > 0)
-        perQuery(name) = if (good.nonEmpty) good.min else samples.min
-        if (good.isEmpty) failed += name
-        perQuerySamples(name) = samples
-      }
-      spark.catalog.clearCache()
-    }
-    // ---- end-of-run re-pass of vs-previous-round outliers ----
-    // Baseline: per-query times regex-scraped from the highest-numbered
-    // BENCH_r*.json in the working directory (the driver's capture of a
-    // previous run's stdout tail — possibly truncated mid-line, hence
-    // pair-wise scraping rather than JSON parsing). Keys are restricted
-    // to known query names so aggregate fields ("value", "sf") and load
-    // numbers can't masquerade as baselines.
-    val prevTimes: Map[String, Double] = {
-      try {
-        val dir = java.nio.file.Paths.get(".")
-        val rx = "^BENCH_r(\\d+)\\.json$".r
-        val files = java.nio.file.Files.list(dir).toArray.toSeq
-          .map(_.toString.stripPrefix("./"))
-          .flatMap(f => rx.findFirstMatchIn(f).map(m => (m.group(1).toInt, f)))
-        if (files.isEmpty) Map.empty[String, Double]
-        else {
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(files.maxBy(_._1)._2)), "UTF-8")
-          val pair = "\"([A-Za-z0-9_]+)\":(-?[0-9]+(?:\\.[0-9]+)?)".r
-          pair.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter { case (k, v) => perQuery.contains(k) && v > 0 }
-            .toMap
-        }
-      } catch { case _: Throwable => Map.empty[String, Double] }
-    }
-    // A 0.05 s floor keeps sub-centisecond queries (where 3× is scheduler
-    // jitter, not load) out of the re-pass; one extra sample per outlier,
-    // taken after the sweep so transient co-tenant load has decayed. Cold
-    // caches (family-memoized indexes were cleared) can leave a re-pass
-    // sample above the warm best — min() keeps whichever is better and the
-    // "repassed" list flags the query for the reader either way.
-    val repassed = scala.collection.mutable.ListBuffer.empty[String]
-    perQuery.keys.toSeq.foreach { name =>
-      val cur = perQuery(name)
-      prevTimes.get(name).foreach { prev =>
-        if (cur > 0 && cur > 3.0 * math.max(prev, 0.05)) {
-          val s = sampleOf(name)
-          repassed += name
-          perQuerySamples(name) = perQuerySamples(name) :+ s
-          if (s > 0 && s < cur) perQuery(name) = s
-        }
-      }
-    }
-    // ---- load-gated re-pass ----
-    // Trust contract: a query's reported min must be backed by at least one
-    // successful sample whose pre-sample 1-min load was at or below the
-    // gate. Queries are processed slowest-first so the minima that dominate
-    // the headline total get the retry budget; a brief sleep between tries
-    // lets the 1-minute average decay when the co-tenant burst has already
-    // ended. If the box stays saturated for the whole budget the artifact
-    // still records that fact (per-sample loads + the load summary).
-    val loadGate = math.max(2.0, Runtime.getRuntime.availableProcessors() / 8.0)
-    def hasGatedSample(name: String): Boolean =
-      perQuerySamples(name).zip(perQueryLoads(name)).exists {
-        case (s, l) => s > 0 && l >= 0 && l <= loadGate
-      }
-    def rawMinOf(name: String): Double = {
-      val good = perQuerySamples(name).filter(_ > 0)
-      if (good.isEmpty) Double.MaxValue else good.min
-    }
-    def sampleInto(name: String): Double = {
-      val s = sampleOf(name)
-      perQuerySamples(name) = perQuerySamples(name) :+ s
-      if (s > 0 && s < perQuery(name)) perQuery(name) = s
-      s
-    }
-    // WARM-THEN-MEASURE (r22): post-sweep samples run cache-cold (the
-    // between-family clearCache dropped every memo), so the first
-    // below-gate success is routinely many× the key's warm minimum.
-    // When a below-gate sample lands above 2× the fastest success so
-    // far, sample once more immediately — the cold pass warmed the
-    // caches; the second sample measures the operator, not the rebuild.
-    def sampleWarmedInto(name: String): Unit = {
-      val before = rawMinOf(name)
-      val s = sampleInto(name)
-      val l = perQueryLoads(name).last
-      if (s > 0 && l >= 0 && l <= loadGate &&
-          before < Double.MaxValue && s > 2.0 * before) {
-        sampleInto(name)
-        ()
-      }
-    }
-    val loadRepassed = scala.collection.mutable.ListBuffer.empty[String]
-    val gateT0 = System.nanoTime()
-    def gateBudgetLeft: Boolean = (System.nanoTime() - gateT0) / 1e9 < 150.0
-    perQuery.toSeq.filter(_._2 > 0).sortBy(-_._2).map(_._1).zipWithIndex.foreach {
-      case (name, rank) =>
-      // the few slowest queries dominate the headline total AND are the
-      // ones a loaded min distorts most — give them extra retry headroom
-      val maxTries = if (rank < 5) 5 else 3
-      var tries = 0
-      var fired = false
-      while (!hasGatedSample(name) && tries < maxTries && gateBudgetLeft) {
-        if (tries > 0 && loadAvg() > loadGate) Thread.sleep(3000)
-        sampleWarmedInto(name)
-        tries += 1
-        fired = true
-      }
-      if (fired) loadRepassed += name
-    }
-    // ---- final over_gate sweep ----
-    // r16 shipped with two over_gate survivors: the 150 s first-pass
-    // budget ran out while the box was still loaded, and the 3 s decay
-    // sleep is too short for a 1-minute average to fall. This dedicated
-    // second sweep exists solely to empty over_gate: its own wall-clock
-    // budget, more tries, and a real decay wait (5 s chunks while the
-    // load sits above the gate, up to 30 s per try) — the pattern of
-    // waiting out a co-tenant burst instead of sampling into it. If the
-    // box never decays inside the budget the artifact still records the
-    // honest over_gate list.
-    val sweepT0 = System.nanoTime()
-    def sweepBudgetLeft: Boolean = (System.nanoTime() - sweepT0) / 1e9 < 180.0
-    perQuery.toSeq.filter { case (n, t) => t > 0 && !hasGatedSample(n) }
-      .sortBy(-_._2).map(_._1).foreach { name =>
-        var tries = 0
-        while (!hasGatedSample(name) && tries < 8 && sweepBudgetLeft) {
-          var waited = 0
-          while (loadAvg() > loadGate && waited < 30 && sweepBudgetLeft) {
-            Thread.sleep(5000); waited += 5
-          }
-          sampleWarmedInto(name)
-          tries += 1
-          if (!loadRepassed.contains(name)) loadRepassed += name
-        }
-      }
-    // ---- memo-build re-pass ----
-    // A key whose ONLY below-gate successful samples paid a shared
-    // memo build/re-persist would report a build-inclusive number even
-    // though its steady state is warm (the build landed on the one
-    // trusted sample; the warm samples ran under load). One extra
-    // attempt per such key — memo now warm, short decay waits like the
-    // over_gate sweep — captures a build-free below-gate sample when
-    // the box cooperates; if it stays loaded, the build-flagged number
-    // stands and memo_build explains it.
-    val memoT0 = System.nanoTime()
-    def memoBudgetLeft: Boolean = (System.nanoTime() - memoT0) / 1e9 < 90.0
-    def gatedCleanSample(name: String): Boolean =
-      perQuerySamples(name).lazyZip(perQueryLoads(name)).lazyZip(perQueryBuilds(name))
-        .exists { case (s, l, b) => s > 0 && l >= 0 && l <= loadGate && b.isEmpty }
-    // ...but only for keys where a build-free sample is POSSIBLE: a key
-    // that fired a build on EVERY sample pays that cost inherently
-    // (e.g. the per-call small-graph clusterLabels resolution) — no
-    // number of retries produces a clean sample, so don't burn budget
-    def anyCleanSample(name: String): Boolean =
-      perQuerySamples(name).lazyZip(perQueryBuilds(name))
-        .exists { case (s, b) => s > 0 && b.isEmpty }
-    perQuery.toSeq.filter { case (n, t) =>
-        t > 0 && hasGatedSample(n) && !gatedCleanSample(n) && anyCleanSample(n)
-      }.sortBy(-_._2).map(_._1).foreach { name =>
-        var tries = 0
-        while (!gatedCleanSample(name) && tries < 3 && memoBudgetLeft) {
-          var waited = 0
-          while (loadAvg() > loadGate && waited < 15 && memoBudgetLeft) {
-            Thread.sleep(5000); waited += 5
-          }
-          sampleInto(name)
-          tries += 1
-        }
-      }
-    // ---- reported-minimum selection + best-sample attribution ----
-    // Trust rule (r18, closing VERDICT r17's "bench trust, last mile"):
-    // the reported `sec` is the best BELOW-GATE successful sample when
-    // one exists — a minimum recorded under load stays in the samples
-    // array but is never the headline number, so every reported sec in
-    // bench_full.json carries below_gate:true or the query is honestly
-    // in over_gate (no below-gate success at all; only then does the
-    // raw minimum stand, flagged). For each query the winning sample's
-    // pre-sample load AND its MemoTrace build events are attributed
-    // first-class: memo_build=true says the number includes a shared-
-    // relation build/re-persist and is expected to exceed the
-    // steady-state cost other rounds may have recorded.
-    val bestLoad = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val bestBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val bestFrac = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val bestEvict = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    final case class Rec(sec: Double, load: Double, builds: Seq[String],
-                         frac: Double, evicts: Long) {
-      def cleanCache: Boolean = frac >= 1.0 && evicts == 0
-    }
-    val secFromRaw = scala.collection.mutable.ListBuffer.empty[String]
-    perQuery.keys.toSeq.foreach { name =>
-      val n = perQuerySamples(name).size
-      val recs = (0 until n).map(i => Rec(perQuerySamples(name)(i),
-        perQueryLoads(name)(i), perQueryBuilds(name)(i),
-        perQueryFracs(name)(i), perQueryEvicts(name)(i)))
-      val gatedGood = recs.filter(r => r.sec > 0 && r.load >= 0 && r.load <= loadGate)
-      // preference order (r19): below-gate AND eviction-free samples
-      // first — a sample that started with partially-evicted memos or
-      // saw evictions mid-query measured recompute, not the operator;
-      // it stays in the samples array but loses headline eligibility
-      // whenever a clean alternative exists
-      val gatedClean = gatedGood.filter(_.cleanCache)
-      val good = recs.filter(_.sec > 0)
-      // ≤2×RAW_MIN ELIGIBILITY (r22, VERDICT r21 "What's wrong #1"): a
-      // below-gate candidate may only become the headline when it is
-      // within 2× of the key's fastest successful sample — otherwise
-      // the below-gate sample measured a cache-cold rebuild, not the
-      // operator (r21 shipped bm25_topk at 16.37 s vs raw_min 0.47 s).
-      // When every below-gate sample is ineligible the raw minimum
-      // stands (taken under load, i.e. an UPPER bound on the quiet
-      // time) and the key is flagged in sec_from_raw.
-      val rawMin = if (good.nonEmpty) good.map(_.sec).min else Double.MaxValue
-      def eligible(rs: Seq[Rec]): Seq[Rec] = rs.filter(_.sec <= 2.0 * rawMin)
-      val pool =
-        if (eligible(gatedClean).nonEmpty) eligible(gatedClean)
-        else if (eligible(gatedGood).nonEmpty) eligible(gatedGood)
-        else if (gatedGood.nonEmpty) {
-          secFromRaw += name
-          good.filter(_.sec == rawMin)
-        }
-        else good
-      if (pool.nonEmpty) {
-        val best = pool.map(_.sec).min
-        // ties: several samples can equal the min — prefer a BUILD-FREE
-        // winner (a build-paying sample must not stamp memo_build onto a
-        // number that also has a clean backing sample), then the lowest
-        // load (indexOf-first would mis-attribute arbitrarily)
-        val winner = pool.filter(_.sec == best)
-          .minBy(r => (r.builds.nonEmpty, r.load))
-        perQuery(name) = best
-        bestLoad(name) = winner.load
-        bestBuilds(name) = winner.builds
-        bestFrac(name) = winner.frac
-        bestEvict(name) = winner.evicts
-      } else {
-        // every attempt failed: keep the negated-minimum convention
-        perQuery(name) = perQuerySamples(name).min
-        bestLoad(name) = -1.0
-        bestBuilds(name) = Seq.empty
-        bestFrac(name) = 1.0
-        bestEvict(name) = 0L
-      }
-    }
-    // ---- cross-lap quiet-best (r20, closing VERDICT r19 "What's
-    // missing #4") ----
-    // Five r19 keys shipped 4-5x their quiet numbers as below_gate
-    // headlines because every capture sample ran at load 3.1-3.9 under
-    // the 4.0 gate; adjudication needed git archaeology against an
-    // earlier lap. The artifact now self-adjudicates: a rolling per-key
-    // QUIET minimum (min over successful samples taken at 1-min load
-    // <= 2.5, across laps AT THE SAME COMMIT — bench_quiet.json carries
-    // it between runs, reset whenever the code version changes) is
-    // recorded per key, and when the current lap's winning sample ran
-    // above 2.5 the carried quiet minimum becomes the headline `sec`
-    // ("sec_from_quiet" flags every substitution, so a reader can tell
-    // a carried number from a fresh one).
-    val quietLoad = 2.5
-    // the carry STAMP: a content hash of the SOURCE tree + sf dir + cpu
-    // count — minima are only comparable between laps of the SAME code
-    // on the SAME scale and parallelism (a sf0.001 minimum must never
-    // substitute an sf0.1 headline, and an edited source tree —
-    // committed or not — must never inherit the pre-edit minima, which
-    // would mask the regression the mechanism exists to expose). A
-    // content hash rather than the git commit: it tracks uncommitted
-    // edits automatically and survives artifact-only commits
-    // (bench_full.json itself is committed between laps).
-    val srcStamp: String = try {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val roots = Seq("src/main/scala", "build.sbt")
-        .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.exists(_))
-      if (roots.isEmpty) "unknown"
-      else {
-        roots.foreach { root =>
-          val files =
-            if (java.nio.file.Files.isDirectory(root)) {
-              import scala.jdk.CollectionConverters._
-              // hash ALL regular files under the root (not only .scala —
-              // a .java or resource edit must reset the carry too), and
-              // CLOSE the walk stream (r21, ADVICE: the unclosed stream
-              // leaked a directory handle per bench run)
-              val walk = java.nio.file.Files.walk(root)
-              try walk.iterator().asScala
-                .filter(java.nio.file.Files.isRegularFile(_))
-                .toSeq.sortBy(_.toString)
-              finally walk.close()
-            } else Seq(root)
-          files.foreach { f =>
-            md.update(f.toString.getBytes("UTF-8"))
-            md.update(java.nio.file.Files.readAllBytes(f))
-          }
-        }
-        md.digest().map("%02x".format(_)).mkString
-      }
-    } catch { case _: Throwable => "unknown" }
-    // dataset fingerprint (r21, ADVICE medium): a changed dataset under
-    // the SAME sf path must reset the carry — a stale carried minimum
-    // measured on different data could mask a real slowdown. size+mtime
-    // of every regular file under the sf dir, cheap and order-stable.
-    val dataStamp: String = try {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(sfDir)
-      if (!java.nio.file.Files.isDirectory(root)) "nodata"
-      else {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val walk = java.nio.file.Files.walk(root)
-        try walk.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .toSeq.sortBy(_.toString)
-          .foreach { f =>
-            md.update(f.toString.getBytes("UTF-8"))
-            md.update(java.nio.file.Files.size(f).toString.getBytes("UTF-8"))
-            md.update(java.nio.file.Files.getLastModifiedTime(f)
-              .toMillis.toString.getBytes("UTF-8"))
-          }
-        finally walk.close()
-        md.digest().map("%02x".format(_)).mkString.take(16)
-      }
-    } catch { case _: Throwable => "nodata" }
-    val quietStamp = s"$srcStamp@$sfDir@data=$dataStamp@cpus=$cpus"
-    val quietFile = java.nio.file.Paths.get("bench_quiet.json")
-    val carriedQuiet: Map[String, Double] = try {
-      if (srcStamp != "unknown" && java.nio.file.Files.exists(quietFile)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(quietFile), "UTF-8")
-        val cm = "\"stamp\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
-        if (cm.contains(quietStamp)) {
-          val pair = "\"([A-Za-z0-9_]+)\":(-?[0-9]+(?:\\.[0-9]+)?(?:[eE]-?[0-9]+)?)".r
-          pair.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter { case (k, v) => perQuery.contains(k) && v > 0 }
-            .toMap
-        } else {
-          // r21 (ADVICE low): a present-but-unusable carry must be
-          // OBSERVABLE, not silently treated as empty — log why the
-          // carry did not apply so a broken stamp chain is debuggable
-          System.err.println(s"[bench] bench_quiet.json stamp mismatch " +
-            s"(have ${cm.getOrElse("<none>")}, want $quietStamp) - carry not applied")
-          Map.empty // code/scale/data/parallelism changed: not comparable
-        }
-      } else Map.empty
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_quiet.json unreadable (${e.getClass.getSimpleName}) - carry not applied")
-      Map.empty
-    }
-    val quietBest = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val lapQuietMin = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    perQuery.keys.toSeq.foreach { name =>
-      val lapQuiet = perQuerySamples(name).zip(perQueryLoads(name))
-        .collect { case (s, l) if s > 0 && l >= 0 && l <= quietLoad => s }
-      if (lapQuiet.nonEmpty) lapQuietMin(name) = lapQuiet.min
-      val cands = lapQuiet ++ carriedQuiet.get(name)
-      if (cands.nonEmpty) quietBest(name) = cands.min
-    }
-    // ALWAYS-FRESH HEADLINE (r22, VERDICT r21 "What's wrong #2"): only
-    // LAP-FRESH quiet samples may replace a loaded reported sec — the
-    // carried cross-lap minimum stays a side field (quiet_best in
-    // bench_full.json) and keeps rolling forward in bench_quiet.json,
-    // but the headline total is always this lap's own measurement.
-    val secFromQuiet = scala.collection.mutable.ListBuffer.empty[String]
-    perQuery.keys.toSeq.foreach { name =>
-      val t = perQuery(name)
-      if (t > 0 && (bestLoad(name) < 0 || bestLoad(name) > quietLoad))
-        lapQuietMin.get(name).filter(_ < t).foreach { qb =>
-          perQuery(name) = qb
-          secFromQuiet += name
-        }
-    }
-    try {
-      // never overwrite accumulated minima from an unresolvable source
-      // state — a transient failure must not destroy the rolling
-      // history the next resolvable lap would have carried
-      if (srcStamp != "unknown") {
-        val body = quietBest
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        java.nio.file.Files.write(quietFile,
-          (s"""{"stamp":"$quietStamp","quiet_best":$body}""" + "\n")
-            .getBytes("UTF-8"))
-      }
-    } catch { case _: Throwable => () }
-    val overGate = perQuery.toSeq
-      .filter { case (name, t) => t > 0 && !hasGatedSample(name) }
-      .map(_._1)
-    val perFamily = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // family totals EXCLUDING eval-harness keys (Registry.harnessKeys):
-    // the operator-vs-measurement split — harness keys (recall locks,
-    // confusion matrices, parameter sweeps) dominate the top-10 and a
-    // 2×-vs-baseline argument should be readable on operator keys alone
-    val perFamilyOp = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val harness = graft.queries.Registry.harnessKeys
-    graft.queries.Registry.families.foreach { case (family, keys) =>
-      perFamily(family) = keys.map(k => math.max(perQuery(k), 0.0)).sum
-      perFamilyOp(family) =
-        keys.filterNot(harness).map(k => math.max(perQuery(k), 0.0)).sum
-    }
-    val harnessTotal = harness.toSeq.map(k => math.max(perQuery(k), 0.0)).sum
-    // ---- recall trend lines ----
-    // mean recall of every ann_recall* harness key, split by the variant
-    // column when one exists (n_probe / method / quantizer / dims) —
-    // index-quality regressions become visible round-over-round from
-    // bench_full.json alone, without re-reading spec floors. Runs after
-    // the sweeps on warm memos; failures degrade to an absent entry.
-    def recallsFor(dir: String): scala.collection.mutable.LinkedHashMap[String, Double] = {
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      perQuery.keys.toSeq.filter(_.startsWith("ann_recall")).sorted.foreach { name =>
-        try {
-          import org.apache.spark.sql.functions.{avg, col}
-          val df = SparkEntry.queries(name)(spark, dir)
-          Seq("n_probe", "method", "quantizer", "dims").find(df.columns.contains) match {
-            case Some(v) =>
-              df.groupBy(col(v)).agg(avg(col("recall")).as("r")).collect()
-                .foreach(row => m(s"$name:${row.get(0)}") = row.getDouble(1))
-            case None =>
-              m(name) = df.agg(avg(col("recall"))).head().getDouble(0)
-          }
-        } catch { case _: Throwable => () }
-      }
-      m
-    }
-    val recalls = recallsFor(sfDir)
-    // ...and the SAME summaries at ALL THREE scales (r20, completing
-    // r18 #8 per VERDICT r19 "Next #3"): one block keyed by sf makes
-    // index-quality-vs-scale drift (flat graph/IVF, decaying whatever)
-    // readable from the JSON alone. Sibling dirs of the bench sf; the
-    // bench dir's own summaries are reused, the other scales' recall
-    // keys run fresh (bounded harness cost, after the timed sweeps).
-    val recallsBySf = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.Map[String, Double]]
-    val sfParent = Option(java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent)
-    Seq("sf0.001", "sf0.01", "sf0.1").foreach { sub =>
-      sfParent.map(_.resolve(sub)).filter(java.nio.file.Files.isDirectory(_))
-        .foreach { dir =>
-          val d = dir.toString
-          recallsBySf(sub) =
-            if (java.nio.file.Files.isSameFile(dir,
-                java.nio.file.Paths.get(sfDir).toAbsolutePath)) recalls
-            else recallsFor(d)
-        }
-    }
-    def r3(v: Double) = math.rint(v * 1000) / 1000
-    // failed queries carry a NEGATED time; a sub-5ms failure must not
-    // round to -0.0 (sign-invisible in the headline map), so rounded
-    // negatives are clamped to at most -0.01
-    def r2(v: Double) = { val r = math.rint(v * 100) / 100; if (v < 0) math.min(r, -0.01) else r }
-    def r1(v: Double) = math.rint(v * 10) / 10
-    def js(m: scala.collection.Map[String, Double], round: Double => Double) =
-      m.map { case (k, v) => s"\"" + k + "\":" + round(v) }.mkString("{", ",", "}")
-    def seqJs(m: scala.collection.Map[String, Seq[Double]], round: Double => Double) = m
-      .map { case (k, vs) => "\"" + k + "\":" + vs.map(round).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = perQuery.values.filter(_ > 0).sum
-    val failedJs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val repassedJs = repassed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val loadRepassedJs = loadRepassed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val allLoads = perQueryLoads.values.flatten.filter(_ >= 0).toSeq
-    val loadSummary =
-      if (allLoads.isEmpty) "{}"
-      else s"""{"min":${r1(allLoads.min)},"max":${r1(allLoads.max)},"mean":${r1(allLoads.sum / allLoads.size)}}"""
-    // a dir not matching sf<number> must not emit invalid JSON (bare `sf.`)
-    // or a silently wrong literal 0 — fall back to a quoted marker
-    val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)/?$".r.findFirstMatchIn(sfDir)
-      .map(_.group(1)).getOrElse("\"unknown\"")
-    // keys whose REPORTED sample paid a shared-relation build/re-persist
-    // — the round-over-round comparability caveat, surfaced by name
-    val memoBuilt = bestBuilds.collect { case (n, bs) if bs.nonEmpty => n }.toSeq
-    val memoBuiltJs = memoBuilt.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // keys whose REPORTED sample started on partially-evicted memos or
-    // saw RDD-block evictions mid-query — the silent-recompute caveat
-    val cacheEvicted = perQuery.keys.toSeq
-      .filter(n => bestFrac(n) < 1.0 || bestEvict(n) > 0)
-    val cacheEvictedJs = cacheEvicted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val recallsBySfJs = recallsBySf
-      .map { case (k, m) => "\"" + k + "\":" + js(m, identity) }
-      .mkString("{", ",", "}")
-    val secFromQuietJs = secFromQuiet.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val secFromRawJs = secFromRaw.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val overGateJs = overGate.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val diagLine =
-      s"""{"samples":${seqJs(perQuerySamples, r3)},"loads":${seqJs(perQueryLoads, r1)},"sf_dir":"$sfDir","repassed":$repassedJs,"load_gated_repassed":$loadRepassedJs,"over_gate":$overGateJs,"sec_from_raw":$secFromRawJs,"sec_from_quiet":$secFromQuietJs,"load_gate":${r1(loadGate)},"load":$loadSummary,"memo_built":$memoBuiltJs,"cache_evicted":$cacheEvictedJs,"recalls":${js(recalls, r3)},"harness_total":${r3(harnessTotal)},"families_op":${js(perFamilyOp, r3)},"families":${js(perFamily, r3)}}"""
-    // COMPACT HEADLINE (r22): the consumer keeps only the stdout TAIL
-    // (~2000 chars); r21's load_gated_repassed list alone was ~2000
-    // chars of names and pushed the aggregates out of the window in
-    // r20. Large name lists live on the diagnostic line (and in
-    // bench_full.json); the headline carries their COUNTS. The lists
-    // that are normally empty — and load-bearing for trust when not —
-    // stay as lists: failed / over_gate / sec_from_raw / sec_from_quiet.
-    val headline =
-      s"""{"metric":"total","unit":"sec","queries":${js(perQuery, r2)},"failed":$failedJs,"over_gate":$overGateJs,"sec_from_raw":$secFromRawJs,"sec_from_quiet":$secFromQuietJs,"n_repassed":${repassed.size},"n_load_gated_repassed":${loadRepassed.size},"n_memo_built":${memoBuilt.size},"n_cache_evicted":${cacheEvicted.size},"load_gate":${r1(loadGate)},"load":$loadSummary,"harness_total":${r3(harnessTotal)},"sf":$sfNum,"value":${r3(total)}}"""
-    // complete full-precision artifact for readers with file access:
-    // per-query OBJECTS — the reported sec, the load its winning sample
-    // ran under, whether that load was at or below the gate, whether the
-    // winning sample paid a memoized shared-relation build (and which),
-    // and the eval-harness flag — plus the raw sample/load/build arrays
-    val queriesFull = perQuery.map { case (name, t) =>
-      val l = bestLoad(name)
-      val gated = t > 0 && l >= 0 && l <= loadGate
-      val builds = bestBuilds(name).map("\"" + _ + "\"").mkString("[", ",", "]")
-      val h = harness.contains(name)
-      // raw_min: the plain fastest successful sample regardless of load
-      // or builds — the reader's lower bound when the trusted `sec` is
-      // a build-inclusive or conservatively-chosen below-gate sample
-      val good = perQuerySamples(name).filter(_ > 0)
-      val rawMin = if (good.nonEmpty) good.min else t
-      val frac = bestFrac(name)
-      val ev = bestEvict(name)
-      // quiet_best: the rolling code-version-stamped quiet minimum;
-      // sec_from_quiet marks a headline that deferred to it
-      val qb = quietBest.get(name).map(v => s",\"quiet_best\":$v").getOrElse("")
-      val sfq = secFromQuiet.contains(name)
-      val sfr = secFromRaw.contains(name)
-      "\"" + name + s"\":{\"sec\":$t,\"raw_min\":$rawMin,\"best_load\":$l,\"below_gate\":$gated,\"memo_build\":${bestBuilds(name).nonEmpty},\"builds\":$builds,\"cached_frac\":$frac,\"evictions\":$ev,\"cache_evicted\":${frac < 1.0 || ev > 0}$qb,\"sec_from_quiet\":$sfq,\"sec_from_raw\":$sfr,\"harness\":$h}"
-    }.mkString("{", ",", "}")
-    val buildsFull = perQueryBuilds
-      .map { case (k, vs) => "\"" + k + "\":" + vs.map(
-        _.map("\"" + _ + "\"").mkString("[", ",", "]")).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$queriesFull,"samples":${seqJs(perQuerySamples, identity)},"loads":${seqJs(perQueryLoads, identity)},"builds":$buildsFull,"cached_frac":${seqJs(perQueryFracs, identity)},"evictions":${seqJs(perQueryEvicts.map { case (k, v) => k -> v.map(_.toDouble) }, identity)},"recalls":${js(recalls, identity)},"recalls_by_sf":$recallsBySfJs,"quiet_stamp":"$srcStamp","quiet_load":$quietLoad,"sec_from_quiet":$secFromQuietJs,"sec_from_raw":$secFromRawJs,"cache_evicted":$cacheEvictedJs,"families":${js(perFamily, identity)},"families_op":${js(perFamilyOp, identity)},"harness_total":$harnessTotal,"failed":$failedJs,"repassed":$repassedJs,"load_gated_repassed":$loadRepassedJs,"over_gate":$overGateJs,"memo_built":$memoBuiltJs,"load_gate":$loadGate,"load":$loadSummary,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
-      (full + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    println(diagLine)
+      .filter(_._2.nonEmpty)
+    val (full, headline) = lap(spark, sfDir, families)
+    Files.writeString(Paths.get("bench_full.json"), full + "\n")
     println(headline)
     spark.stop()
   }

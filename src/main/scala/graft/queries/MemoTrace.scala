@@ -15,10 +15,10 @@ package graft.queries
   * Every memoized builder reports here when a timed run actually paid a
   * build (first construction) or a re-persist (cache was dropped, the
   * next action re-materializes). Bench drains the trace around each
-  * sample and stamps the winning sample's `memo_build` flag into
-  * bench_full.json — a reader can now see that a slow sample paid a
-  * shared build and adjudicate round-over-round deltas from the
-  * artifact alone.
+  * sample and records each sample's events under `builds` in
+  * bench_full.json, so a reader can see which sample (normally the
+  * cold one) paid a shared build and adjudicate round-over-round deltas
+  * from the artifact alone.
   *
   * Thread-safety: a plain synchronized buffer — build events are rare
   * (tens per full bench run) so contention is irrelevant. Not
@@ -46,19 +46,48 @@ private[graft] object MemoTrace {
   }
 }
 
-/** Collision-safe per-dir suffix for memoized catalog-table names.
-  *
-  * The former `Integer.toHexString(dir.hashCode)` was a 32-bit hash of
-  * the data-dir path: two different dirs colliding would silently reuse
-  * each other's persisted base relation and emit wrong merged results
-  * (ADVICE r17). 60 bits of md5 over the full path makes an accidental
-  * collision implausible (~2^-30 at a million dirs) and keeps the
-  * table-name suffix short and catalog-legal.
-  */
+/** Names and stamps for memo keys. */
 private[graft] object MemoNames {
+  /** Collision-safe per-dir suffix for memoized catalog-table names.
+    *
+    * The former `Integer.toHexString(dir.hashCode)` was a 32-bit hash of
+    * the data-dir path: two different dirs colliding would silently reuse
+    * each other's persisted base relation and emit wrong merged results
+    * (ADVICE r17). 60 bits of md5 over the full path makes an accidental
+    * collision implausible (~2^-30 at a million dirs) and keeps the
+    * table-name suffix short and catalog-legal.
+    */
   def dirSuffix(d: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8"))
     md.take(8).map(b => f"$b%02x").mkString.take(15)
+  }
+
+  /** Fingerprint of the data under `dir`: md5 over the path, size and
+    * mtime of every regular file, in path order ("nodata" when `dir` is
+    * not a directory). A memo keyed by dir alone serves stale values
+    * after the dir's tables are rewritten in place; keying it by
+    * (dir, dataStamp(dir)) rebuilds it instead. Cheap next to any Spark
+    * job: a directory walk with no file reads.
+    */
+  def dataStamp(dir: String): String = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.isDirectory(root)) "nodata"
+    else {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .toSeq.sortBy(_.toString)
+        .foreach { f =>
+          md.update(f.toString.getBytes("UTF-8"))
+          md.update(java.nio.file.Files.size(f).toString.getBytes("UTF-8"))
+          md.update(java.nio.file.Files.getLastModifiedTime(f)
+            .toMillis.toString.getBytes("UTF-8"))
+        }
+      finally walk.close()
+      md.digest().map("%02x".format(_)).mkString.take(16)
+    }
   }
 }

@@ -17,10 +17,13 @@ import org.apache.spark.storage.StorageLevel
   * TWO-SESSION SAFETY (the distinction that decides whether a memo needs
   * a catalog guard): memos here hold PLAIN VALUES or DataFrames keyed by
   * (session, dir) — a second session never sees the first's entry, and a
-  * restarted session rebuilds from the parquet dir, so they are safe by
-  * construction. That also covers the dir-keyed VALUE memos elsewhere
-  * (`subwordMemo`, `bpeMemo`: deterministic pure functions of the dir's
-  * data — whichever session computes them, the value is identical).
+  * restarted session rebuilds from the parquet dir, so they are safe
+  * across sessions. They are NOT safe against the dir's tables being
+  * rewritten in place while the session lives: the hit serves the old
+  * data (or a persisted plan over deleted files). VALUE memos that
+  * outlive sessions (`subwordMemo`, `bruteTruthMemo`: pure functions of
+  * the dir's data) are keyed by (dir, `MemoNames.dataStamp(dir)`)
+  * instead, so a rewrite changes the key and rebuilds them.
   * The one genuinely session-COUPLED kind is a memo that records "I
   * already wrote Spark-catalog TABLES for this dir" (the IVF index
   * memos): the table lives in the session catalog, so a memo hit from a

@@ -659,14 +659,15 @@ object SimQueries {
     * ann_recall_kmeans at q<10 — a SUBSET: per-query top-5 is
     * independent of which other queries are in the filter, so slicing
     * q_id < 10 from the q<40 set is identical by construction). Keyed
-    * by dir like subwordMemo — a deterministic pure function of the
-    * dir's data, whichever session computes it.
+    * by (dir, MemoNames.dataStamp(dir)) like subwordMemo — a pure
+    * function of the dir's data, whichever session computes it, that is
+    * rebuilt when the data under the dir is rewritten in place.
     */
   private val bruteTruthMemo =
-    scala.collection.mutable.Map.empty[String, Seq[(Long, Long)]]
+    scala.collection.mutable.Map.empty[(String, String), Seq[(Long, Long)]]
   private def bruteTruth40(s: SparkSession, d: String): Seq[(Long, Long)] =
     bruteTruthMemo.synchronized {
-      bruteTruthMemo.getOrElseUpdate(d, {
+      bruteTruthMemo.getOrElseUpdate((d, MemoNames.dataStamp(d)), {
         MemoTrace.built("bruteTruth40")
         Similarity.bruteForceTopK(emb(s, d), "vec_id", "embedding",
             col("vec_id") < KnnAccQ, KnnAccK)

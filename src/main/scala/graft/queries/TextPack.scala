@@ -306,10 +306,11 @@ object TextPack {
   // codepoints, matching Spark substring/length and DuckDB substr/len;
   // SubwordSpec pins the multilingual fixtures).
   // ========================================================================
-  private val subwordMemo = scala.collection.mutable.Map.empty[String, Set[String]]
+  // keyed by (dir, data stamp): an in-place rewrite of the dir relearns
+  private val subwordMemo = scala.collection.mutable.Map.empty[(String, String), Set[String]]
   private[graft] def subwordVocab(s: SparkSession, d: String): Set[String] =
     subwordMemo.synchronized {
-      subwordMemo.getOrElseUpdate(d, {
+      subwordMemo.getOrElseUpdate((d, MemoNames.dataStamp(d)), {
         MemoTrace.built("subwordVocab")
         // The ≥1%-of-total-mass filter runs CLUSTER-SIDE against the
         // broadcast one-row total, so the driver only ever collects the

@@ -750,7 +750,7 @@ object Similarity {
     // per-hop batches via a broadcast join into the corpus relation
     val cache = scala.collection.mutable.Map.empty[Long, (Array[Double], Double)]
     // §1.5 job labels: the beam loop issues several point-lookup jobs
-    // per search — label them so the UI (and the JobSites dev probe)
+    // per search — label them so the UI (and Bench's job_sites)
     // attributes the scheduler floor to the right round trip
     def labeled[T](desc: String)(body: => T): T = {
       spark.sparkContext.setJobDescription(desc)

@@ -1096,6 +1096,31 @@ class NewQuerySpec extends SparkSpec {
     assert(got.values.map(_._1).sum == pred.size.toLong && got.nonEmpty)
   }
 
+  test("knn_accuracy after an in-place rewrite of embeddings equals a fresh dir with the new data") {
+    // 60 vectors, label = id % 3. First data: one direction per label, so
+    // every neighbour shares the query's label. Second data: one direction
+    // per block of 20 ids, so neighbours carry the other labels.
+    def data(dir: Long => Int) = (0L until 60L).map { id =>
+      val v = Array.fill(4)(0f)
+      v(dir(id)) = 1f
+      v(3) = id * 1e-3f
+      (id, v, (id % 3).toInt)
+    }.toDF("vec_id", "embedding", "label")
+    def write(dir: java.nio.file.Path, df: org.apache.spark.sql.DataFrame): String = {
+      df.write.mode("overwrite").parquet(dir.resolve("embeddings.parquet").toString)
+      dir.toFile.deleteOnExit()
+      dir.toString
+    }
+    def knn(d: String) = graft.SparkEntry.queries("knn_accuracy")(spark, d).collect().toSeq
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rewrite")
+    val first = knn(write(tmp, data(id => (id % 3).toInt)))
+    val second = knn(write(tmp, data(id => (id / 20).toInt)))
+    val fresh = knn(write(java.nio.file.Files.createTempDirectory("graft_fresh"),
+      data(id => (id / 20).toInt)))
+    assert(first != fresh) // the two datasets are told apart
+    assert(second == fresh)
+  }
+
   test("window_funnel equals a driver recompute; horizon only ever removes vs funnel_conversion") {
     val ev = graft.sources.Tables.events(spark, sf)
       .select(col("user_id"), col("event_type"),
