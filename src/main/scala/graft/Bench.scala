@@ -2,7 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.{ObjectMapper, PropertyNamingStrategies}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import graft.queries.{MemoTrace, Registry}
+import graft.queries.{Memo, MemoTrace, Registry}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
@@ -34,8 +34,11 @@ import scala.util.control.NonFatal
   *    dropped during each sample), the Spark `jobs`, `stages`, `tasks` and
   *    `job_sites` of the last warm sample, the `harness` flag, and the
   *    exception class and message of each failed sample (`errors`). Plus
-  *    family totals with and without the eval-harness keys and the mean
-  *    recall of every ann_recall* key at each sibling scale.
+  *    family totals with and without the eval-harness keys, the mean
+  *    recall of every ann_recall* key at each sibling scale, and
+  *    `memo_mb`: per [[graft.queries.Memo]] label, the most MB (memory +
+  *    disk) its relations held at the end of a family, before the cache
+  *    clear.
   *  - the headline, the LAST stdout line: a consumer keeps only the tail
   *    of stdout, so it holds just `metric`, `unit`, `queries` (per-key
   *    `sec` to 2 decimals), `failed`, `sf` and `value` (the total), and
@@ -157,8 +160,13 @@ object Bench {
           families: Seq[(String, Seq[(String, Query)])]): (String, String) = {
     val profile = new Profile
     spark.sparkContext.addSparkListener(profile)
+    // largest cached MB of each memo label at the end of a family
+    var memoMb = Map.empty[String, Double]
     val measured = try families.map { case (family, keys) =>
       val reports = keys.map { case (name, fn) => name -> measure(spark, sfDir, name, fn, profile) }
+      Memo.cachedMb(spark).foreach { case (label, mb) =>
+        memoMb += label -> math.max(mb, memoMb.getOrElse(label, 0.0))
+      }
       spark.catalog.clearCache()
       family -> reports
     } finally spark.sparkContext.removeSparkListener(profile)
@@ -181,6 +189,7 @@ object Bench {
       "families_op" -> ListMap(measured.map { case (f, ks) => f -> total(ks.filterNot(_._2.harness)) }: _*),
       "harness_total" -> total(reports.filter(_._2.harness)),
       "recalls" -> here, "recalls_by_sf" -> recallsBySf,
+      "memo_mb" -> ListMap(memoMb.toSeq.sortBy(_._1): _*),
       "queries" -> ListMap(reports: _*))
     // a failure rounded to 2 decimals must stay visibly negative
     def r2(v: Double) = { val r = math.rint(v * 100) / 100; if (v < 0) math.min(r, -0.01) else r }
@@ -206,12 +215,12 @@ object Bench {
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up the codegen compiler, the shuffle machinery and EVERY
-    // table's footer, so the first key that reads a table is not charged
-    // seconds of JVM and footer start-up.
+    // table's footer and memoized schema, so the first key that reads a
+    // table is not charged seconds of JVM and footer start-up.
     spark.range(1000000).selectExpr("sum(id)").collect()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).collect()
+      try graft.sources.Tables.table(spark, sfDir, t).limit(1).collect()
       catch { case NonFatal(_) => () }
     }
     val families = Registry.families

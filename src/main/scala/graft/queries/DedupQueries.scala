@@ -40,42 +40,27 @@ object DedupQueries {
     * scratch. The memo holds the two reusable stages persisted: the
     * distinct shingle-hash relation (the expensive tokenize+md5 scan,
     * root of everything) and the verified pair set (root of the pair
-    * list and the keep-first resolution). Keyed by (session, dir);
-    * entries of stopped sessions are dropped, live entries are never
-    * evicted cross-session. This is also the 100 TB shape: a production
+    * list and the keep-first resolution). This is also the 100 TB shape: a production
     * dedup run computes the shingle index once and derives every
-    * artifact from it.
+    * artifact from it. Each part is its own [[Memo]] relation; a part
+    * asks for its inputs first, so a hit re-persists them in build
+    * order after a cache clear.
     */
-  private case class LshShared(ex: DataFrame, sigs: DataFrame, pairs: DataFrame)
-  private val lshMemo = scala.collection.mutable.Map.empty[(SparkSession, String), LshShared]
-  private def lshShared(s: SparkSession, d: String): LshShared = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    // keyed by session REFERENCE (tuple equality falls back to object
-    // identity for SparkSession) + dir; entries of stopped sessions are
-    // dropped, LIVE entries of OTHER sessions are never evicted — a
-    // concurrently-running session must not lose its cache (the former
-    // single-slot memo thrashed, and cross-session eviction made
-    // plan-shape assertions flaky under parallel test suites)
-    lshMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val v = lshMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("lshShared")
-      val ex = Dedup.shingleHashRelation(docs(s, d), "text", "doc_id").persist()
-      val sigs = Dedup.signaturesFromHashes(ex, "doc_id", LshParams.K).persist()
-      val pairs = Dedup.verifiedPairsFromParts(ex, sigs, "doc_id",
-        rowsPerBand = LshParams.RowsPerBand, threshold = LshParams.Threshold).persist()
-      LshShared(ex, sigs, pairs)
-    })
-    // an external spark.catalog.clearCache() (Bench/Verify do this
-    // between families) silently drops the blocks but leaves the
-    // persisted flag cleared — re-mark so the sharing survives
-    if (Seq(v.ex, v.sigs, v.pairs).exists(_.storageLevel == StorageLevel.NONE))
-      MemoTrace.built("lshShared:repersist")
-    Seq(v.ex, v.sigs, v.pairs).foreach { df =>
-      if (df.storageLevel == StorageLevel.NONE) df.persist()
+  private def lshEx(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "lshShared/ex") {
+      Dedup.shingleHashRelation(docs(s, d), "text", "doc_id")
     }
-    v
+  private def lshSigs(s: SparkSession, d: String): DataFrame = {
+    val ex = lshEx(s, d)
+    Memo.relation(s, d, "lshShared/sigs")(Dedup.signaturesFromHashes(ex, "doc_id", LshParams.K))
   }
-  private[queries] def verifiedPairs(s: SparkSession, d: String): DataFrame = lshShared(s, d).pairs
+  private[queries] def verifiedPairs(s: SparkSession, d: String): DataFrame = {
+    val (ex, sigs) = (lshEx(s, d), lshSigs(s, d))
+    Memo.relation(s, d, "lshShared/pairs") {
+      Dedup.verifiedPairsFromParts(ex, sigs, "doc_id",
+        rowsPerBand = LshParams.RowsPerBand, threshold = LshParams.Threshold)
+    }
+  }
 
   /** The UNVERIFIED banded candidate-pair relation (distinct id_a <
     * id_b), memoized per (session, dir) and PERSISTED — r21 optimization
@@ -86,46 +71,34 @@ object DedupQueries {
     * so the persisted footprint is small at any scale; same lifecycle
     * as the verified `pairs` memo it feeds beside.
     */
-  private val lshCandMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private def lshCandidates(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(lshCandMemo, (s, d), "lshCandidates") {
-      Dedup.lshCandidatePairs(lshShared(s, d).sigs, "doc_id",
-        LshParams.RowsPerBand).persist()
+  private def lshCandidates(s: SparkSession, d: String): DataFrame = {
+    val sigs = lshSigs(s, d)
+    Memo.relation(s, d, "lshCandidates") {
+      Dedup.lshCandidatePairs(sigs, "doc_id", LshParams.RowsPerBand)
     }
+  }
 
   /** Text-LSH cluster labels (doc_id, canonical), shared by FOUR
     * consumers (dedup_cluster, dedup_cluster_best, split_leak_safe,
     * split_leakage), which each used to re-run the union-find probe
-    * over the same verified pair set. Two deliberate deviations from
-    * the RelationMemo contract:
-    *  - the EAGER build (count probe + collect, or the distributed
-    *    fixpoint) runs OUTSIDE any lock — a memo whose build executes
-    *    Spark jobs under the shared map monitor would serialize
-    *    unrelated (session, dir) keys for the whole build;
-    *  - only the small-graph result (a driver-local LocalRelation —
-    *    plan-literal rows, nothing to lose) is memoized. The
-    *    distributed fixpoint result is rooted in localCheckpoint
-    *    blocks with TRUNCATED lineage: pinning it session-wide would
-    *    turn one lost executor into a sticky, unrecoverable failure
-    *    for all four consumers, so the large path rebuilds per call
-    *    (recoverable, and already the pre-memo behavior).
+    * over the same verified pair set. Only the small-graph result (a
+    * driver-local LocalRelation — plan-literal rows, nothing to lose)
+    * is memoized; the memo holds None for a large graph. The
+    * distributed fixpoint result is rooted in localCheckpoint blocks
+    * with TRUNCATED lineage: pinning it session-wide would turn one
+    * lost executor into a sticky, unrecoverable failure for all four
+    * consumers, so the large path rebuilds per call (recoverable, and
+    * already the pre-memo behavior).
     */
-  private val textClusterMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def textClusterLabels(s: SparkSession, d: String): DataFrame = {
-    textClusterMemo.synchronized {
-      textClusterMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-      textClusterMemo.get((s, d))
-    } match {
-      case Some(df) => df
-      case None =>
-        MemoTrace.built("textClusterLabels")
-        val built = Dedup.clusterLabels(verifiedPairs(s, d))
-        val isDriverLocal = built.queryExecution.logical
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-        if (isDriverLocal)
-          textClusterMemo.synchronized { textClusterMemo.getOrElseUpdate((s, d), built) }
-        else built
+    var built: Option[DataFrame] = None
+    Memo.value(s, d, "textClusterLabels") {
+      built = Some(Dedup.clusterLabels(verifiedPairs(s, d)))
+      built.filter(_.queryExecution.logical
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    }.orElse(built).getOrElse {
+      MemoTrace.built("textClusterLabels")
+      Dedup.clusterLabels(verifiedPairs(s, d))
     }
   }
 
@@ -214,9 +187,8 @@ object DedupQueries {
   private val ContainmentMin = 0.5
 
   def dedupContainment(s: SparkSession, d: String): DataFrame = {
-    val sh = lshShared(s, d)
     val cand = lshCandidates(s, d)
-    Dedup.pairContainment(cand, sh.ex, "doc_id")
+    Dedup.pairContainment(cand, lshEx(s, d), "doc_id")
       .filter(greatest(col("cont_a"), col("cont_b")) >= ContainmentMin)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -258,7 +230,7 @@ object DedupQueries {
 
   def dedupContainmentBottomk(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ex = lshShared(s, d).ex
+    val ex = lshEx(s, d)
     val sh = ex.select(col("doc_id"), col("h1").as("h")).distinct()
     val mn = sh.groupBy(col("doc_id")).agg(min(col("h")).as("h"))
     val wk = Window.partitionBy(col("doc_id")).orderBy(col("h"))
@@ -319,7 +291,7 @@ object DedupQueries {
   // — and three rounds of distributed join+agg scheduler latency vanish.
   // An overflowing probe falls through to the distributed plan.
   def dedupGraphRank(s: SparkSession, d: String): DataFrame = {
-    val pairs = lshShared(s, d).pairs
+    val pairs = verifiedPairs(s, d)
       // defensive cast (the clusterLabels contract): an integer-typed id
       // column must take the fast path, not throw in getLong
       .select(col("id_a").cast("long"), col("id_b").cast("long"))
@@ -514,7 +486,7 @@ object DedupQueries {
   // band_key): the linchpin of the dedup scale story, checked directly.
   // ========================================================================
   def dedupLshBands(s: SparkSession, d: String): DataFrame =
-    Dedup.bandKeys(lshShared(s, d).sigs, "doc_id", LshParams.RowsPerBand)
+    Dedup.bandKeys(lshSigs(s, d), "doc_id", LshParams.RowsPerBand)
       .orderBy(col("doc_id"), col("band"))
 
   private val dedupLshBandsSql =
@@ -544,7 +516,6 @@ object DedupQueries {
   def dedupLshRecall(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val SliceMax = 60
-    val shd = lshShared(s, d)
     // r21 optimization — the dedup_lsh_tuning driver-side precedent
     // (guide §1.2: the sweep input is STRUCTURALLY bounded): the truth
     // side is ≤ SliceMax docs and ≤ C(60,2) pairs, yet it ran a
@@ -556,7 +527,7 @@ object DedupQueries {
     // sizes, ONE division, one ×10 multiply, floor — the tuning key's
     // jac() algebra). The planted bucket-10 row stays DISTRIBUTED: its
     // fp-equal pair set is corpus-wide, never slice-bounded.
-    val shRows = shd.ex.filter(col("doc_id") < SliceMax)
+    val shRows = lshEx(s, d).filter(col("doc_id") < SliceMax)
       .select(col("doc_id"), col("h1")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val sh: Map[Long, Set[Long]] =
@@ -592,7 +563,7 @@ object DedupQueries {
     // so counting it in n_true would depress bucket-10 recall below 1.0
     // and false-alarm the lock on a corpus with short dup docs.
     val fpRel = docs(s, d).select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-      .join(shd.ex.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+      .join(lshEx(s, d).select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
     val planted = fpRel.select(col("fp"), col("doc_id").as("id_a"))
       .join(fpRel.select(col("fp"), col("doc_id").as("id_b")), Seq("fp"))
       .filter(col("id_a") < col("id_b")).select(col("id_a"), col("id_b"))
@@ -657,10 +628,9 @@ object DedupQueries {
   // keeps them inherently).
   // ========================================================================
   def dedupLshPrecision(s: SparkSession, d: String): DataFrame = {
-    val shd = lshShared(s, d)
     val cand = lshCandidates(s, d)
     val cj = cand
-      .join(Dedup.pairJaccard(cand, shd.ex, "doc_id"), Seq("id_a", "id_b"), "left")
+      .join(Dedup.pairJaccard(cand, lshEx(s, d), "doc_id"), Seq("id_a", "id_b"), "left")
       .select(coalesce(col("jaccard"), lit(0.0)).as("j"))
     val binned = cj
       .withColumn("bucket", least(floor(col("j") * 10), lit(9.0)).cast("long"))
@@ -729,7 +699,6 @@ object DedupQueries {
   def dedupLshTuning(s: SparkSession, d: String): DataFrame = {
     val SliceMax = 60
     val SeedPairs = 30
-    val shd = lshShared(s, d)
     // Driver-side fast path (the clusterLabels / recall-truth-set
     // precedent): the whole sweep input is structurally bounded — ≤ 60
     // seed-pair docs + ≤ 60 id-range docs — so a distributed plan pays
@@ -737,14 +706,14 @@ object DedupQueries {
     // microseconds of work. Three bounded collects against the memoized
     // persisted relations, then the sweep runs in-process; the four
     // result rows return as a local relation (plan-guarded).
-    val seedIds = shd.pairs.orderBy(col("id_a"), col("id_b")).limit(SeedPairs)
+    val seedIds = verifiedPairs(s, d).orderBy(col("id_a"), col("id_b")).limit(SeedPairs)
       .collect().flatMap(r => Seq(r.getLong(0), r.getLong(1)))
-    val rangeIds = shd.ex.select(col("doc_id")).filter(col("doc_id") < SliceMax)
+    val rangeIds = lshEx(s, d).select(col("doc_id")).filter(col("doc_id") < SliceMax)
       .distinct().collect().map(_.getLong(0))
     val ids = (seedIds ++ rangeIds).distinct.sorted
-    val sigRows = shd.sigs.filter(col("doc_id").isInCollection(ids))
+    val sigRows = lshSigs(s, d).filter(col("doc_id").isInCollection(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val shRows = shd.ex.filter(col("doc_id").isInCollection(ids))
+    val shRows = lshEx(s, d).filter(col("doc_id").isInCollection(ids))
       .select(col("doc_id"), col("h1")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val sh: Map[Long, Set[Long]] =
@@ -1169,7 +1138,7 @@ object DedupQueries {
   // over these is in DedupSpec.
   // ========================================================================
   def dedupMinhashSig(s: SparkSession, d: String): DataFrame =
-    lshShared(s, d).sigs.orderBy(col("doc_id"), col("i"))
+    lshSigs(s, d).orderBy(col("doc_id"), col("i"))
 
   private val dedupMinhashSigSql =
     raw"""WITH hp AS (
@@ -1222,42 +1191,37 @@ object DedupQueries {
   // Scale: decode partition-local, only (id, hash) shuffles; the join is
   // (band, slice)-keyed over distinct hashes, never image-quadratic.
   // ========================================================================
-  /** One image-phash pipeline per (session, dir) — the [[lshShared]]
-    * lifecycle applied to the image family: the decode→dHash relation,
+  /** One image-phash pipeline per (session, dir) — the text-LSH
+    * layout applied to the image family: the decode→dHash relation,
     * the distinct-hash groups, and the verified (≤ 6 bit) near-dup
     * pairs are each computed once and persisted; `dedup_image_phash`
     * and `dedup_image_cluster` both derive from them (the cluster query
     * used to re-decode the whole corpus to rebuild the same pairs).
     */
-  private case class ImageShared(hashes: DataFrame, grp: DataFrame, pairs: DataFrame)
-  private val imageMemo = scala.collection.mutable.Map.empty[(SparkSession, String), ImageShared]
-  private def imageShared(s: SparkSession, d: String): ImageShared = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    imageMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val v = imageMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("imageShared")
-      val hashes = Multimodal.dhash56(s,
-        Multimodal.syntheticPixelPayloads(s, docs(s, d))).toDF().persist()
-      val grp = hashes.groupBy(col("phash"))
-        .agg(count(lit(1)).as("n"), min(col("asset_id")).as("keep_id")).persist()
-      val pairs = Dedup.hammingBandPairs(grp, "phash", nBands = 8, bitsPerBand = 7)
-        .withColumn("hamming", expr("CAST(bit_count(phash_a ^ phash_b) AS BIGINT)"))
-        .filter(col("hamming") <= 6).persist()
-      ImageShared(hashes, grp, pairs)
-    })
-    if (Seq(v.hashes, v.grp, v.pairs).exists(_.storageLevel == StorageLevel.NONE))
-      MemoTrace.built("imageShared:repersist")
-    Seq(v.hashes, v.grp, v.pairs).foreach { df =>
-      if (df.storageLevel == StorageLevel.NONE) df.persist()
+  private def imageHashes(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "imageShared/hashes") {
+      Multimodal.dhash56(s, Multimodal.syntheticPixelPayloads(s, docs(s, d))).toDF()
     }
-    v
+  private def imageGrp(s: SparkSession, d: String): DataFrame = {
+    val hashes = imageHashes(s, d)
+    Memo.relation(s, d, "imageShared/grp") {
+      hashes.groupBy(col("phash"))
+        .agg(count(lit(1)).as("n"), min(col("asset_id")).as("keep_id"))
+    }
+  }
+  private def imagePairs(s: SparkSession, d: String): DataFrame = {
+    val grp = imageGrp(s, d)
+    Memo.relation(s, d, "imageShared/pairs") {
+      Dedup.hammingBandPairs(grp, "phash", nBands = 8, bitsPerBand = 7)
+        .withColumn("hamming", expr("CAST(bit_count(phash_a ^ phash_b) AS BIGINT)"))
+        .filter(col("hamming") <= 6)
+    }
   }
 
   def dedupImagePhash(s: SparkSession, d: String): DataFrame = {
-    val sh = imageShared(s, d)
-    sh.pairs
-      .join(sh.grp.select(col("phash").as("phash_a"), col("n").as("n_a")), Seq("phash_a"))
-      .join(sh.grp.select(col("phash").as("phash_b"), col("n").as("n_b")), Seq("phash_b"))
+    imagePairs(s, d)
+      .join(imageGrp(s, d).select(col("phash").as("phash_a"), col("n").as("n_a")), Seq("phash_a"))
+      .join(imageGrp(s, d).select(col("phash").as("phash_b"), col("n").as("n_b")), Seq("phash_b"))
       .select(col("phash_a"), col("phash_b"), col("hamming"), col("n_a"), col("n_b"))
       .orderBy(col("phash_a"), col("phash_b"))
   }
@@ -1321,11 +1285,10 @@ object DedupQueries {
   // the hash edges + the same membership/keep-first election.
   // ========================================================================
   def dedupImageCluster(s: SparkSession, d: String): DataFrame = {
-    val sh = imageShared(s, d)
-    val pairs = sh.pairs.select(col("phash_a").as("id_a"), col("phash_b").as("id_b"))
+    val pairs = imagePairs(s, d).select(col("phash_a").as("id_a"), col("phash_b").as("id_b"))
     val comp = Dedup.clusterLabels(pairs)
       .select(col("doc_id").as("phash"), col("canonical").as("clbl"))
-    val members = sh.hashes.join(sh.grp.select(col("phash"), col("n")), Seq("phash"))
+    val members = imageHashes(s, d).join(imageGrp(s, d).select(col("phash"), col("n")), Seq("phash"))
       .join(comp, Seq("phash"), "left")
       .filter(col("n") >= 2 || col("clbl").isNotNull)
       .withColumn("clbl", coalesce(col("clbl"), col("phash")))
@@ -1413,9 +1376,8 @@ object DedupQueries {
     * read the persisted spans instead of re-running posexplode + seven
     * lead windows each.
     */
-  private val substrMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def substringSpans(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(substrMemo, (s, d), "substrFp") {
+    Memo.relation(s, d, "substrFp") {
       import org.apache.spark.sql.expressions.Window
       val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       val kg = positionedGrams(docs(s, d)).persist()
@@ -1576,23 +1538,12 @@ object DedupQueries {
   // (plan-guarded: the probe join's corpus side is an
   // InMemoryTableScan with no exchange above it).
   // ========================================================================
-  private val substrIndexMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private def substrIndex(s: SparkSession, d: String): DataFrame = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    substrIndexMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val idx = substrIndexMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("substrIndex")
+  private def substrIndex(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "substrIndex") {
       positionedGrams(docs(s, d).filter(col("doc_id") % 3 =!= 0))
         .select(col("h")).distinct()
         .repartition(col("h"))
-        .persist()
-    })
-    if (idx.storageLevel == StorageLevel.NONE) {
-      MemoTrace.built("substrIndex:repersist")
-      idx.persist()
     }
-    idx
-  }
 
   /** The increment's merged duplicated spans (doc_id, sp, ep, has_old,
     * has_inc) — factored so the report (`dedup_substring_incremental`)
@@ -1769,70 +1720,64 @@ object DedupQueries {
   // sample, every hash bit, band key, signature md5 and Hamming
   // distance in exact integer SQL.
   // ========================================================================
-  /** One video-phash pipeline per (session, dir) — the [[imageShared]]
-    * lifecycle applied to the video family: the per-frame decode→hash
+  /** One video-phash pipeline per (session, dir) — the image family's
+    * layout applied to the video family: the per-frame decode→hash
     * walk, the clip signatures, the distinct-signature groups, and the
     * verified (total Hamming ≤ 3, aligned ≥ 2) near-dup pairs each
     * computed once and persisted; `dedup_video_phash` and
     * `dedup_video_cluster` both derive from them.
     */
-  private case class VideoShared(sig: DataFrame, sgrp: DataFrame, pairs: DataFrame)
-  private val videoMemo = scala.collection.mutable.Map.empty[(SparkSession, String), VideoShared]
-  private def videoShared(s: SparkSession, d: String): VideoShared = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    videoMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val memo = videoMemo.getOrElseUpdate((s, d), {
-        MemoTrace.built("videoShared")
-        val fh = Multimodal.frameDhashes(s,
-          Multimodal.syntheticY4mReplicaPayloads(s, docs(s, d)), step = 2).toDF()
-        // ordered frame-hash list per clip (sort_array on the (idx, hash)
-        // structs makes the ordering explicit and shuffle-safe), then the
-        // clip signature and the per-band whole-clip keys derive from it
-        val lists = fh.groupBy(col("asset_id"))
-          .agg(sort_array(collect_list(struct(col("frame_idx"), col("fhash")))).as("fs"))
-        val sig = lists.select(col("asset_id"), col("fs"),
-          md5(concat_ws(",", expr("transform(fs, x -> CAST(x.fhash AS STRING))"))).as("csig"))
-          .persist()
-        val sgrp = sig.groupBy(col("csig"))
-          .agg(count(lit(1)).as("n"), min(col("asset_id")).as("rep_id")).persist()
-        // one representative (frame list) per distinct signature
-        val srep = sgrp.join(sig.select(col("asset_id").as("rep_id"), col("fs")), Seq("rep_id"))
-        val banded = srep
-          .withColumn("band", explode(sequence(lit(0), lit(3))))
-          .select(col("csig"), col("band"), concat_ws(",",
-            expr("transform(fs, x -> concat(CAST(x.frame_idx AS STRING), ':', " +
-              "CAST(shiftright(x.fhash, CAST(band * 14 AS INT)) & 16383 AS STRING)))"))
-            .as("bkey"))
-        val cand = banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.csig") < col("b.csig"))
-          .select(col("a.csig").as("sig_a"), col("b.csig").as("sig_b"))
-          .distinct()
-        val sfh = srep.select(col("csig"), explode(col("fs")).as("fx"))
-          .select(col("csig"), col("fx.frame_idx").as("frame_idx"), col("fx.fhash").as("fhash"))
-        val ha = sfh.select(col("csig").as("sig_a"), col("frame_idx"), col("fhash").as("fha"))
-        val hb = sfh.select(col("csig").as("sig_b"), col("frame_idx"), col("fhash").as("fhb"))
-        val pairs = cand.join(ha, Seq("sig_a")).join(hb, Seq("sig_b", "frame_idx"))
-          .withColumn("hamming", expr("CAST(bit_count(fha ^ fhb) AS BIGINT)"))
-          .groupBy(col("sig_a"), col("sig_b"))
-          .agg(count(lit(1)).as("n_aligned"), sum(col("hamming")).as("total_hamming"))
-          .filter(col("total_hamming") <= 3 && col("n_aligned") >= 2)
-          .persist()
-        VideoShared(sig, sgrp, pairs)
-    })
-    if (Seq(memo.sig, memo.sgrp, memo.pairs).exists(_.storageLevel == StorageLevel.NONE))
-      MemoTrace.built("videoShared:repersist")
-    Seq(memo.sig, memo.sgrp, memo.pairs).foreach { df =>
-      if (df.storageLevel == StorageLevel.NONE) df.persist()
+  private def videoSig(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "videoShared/sig") {
+      val fh = Multimodal.frameDhashes(s,
+        Multimodal.syntheticY4mReplicaPayloads(s, docs(s, d)), step = 2).toDF()
+      // ordered frame-hash list per clip (sort_array on the (idx, hash)
+      // structs makes the ordering explicit and shuffle-safe), then the
+      // clip signature and the per-band whole-clip keys derive from it
+      val lists = fh.groupBy(col("asset_id"))
+        .agg(sort_array(collect_list(struct(col("frame_idx"), col("fhash")))).as("fs"))
+      lists.select(col("asset_id"), col("fs"),
+        md5(concat_ws(",", expr("transform(fs, x -> CAST(x.fhash AS STRING))"))).as("csig"))
     }
-    memo
+  private def videoSgrp(s: SparkSession, d: String): DataFrame = {
+    val sig = videoSig(s, d)
+    Memo.relation(s, d, "videoShared/sgrp") {
+      sig.groupBy(col("csig"))
+        .agg(count(lit(1)).as("n"), min(col("asset_id")).as("rep_id"))
+    }
+  }
+  private def videoPairs(s: SparkSession, d: String): DataFrame = {
+    val (sig, sgrp) = (videoSig(s, d), videoSgrp(s, d))
+    Memo.relation(s, d, "videoShared/pairs") {
+      // one representative (frame list) per distinct signature
+      val srep = sgrp.join(sig.select(col("asset_id").as("rep_id"), col("fs")), Seq("rep_id"))
+      val banded = srep
+        .withColumn("band", explode(sequence(lit(0), lit(3))))
+        .select(col("csig"), col("band"), concat_ws(",",
+          expr("transform(fs, x -> concat(CAST(x.frame_idx AS STRING), ':', " +
+            "CAST(shiftright(x.fhash, CAST(band * 14 AS INT)) & 16383 AS STRING)))"))
+          .as("bkey"))
+      val cand = banded.as("a").join(banded.as("b"),
+          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+            col("a.csig") < col("b.csig"))
+        .select(col("a.csig").as("sig_a"), col("b.csig").as("sig_b"))
+        .distinct()
+      val sfh = srep.select(col("csig"), explode(col("fs")).as("fx"))
+        .select(col("csig"), col("fx.frame_idx").as("frame_idx"), col("fx.fhash").as("fhash"))
+      val ha = sfh.select(col("csig").as("sig_a"), col("frame_idx"), col("fhash").as("fha"))
+      val hb = sfh.select(col("csig").as("sig_b"), col("frame_idx"), col("fhash").as("fhb"))
+      cand.join(ha, Seq("sig_a")).join(hb, Seq("sig_b", "frame_idx"))
+        .withColumn("hamming", expr("CAST(bit_count(fha ^ fhb) AS BIGINT)"))
+        .groupBy(col("sig_a"), col("sig_b"))
+        .agg(count(lit(1)).as("n_aligned"), sum(col("hamming")).as("total_hamming"))
+        .filter(col("total_hamming") <= 3 && col("n_aligned") >= 2)
+    }
   }
 
   def dedupVideoPhash(s: SparkSession, d: String): DataFrame = {
-    val sh = videoShared(s, d)
-    sh.pairs
-      .join(sh.sgrp.select(col("csig").as("sig_a"), col("n").as("n_a")), Seq("sig_a"))
-      .join(sh.sgrp.select(col("csig").as("sig_b"), col("n").as("n_b")), Seq("sig_b"))
+    videoPairs(s, d)
+      .join(videoSgrp(s, d).select(col("csig").as("sig_a"), col("n").as("n_a")), Seq("sig_a"))
+      .join(videoSgrp(s, d).select(col("csig").as("sig_b"), col("n").as("n_b")), Seq("sig_b"))
       .select(col("sig_a"), col("sig_b"), col("n_aligned"), col("total_hamming"),
         col("n_a"), col("n_b"))
       .orderBy(col("sig_a"), col("sig_b"))
@@ -1919,15 +1864,14 @@ object DedupQueries {
   // Oracle: recursive CTE over the rep-id edges.
   // ========================================================================
   def dedupVideoCluster(s: SparkSession, d: String): DataFrame = {
-    val sh = videoShared(s, d)
-    val repPairs = sh.pairs
-      .join(sh.sgrp.select(col("csig").as("sig_a"), col("rep_id").as("id_a")), Seq("sig_a"))
-      .join(sh.sgrp.select(col("csig").as("sig_b"), col("rep_id").as("id_b")), Seq("sig_b"))
+    val repPairs = videoPairs(s, d)
+      .join(videoSgrp(s, d).select(col("csig").as("sig_a"), col("rep_id").as("id_a")), Seq("sig_a"))
+      .join(videoSgrp(s, d).select(col("csig").as("sig_b"), col("rep_id").as("id_b")), Seq("sig_b"))
       .select(col("id_a"), col("id_b"))
     val comp = Dedup.clusterLabels(repPairs)
       .select(col("doc_id").as("rep_id"), col("canonical").as("clbl"))
-    sh.sig.select(col("asset_id"), col("csig"))
-      .join(sh.sgrp.select(col("csig"), col("n"), col("rep_id")), Seq("csig"))
+    videoSig(s, d).select(col("asset_id"), col("csig"))
+      .join(videoSgrp(s, d).select(col("csig"), col("n"), col("rep_id")), Seq("csig"))
       .join(comp, Seq("rep_id"), "left")
       .filter(col("n") >= 2 || col("clbl").isNotNull)
       .withColumn("canonical", coalesce(col("clbl"), col("rep_id")))
@@ -1983,42 +1927,37 @@ object DedupQueries {
   // samples, every grid point, hash bit, band key and Hamming distance
   // in exact integer SQL.
   // ========================================================================
-  /** One audio-phash pipeline per (session, dir) — the [[imageShared]]
-    * lifecycle applied to the audio family: the decode→fingerprint
+  /** One audio-phash pipeline per (session, dir) — the image family's
+    * layout applied to the audio family: the decode→fingerprint
     * relation, the distinct-hash groups, and the verified (≤ 3 bit)
     * near-dup pairs each computed once and persisted;
     * `dedup_audio_phash` and `dedup_audio_cluster` both derive from
-    * them. Keyed (session, dir) memo: see [[lshShared]]'s note.
+    * them.
     */
-  private case class AudioShared(hashes: DataFrame, grp: DataFrame, pairs: DataFrame)
-  private val audioMemo = scala.collection.mutable.Map.empty[(SparkSession, String), AudioShared]
-  private def audioShared(s: SparkSession, d: String): AudioShared = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    audioMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val v = audioMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("audioShared")
-      val hashes = Multimodal.audioDhashes(s,
-        Multimodal.syntheticWavReplicaPayloads(s, docs(s, d))).toDF().persist()
-      val grp = hashes.groupBy(col("ahash"))
-        .agg(count(lit(1)).as("n"), min(col("asset_id")).as("keep_id")).persist()
-      val pairs = Dedup.hammingBandPairs(grp, "ahash", nBands = 4, bitsPerBand = 14)
-        .withColumn("hamming", expr("CAST(bit_count(ahash_a ^ ahash_b) AS BIGINT)"))
-        .filter(col("hamming") <= 3).persist()
-      AudioShared(hashes, grp, pairs)
-    })
-    if (Seq(v.hashes, v.grp, v.pairs).exists(_.storageLevel == StorageLevel.NONE))
-      MemoTrace.built("audioShared:repersist")
-    Seq(v.hashes, v.grp, v.pairs).foreach { df =>
-      if (df.storageLevel == StorageLevel.NONE) df.persist()
+  private def audioHashes(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "audioShared/hashes") {
+      Multimodal.audioDhashes(s, Multimodal.syntheticWavReplicaPayloads(s, docs(s, d))).toDF()
     }
-    v
+  private def audioGrp(s: SparkSession, d: String): DataFrame = {
+    val hashes = audioHashes(s, d)
+    Memo.relation(s, d, "audioShared/grp") {
+      hashes.groupBy(col("ahash"))
+        .agg(count(lit(1)).as("n"), min(col("asset_id")).as("keep_id"))
+    }
+  }
+  private def audioPairs(s: SparkSession, d: String): DataFrame = {
+    val grp = audioGrp(s, d)
+    Memo.relation(s, d, "audioShared/pairs") {
+      Dedup.hammingBandPairs(grp, "ahash", nBands = 4, bitsPerBand = 14)
+        .withColumn("hamming", expr("CAST(bit_count(ahash_a ^ ahash_b) AS BIGINT)"))
+        .filter(col("hamming") <= 3)
+    }
   }
 
   def dedupAudioPhash(s: SparkSession, d: String): DataFrame = {
-    val sh = audioShared(s, d)
-    sh.pairs
-      .join(sh.grp.select(col("ahash").as("ahash_a"), col("n").as("n_a")), Seq("ahash_a"))
-      .join(sh.grp.select(col("ahash").as("ahash_b"), col("n").as("n_b")), Seq("ahash_b"))
+    audioPairs(s, d)
+      .join(audioGrp(s, d).select(col("ahash").as("ahash_a"), col("n").as("n_a")), Seq("ahash_a"))
+      .join(audioGrp(s, d).select(col("ahash").as("ahash_b"), col("n").as("n_b")), Seq("ahash_b"))
       .select(col("ahash_a"), col("ahash_b"), col("hamming"), col("n_a"), col("n_b"))
       .orderBy(col("ahash_a"), col("ahash_b"))
   }
@@ -2085,12 +2024,11 @@ object DedupQueries {
   // diameter, decode shared via the persisted audioShared relation.
   // ========================================================================
   def dedupAudioCluster(s: SparkSession, d: String): DataFrame = {
-    val sh = audioShared(s, d)
-    val pairs = sh.pairs.select(col("ahash_a").as("id_a"), col("ahash_b").as("id_b"))
+    val pairs = audioPairs(s, d).select(col("ahash_a").as("id_a"), col("ahash_b").as("id_b"))
     val comp = Dedup.clusterLabels(pairs)
       .select(col("doc_id").as("ahash"), col("canonical").as("clbl"))
-    val members = sh.hashes.select(col("asset_id"), col("ahash"))
-      .join(sh.grp.select(col("ahash"), col("n")), Seq("ahash"))
+    val members = audioHashes(s, d).select(col("asset_id"), col("ahash"))
+      .join(audioGrp(s, d).select(col("ahash"), col("n")), Seq("ahash"))
       .join(comp, Seq("ahash"), "left")
       .filter(col("n") >= 2 || col("clbl").isNotNull)
       .withColumn("clbl", coalesce(col("clbl"), col("ahash")))
@@ -2296,18 +2234,17 @@ object DedupQueries {
   // ========================================================================
   private[queries] val EstSampleTarget = 32
   def dedupMinhashEst(s: SparkSession, d: String): DataFrame = {
-    val shd = lshShared(s, d)
     val cand = lshCandidates(s, d)
     val nCand = cand.groupBy().agg(count(lit(1)).as("n_cand"))
     val sampled = cand.crossJoin(broadcast(nCand))
       .filter(TextOps.hash60(concat(col("id_a"), lit("#"), col("id_b")))
         % greatest(lit(1L), floor(col("n_cand") / lit(EstSampleTarget)).cast("long")) === 0L)
       .select(col("id_a"), col("id_b"))
-    val jac = Dedup.pairJaccard(sampled, shd.ex, "doc_id")
+    val jac = Dedup.pairJaccard(sampled, lshEx(s, d), "doc_id")
     val est = sampled
-      .join(shd.sigs.select(col("doc_id").as("id_a"), col("i"), col("minh").as("ma")),
+      .join(lshSigs(s, d).select(col("doc_id").as("id_a"), col("i"), col("minh").as("ma")),
         Seq("id_a"))
-      .join(shd.sigs.select(col("doc_id").as("id_b"), col("i"), col("minh").as("mb")),
+      .join(lshSigs(s, d).select(col("doc_id").as("id_b"), col("i"), col("minh").as("mb")),
         Seq("id_b", "i"))
       .groupBy(col("id_a"), col("id_b"))
       .agg((sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).cast("double")
@@ -2365,21 +2302,20 @@ object DedupQueries {
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
     val IncMod = 3
     val isNew = col("doc_id") % IncMod === 0
-    val shd = lshShared(s, d)
     val fp = docs(s, d).select(col("doc_id"),
       graft.text.TextOps.fingerprint(col("text")).as("fp"))
     val oldFp = fp.filter(!isNew).groupBy(col("fp"))
       .agg(min(col("doc_id")).as("exact_of"))
     val exact = fp.filter(isNew)
       .join(oldFp, Seq("fp"), "left").select(col("doc_id"), col("exact_of"))
-    val bands = Dedup.bandKeys(shd.sigs, "doc_id", LshParams.RowsPerBand)
+    val bands = Dedup.bandKeys(lshSigs(s, d), "doc_id", LshParams.RowsPerBand)
     val cand = bands.filter(isNew)
       .select(col("doc_id").as("id_a"), col("band"), col("band_key"))
       .join(bands.filter(!isNew)
         .select(col("doc_id").as("id_b"), col("band"), col("band_key")),
         Seq("band", "band_key"))
       .select(col("id_a"), col("id_b")).distinct()
-    val near = Dedup.pairJaccard(cand, shd.ex, "doc_id")
+    val near = Dedup.pairJaccard(cand, lshEx(s, d), "doc_id")
       .filter(col("jaccard") >= LshParams.Threshold)
       .groupBy(col("id_a")).agg(min(col("id_b")).as("near_of"))
     exact.join(near, col("doc_id") === col("id_a"), "left")
@@ -2507,37 +2443,8 @@ object DedupQueries {
     * both `sample_coreset` (the selection order itself) and
     * `coreset_assign` (which needs the ids). Driver state is k rows.
     */
-  private val coresetMemo = scala.collection.mutable.Map
-    .empty[(SparkSession, String), Seq[(Long, Long, Option[Double])]]
-  // map-scoped monitor (the RelationMemo convention): the greedy build
-  // runs k-1 sequential Spark jobs — holding the shared DedupQueries
-  // object lock for it would stall every unrelated memo HIT in the file
-  // (the textClusterLabels lesson). The BUILD itself runs OUTSIDE the
-  // monitor too: k-1 blocking jobs under the map lock would serialize
-  // concurrent coreset builds even for unrelated (session, dir) keys.
-  // The value is deterministic per key, so the benign race (two threads
-  // both miss and both build) converges on identical rows.
-  private def coresetRows(s: SparkSession, d: String): Seq[(Long, Long, Option[Double])] = {
-    coresetMemo.synchronized {
-      coresetMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-      coresetMemo.get((s, d))
-    } match {
-      case Some(v) => v
-      case None =>
-        val built = coresetBuild(s, d)
-        coresetMemo.synchronized {
-          // r21 (ADVICE low): fire the MemoTrace event only for the
-          // thread whose value WINS the race — two simultaneous missers
-          // both run the deterministic build, but attributing two
-          // "coresetSelect" build events would over-count memo_build in
-          // the bench artifact
-          val hadIt = coresetMemo.contains((s, d))
-          val v = coresetMemo.getOrElseUpdate((s, d), built)
-          if (!hadIt) MemoTrace.built("coresetSelect")
-          v
-        }
-    }
-  }
+  private def coresetRows(s: SparkSession, d: String): Seq[(Long, Long, Option[Double])] =
+    Memo.value(s, d, "coresetSelect")(coresetBuild(s, d))
 
   private def coresetBuild(s: SparkSession, d: String): Seq[(Long, Long, Option[Double])] = {
     val e = coresetCorpus(s, d)
@@ -2791,17 +2698,13 @@ object DedupQueries {
         TextOps.canonicalText(col("text")), WinnowK, WinnowW)).as("h"))
 
   /** Corpus-wide selected fingerprint relation (doc_id, h) — memoized
-    * per (session, dir) + persisted (the RelationMemo contract): four
+    * per (session, dir) + persisted ([[Memo]]): four
     * consumers inside dedup_winnow (df cap, both pair sides, sizes) and
     * the incremental index build would otherwise each re-run the
     * per-doc hashing pass (plan-guarded: one Generate, not four).
     */
-  private val winnowSelMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def winnowSel(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(winnowSelMemo, (s, d), "winnowSel") {
-      winnowFingerprints(docs(s, d)).persist()
-    }
+    Memo.relation(s, d, "winnowSel")(winnowFingerprints(docs(s, d)))
 
   def dedupWinnow(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2882,17 +2785,14 @@ object DedupQueries {
   // hit. Probe cost is O(increment + collisions); the corpus text is
   // never re-read.
   // ========================================================================
-  private val winnowIdxMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[graft] def winnowIndex(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    RelationMemo.relation(winnowIdxMemo, (s, d), "winnowIndex") {
+    Memo.relation(s, d, "winnowIndex") {
       winnowSel(s, d).filter(col("doc_id") % 3 =!= 0)
         .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
         .filter(col("df") <= WinnowDfCap)
         .select(col("doc_id").as("base_id"), col("h"))
         .repartition(col("h"))
-        .persist()
     }
   }
 

@@ -308,34 +308,28 @@ object JoinQueries {
   // bucketing serves (at corpus scale stats pick it anyway; at bench
   // scale the optimizer would otherwise broadcast the tiny side and
   // hide the property under test); the plan guard asserts neither join
-  // key is ever hash-partitioned at read time. Same catalog-memo
-  // contract as the IVF index tables: keyed by dir, re-validated with
-  // tableExists for fresh sessions. Results are identical to joining
+  // key is ever hash-partitioned at read time. Same catalog-table memo
+  // as the IVF index tables ([[Memo.tables]]). Results are identical to joining
   // the raw parquet (bucketing is layout, not semantics), so the
   // oracle is the plain join.
   // ========================================================================
   private val BucketedJoinBuckets = 8
-  private val bucketedMemo = scala.collection.mutable.Map.empty[String, (String, String)]
-  private[graft] def bucketedTables(s: SparkSession, d: String): (String, String) =
-    bucketedMemo.synchronized {
-      bucketedMemo.get(d)
-        .filter { case (lt, ot) => s.catalog.tableExists(lt) && s.catalog.tableExists(ot) }
-        .getOrElse {
-          MemoTrace.built("bucketedTables")
-          val suffix = MemoNames.dirSuffix(d)
-          val lt = s"graft_bkt_lineitem_$suffix"
-          val ot = s"graft_bkt_orders_$suffix"
-          graft.operators.Scale.writeBucketed(
-            Tables.lineitem(s, d)
-              .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
-            lt, "l_orderkey", BucketedJoinBuckets)
-          graft.operators.Scale.writeBucketed(
-            Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
-            ot, "o_orderkey", BucketedJoinBuckets)
-          bucketedMemo(d) = (lt, ot)
-          (lt, ot)
-        }
+  private[graft] def bucketedTables(s: SparkSession, d: String): (String, String) = {
+    val Seq(lt, ot) = Memo.tables(s, d, "bucketedTables") {
+      val suffix = MemoNames.dirSuffix(d)
+      val lt = s"graft_bkt_lineitem_$suffix"
+      val ot = s"graft_bkt_orders_$suffix"
+      graft.operators.Scale.writeBucketed(
+        Tables.lineitem(s, d)
+          .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
+        lt, "l_orderkey", BucketedJoinBuckets)
+      graft.operators.Scale.writeBucketed(
+        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
+        ot, "o_orderkey", BucketedJoinBuckets)
+      Seq(lt, ot)
     }
+    (lt, ot)
+  }
 
   def joinBucketed(s: SparkSession, d: String): DataFrame = {
     val (lt, ot) = bucketedTables(s, d)

@@ -12,9 +12,11 @@ package graft.queries
   * change, and the artifact could not distinguish a real plan defect
   * from memo-build attribution drift (VERDICT r17 "What's missing" #1).
   *
-  * Every memoized builder reports here when a timed run actually paid a
-  * build (first construction) or a re-persist (cache was dropped, the
-  * next action re-materializes). Bench drains the trace around each
+  * [[Memo]] reports here when a timed run actually paid a build (first
+  * construction, or a rebuild after the dir's data stamp changed) or a
+  * re-persist (cache was dropped, the next action re-materializes); the
+  * event is the memo's label, with its parameters (`kmCentroids/3/2`),
+  * and `label:repersist`. Bench drains the trace around each
   * sample and records each sample's events under `builds` in
   * bench_full.json, so a reader can see which sample (normally the
   * cold one) paid a shared build and adjudicate round-over-round deltas

@@ -187,11 +187,8 @@ object SimQueries {
         graft.plans.ArrayDotProduct.dot(col("embedding"), col("embedding")))
       .filter(col("nrm2") > 0)
 
-  private val fhMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def fhChunkVecs(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(fhMemo, (s, d), "embFeatures") {
-      fhChunkVecsOn(Tables.documents(s, d)).persist()
-    }
+    Memo.relation(s, d, "embFeatures")(fhChunkVecsOn(Tables.documents(s, d)))
 
   /** The long-form (tbl, bucket) banding of [[fhChunkVecs]] — the
     * physical index layout (each table is a bucketed copy).
@@ -658,22 +655,14 @@ object SimQueries {
     * same truth (knn_accuracy at q<40; ann_recall / ann_recall_graph /
     * ann_recall_kmeans at q<10 — a SUBSET: per-query top-5 is
     * independent of which other queries are in the filter, so slicing
-    * q_id < 10 from the q<40 set is identical by construction). Keyed
-    * by (dir, MemoNames.dataStamp(dir)) like subwordMemo — a pure
-    * function of the dir's data, whichever session computes it, that is
-    * rebuilt when the data under the dir is rewritten in place.
+    * q_id < 10 from the q<40 set is identical by construction).
     */
-  private val bruteTruthMemo =
-    scala.collection.mutable.Map.empty[(String, String), Seq[(Long, Long)]]
   private def bruteTruth40(s: SparkSession, d: String): Seq[(Long, Long)] =
-    bruteTruthMemo.synchronized {
-      bruteTruthMemo.getOrElseUpdate((d, MemoNames.dataStamp(d)), {
-        MemoTrace.built("bruteTruth40")
-        Similarity.bruteForceTopK(emb(s, d), "vec_id", "embedding",
-            col("vec_id") < KnnAccQ, KnnAccK)
-          .select(col("q_id"), col("n_id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      })
+    Memo.value(s, d, "bruteTruth40") {
+      Similarity.bruteForceTopK(emb(s, d), "vec_id", "embedding",
+          col("vec_id") < KnnAccQ, KnnAccK)
+        .select(col("q_id"), col("n_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
 
   def knnAccuracy(s: SparkSession, d: String): DataFrame = {
@@ -953,7 +942,7 @@ object SimQueries {
   // brute-force truth set (the ann_recall* contract); AnnGraphSpec pins
   // absolute per-sf recall floors plus dominance over IVF nProbe=2 at a
   // smaller scored-candidate budget. The edge relation is built once
-  // per (session, dir) and persisted (RelationMemo), the build-once/
+  // per (session, dir) and persisted ([[Memo]]), the build-once/
   // search-many production lifecycle. The oracle re-learns the SAME
   // quantizer in SQL — the plane count is derived from count(*) with
   // integer-exact arithmetic, so the CTE chain scales its cells with
@@ -977,12 +966,8 @@ object SimQueries {
     * LSH-seeded Lloyd k-means over the full corpus — shares kmCentroids'
     * memo, so the plane-count probe (one count job) is paid once per dir.
     */
-  private val graphPlanesMemo = scala.collection.mutable.Map.empty[String, Int]
   private[graft] def graphPlanes(s: SparkSession, d: String): Int =
-    graphPlanesMemo.synchronized {
-      graphPlanesMemo.getOrElseUpdate(d,
-        Similarity.adaptivePlanes(emb(s, d).count()))
-    }
+    Memo.value(s, d, "graphPlanes")(Similarity.adaptivePlanes(emb(s, d).count()))
   private[graft] def graphCents(s: SparkSession, d: String): Seq[Similarity.Centroid] =
     kmCentroids(s, d, graphPlanes(s, d), GraphIters)
 
@@ -993,42 +978,31 @@ object SimQueries {
     * serving scale: the id-bucketed half of the persisted index next to
     * the src-bucketed edge table).
     */
-  private val graphCorpusMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[graft] def graphCorpus(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(graphCorpusMemo, (s, d), "graphCorpus") {
+    Memo.relation(s, d, "graphCorpus") {
       emb(s, d).withColumn("gcell",
-        Similarity.nearestCentroid(col("embedding"), graphCents(s, d))).persist()
+        Similarity.nearestCentroid(col("embedding"), graphCents(s, d)))
     }
 
   /** Entry heads (min-id member per cell) — part of the served index's
-    * artifact, memoized per (dir, variant) so the fast path skips the
+    * artifact, memoized per variant so the fast path skips the
     * per-call aggregation job.
     */
-  private val graphHeadsMemo =
-    scala.collection.mutable.Map.empty[(String, String), Map[Long, Long]]
-  private def graphHeads(d: String, variant: String)
+  private def graphHeads(s: SparkSession, d: String, variant: String)
                         (corpus: => DataFrame): Map[Long, Long] =
-    graphHeadsMemo.synchronized {
-      graphHeadsMemo.getOrElseUpdate((d, variant),
-        corpus.select(col("gcell").cast("long").as("cell"), col("vec_id").as("n_id"))
-          .groupBy(col("cell")).agg(min(col("n_id")).as("n_id"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    Memo.value(s, d, s"graphHeads/$variant") {
+      corpus.select(col("gcell").cast("long").as("cell"), col("vec_id").as("n_id"))
+        .groupBy(col("cell")).agg(min(col("n_id")).as("n_id"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
 
-  private val graphMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  /** The kNN edge relation (src, dst, rank): the fused relation below
+    * without its payload column. Only the fused relation is persisted;
+    * its inner join on dst = vec_id keeps every edge, since every dst is
+    * a corpus vector.
+    */
   private[graft] def knnGraphEdges(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(graphMemo, (s, d), "knnGraphEdges") {
-      // coalesce before persist: the edge relation exits its build
-      // shuffle in spark.sql.shuffle.partitions slivers, and every beam
-      // hop's point-lookup join would launch that many near-empty tasks
-      // per job (at serving scale the equivalent is the src-bucketed
-      // table's bucket count, sized to the cluster, not to one query)
-      Similarity.knnGraph(graphCorpus(s, d), "vec_id", "embedding", "gcell",
-        GraphProbeCells, GraphDegree,
-        centroids = Some(Similarity.localizeCentroids(s, graphCents(s, d))))
-        .coalesce(4).persist()
-    }
+    knnGraphEdgesFused(s, d).select(col("src"), col("dst"), col("rank"))
 
   /** Adjacency⋈vector FUSION (r22, VERDICT r21 Next #2 — the HNSW index
     * layout): each edge row carries its destination's vector, so a beam
@@ -1036,30 +1010,39 @@ object SimQueries {
     * previously every hop re-joined the edge relation into the corpus
     * (scanning both and building a join hash table per hop, 5× per
     * search across 7 serve keys + streaming graph_serve). Built once
-    * per (session, dir) from the memoized edges and vertex table; the
-    * 24× payload duplication is the standard graph-index trade (at
-    * serving scale this is the src-bucketed fused table the index build
-    * job writes). Row-identical by construction: fetchHop's per-hop
-    * join produced exactly these (src, dst, __vec) rows.
+    * per (session, dir) from the edge build and the memoized vertex
+    * table; the 24× payload duplication is the standard graph-index
+    * trade (at serving scale this is the src-bucketed fused table the
+    * index build job writes).
     */
-  private val graphFusedMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private[graft] def knnGraphEdgesFused(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(graphFusedMemo, (s, d), "knnGraphEdgesFused") {
-      knnGraphEdges(s, d)
-        .join(graphCorpus(s, d)
-          .select(col("vec_id").cast("long").as("dst"), col("embedding").as("__vec")),
-          Seq("dst"))
-        .select(col("src"), col("dst"), col("__vec"))
-        .coalesce(4).persist()
+  private[graft] def knnGraphEdgesFused(s: SparkSession, d: String): DataFrame = {
+    val corpus = graphCorpus(s, d)
+    Memo.relation(s, d, "knnGraphEdgesFused") {
+      fuseEdges(Similarity.knnGraph(corpus, "vec_id", "embedding", "gcell",
+        GraphProbeCells, GraphDegree,
+        centroids = Some(Similarity.localizeCentroids(s, graphCents(s, d)))), corpus)
     }
+  }
+
+  /** Edge rows (src, dst, rank) with the destination's vector as
+    * `__vec`. Coalesced: the edge build exits its shuffle in
+    * spark.sql.shuffle.partitions slivers, and every beam hop's
+    * point-lookup join would launch that many near-empty tasks per job
+    * (at serving scale the equivalent is the src-bucketed table's bucket
+    * count, sized to the cluster, not to one query).
+    */
+  private def fuseEdges(edges: DataFrame, corpus: DataFrame): DataFrame =
+    edges.join(corpus.select(col("vec_id").cast("long").as("dst"), col("embedding").as("__vec")),
+        Seq("dst"))
+      .select(col("src"), col("dst"), col("rank"), col("__vec"))
+      .coalesce(4)
 
   def annGraphTopk(s: SparkSession, d: String): DataFrame =
     Similarity.graphBeamSearch(graphCorpus(s, d), "vec_id", "embedding", "gcell",
         knnGraphEdgesFused(s, d), col("vec_id") < 10,
         GraphEntryCells, GraphBeam, GraphHops, GraphK,
         centroids = Some(Similarity.localizeCentroids(s, graphCents(s, d))),
-        localHeads = Some(graphHeads(d, "full")(graphCorpus(s, d))),
+        localHeads = Some(graphHeads(s, d, "full")(graphCorpus(s, d))),
         localCents = Some(graphCents(s, d)))
       .orderBy(col("q_id"), col("rank"))
 
@@ -1093,22 +1076,12 @@ object SimQueries {
   // round-trip parquet bit-exactly; AnnGraphSpec pins the equality), so
   // the oracle is the same re-derived CTE chain.
   // ========================================================================
-  private val graphTableMemo = scala.collection.mutable.Map.empty[String, String]
   private[graft] def graphEdgeTable(s: SparkSession, d: String): String =
-    graphTableMemo.synchronized {
-      // memo records a CATALOG side effect: a fresh session in this JVM
-      // must re-verify the table exists before trusting the memo (the
-      // RelationMemo two-session contract)
-      graphTableMemo.get(d).filter(s.catalog.tableExists)
-        .getOrElse {
-          MemoTrace.built("graphEdgeTable")
-          val t = s"graft_graph_edges_${MemoNames.dirSuffix(d)}"
-          graft.operators.Scale.writeBucketed(
-            knnGraphEdges(s, d), t, "src", 8)
-          graphTableMemo(d) = t
-          t
-        }
-    }
+    Memo.tables(s, d, "graphEdgeTable") {
+      val t = s"graft_graph_edges_${MemoNames.dirSuffix(d)}"
+      graft.operators.Scale.writeBucketed(knnGraphEdges(s, d), t, "src", 8)
+      Seq(t)
+    }.head
 
   /** The serving session's in-memory fusion of the persisted artifact
     * (r22): the reloaded src-bucketed edge table joined ONCE with the
@@ -1118,16 +1091,14 @@ object SimQueries {
     * process. The persisted artifact itself stays (src, dst): payload
     * co-location is a serve-time layout, not a second copy on disk.
     */
-  private val graphTableFusedMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[graft] def graphEdgeTableFused(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(graphTableFusedMemo, (s, d), "graphEdgeTableFused") {
+    Memo.relation(s, d, "graphEdgeTableFused") {
       s.table(graphEdgeTable(s, d))
         .join(graphCorpus(s, d)
           .select(col("vec_id").cast("long").as("dst"), col("embedding").as("__vec")),
           Seq("dst"))
         .select(col("src"), col("dst"), col("__vec"))
-        .coalesce(4).persist()
+        .coalesce(4)
     }
 
   def annGraphPersisted(s: SparkSession, d: String): DataFrame =
@@ -1135,7 +1106,7 @@ object SimQueries {
         graphEdgeTableFused(s, d), col("vec_id") < 10,
         GraphEntryCells, GraphBeam, GraphHops, GraphK,
         centroids = Some(Similarity.localizeCentroids(s, graphCents(s, d))),
-        localHeads = Some(graphHeads(d, "full")(graphCorpus(s, d))),
+        localHeads = Some(graphHeads(s, d, "full")(graphCorpus(s, d))),
         localCents = Some(graphCents(s, d)))
       .orderBy(col("q_id"), col("rank"))
 
@@ -1162,74 +1133,60 @@ object SimQueries {
   // increment fixture), with every LEARNING CTE restricted to the base
   // slice.
   // ========================================================================
-  private val graphAppendPlanesMemo = scala.collection.mutable.Map.empty[String, Int]
   private[graft] def graphAppendPlanes(s: SparkSession, d: String): Int =
-    graphAppendPlanesMemo.synchronized {
-      graphAppendPlanesMemo.getOrElseUpdate(d,
-        Similarity.adaptivePlanes(emb(s, d).filter(expr(AppendBaseWhere)).count()))
+    Memo.value(s, d, "graphAppendPlanes") {
+      Similarity.adaptivePlanes(emb(s, d).filter(expr(AppendBaseWhere)).count())
     }
 
   /** Frozen base-slice quantizer of the append path (memoized like
-    * kmCentroids — the learning slice differs, so it has its own map).
+    * kmCentroids — the learning slice differs, so it has its own label).
     */
-  private val graphAppendCentsMemo =
-    scala.collection.mutable.Map.empty[String, Seq[Similarity.Centroid]]
   private[graft] def graphAppendCents(s: SparkSession, d: String): Seq[Similarity.Centroid] =
-    graphAppendCentsMemo.synchronized {
-      graphAppendCentsMemo.getOrElseUpdate(d, {
-        MemoTrace.built("graphAppendCents")
-        Similarity.collectCentroids(
-          Similarity.kmeansCentroids(emb(s, d).filter(expr(AppendBaseWhere)),
-            "embedding", graphAppendPlanes(s, d), GraphIters))
-      })
+    Memo.value(s, d, "graphAppendCents") {
+      Similarity.collectCentroids(
+        Similarity.kmeansCentroids(emb(s, d).filter(expr(AppendBaseWhere)),
+          "embedding", graphAppendPlanes(s, d), GraphIters))
     }
 
   /** Full corpus under the FROZEN base-learned quantizer (memoized +
     * persisted like [[graphCorpus]] — the appended index's vertex table).
     */
-  private val graphAppendCorpusMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def graphAppendCorpus(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(graphAppendCorpusMemo, (s, d), "graphAppendCorpus") {
+    Memo.relation(s, d, "graphAppendCorpus") {
       emb(s, d).withColumn("gcell",
-        Similarity.nearestCentroid(col("embedding"), graphAppendCents(s, d))).persist()
+        Similarity.nearestCentroid(col("embedding"), graphAppendCents(s, d)))
     }
 
-  private val graphAppendMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  /** The repaired edge relation (src, dst, rank) of the appended index:
+    * [[graphAppendEdgesFused]] without its payload, as for
+    * [[knnGraphEdges]].
+    */
   private[graft] def graphAppendEdges(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(graphAppendMemo, (s, d), "graphAppendEdges") {
+    graphAppendEdgesFused(s, d).select(col("src"), col("dst"), col("rank"))
+
+  /** [[knnGraphEdgesFused]] for the appended index: repaired
+    * edges fused with the frozen-quantizer vertex table.
+    */
+  private[graft] def graphAppendEdgesFused(s: SparkSession, d: String): DataFrame = {
+    val full = graphAppendCorpus(s, d)
+    Memo.relation(s, d, "graphAppendEdgesFused") {
       val cents = Similarity.localizeCentroids(s, graphAppendCents(s, d))
-      val full = graphAppendCorpus(s, d)
       val base = full.filter(expr(AppendBaseWhere))
       // the pre-existing index: base-only edges under the frozen quantizer
       val baseEdges = Similarity.knnGraph(base, "vec_id", "embedding", "gcell",
         GraphProbeCells, GraphDegree, centroids = Some(cents))
-      Similarity.knnGraphAppend(full, "vec_id", "embedding", "gcell",
+      fuseEdges(Similarity.knnGraphAppend(full, "vec_id", "embedding", "gcell",
         GraphProbeCells, GraphDegree, cents, baseEdges,
-        isBase = expr(AppendBaseWhere)).coalesce(4).persist()
+        isBase = expr(AppendBaseWhere)), full)
     }
-
-  /** [[knnGraphEdgesFused]] for the appended index (r22): repaired
-    * edges fused with the frozen-quantizer vertex table.
-    */
-  private val graphAppendFusedMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private[graft] def graphAppendEdgesFused(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(graphAppendFusedMemo, (s, d), "graphAppendEdgesFused") {
-      graphAppendEdges(s, d)
-        .join(graphAppendCorpus(s, d)
-          .select(col("vec_id").cast("long").as("dst"), col("embedding").as("__vec")),
-          Seq("dst"))
-        .select(col("src"), col("dst"), col("__vec"))
-        .coalesce(4).persist()
-    }
+  }
 
   def annGraphAppend(s: SparkSession, d: String): DataFrame =
     Similarity.graphBeamSearch(graphAppendCorpus(s, d), "vec_id", "embedding", "gcell",
         graphAppendEdgesFused(s, d), col("vec_id") < 10,
         GraphEntryCells, GraphBeam, GraphHops, GraphK,
         centroids = Some(Similarity.localizeCentroids(s, graphAppendCents(s, d))),
-        localHeads = Some(graphHeads(d, "append")(graphAppendCorpus(s, d))),
+        localHeads = Some(graphHeads(s, d, "append")(graphAppendCorpus(s, d))),
         localCents = Some(graphAppendCents(s, d)))
       .orderBy(col("q_id"), col("rank"))
 
@@ -1344,7 +1301,7 @@ object SimQueries {
     // complete when the call returns; its DataFrame result is unused
     Similarity.graphBeamSearchLocal(graphCorpus(s, d), "vec_id", "embedding", "gcell",
       knnGraphEdgesFused(s, d), qs, GraphEntryCells, GraphBeam, GraphHops, GraphK,
-      graphCents(s, d), Some(graphHeads(d, "full")(graphCorpus(s, d))),
+      graphCents(s, d), Some(graphHeads(s, d, "full")(graphCorpus(s, d))),
       hopTrace = Some(trace))
     // ORACLE SEMANTICS, pinned exactly: queries whose final beam is
     // empty drop out of n_queries (the SQL counts DISTINCT q_id over
@@ -1410,17 +1367,14 @@ object SimQueries {
   // identities (the keep path ≡ ann_graph_append; the policy arithmetic
   // itself is pinned by the shared rebalancePolicyFires tests).
   // ========================================================================
-  private val graphRebalFiredMemo = scala.collection.mutable.Map.empty[String, Boolean]
   private[graft] def graphRebalanceFired(s: SparkSession, d: String): Boolean =
-    graphRebalFiredMemo.synchronized {
-      graphRebalFiredMemo.getOrElseUpdate(d, {
-        val cnt = graphAppendCorpus(s, d).groupBy(col("gcell"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(expr(AppendBaseWhere), 0L).otherwise(1L)).as("n_inc"))
-          .collect()
-        rebalancePolicyFires(cnt.map(_.getAs[Long]("n")).toSeq,
-          cnt.map(_.getAs[Long]("n_inc")).sum)
-      })
+    Memo.value(s, d, "graphRebalanceFired") {
+      val cnt = graphAppendCorpus(s, d).groupBy(col("gcell"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(expr(AppendBaseWhere), 0L).otherwise(1L)).as("n_inc"))
+        .collect()
+      rebalancePolicyFires(cnt.map(_.getAs[Long]("n")).toSeq,
+        cnt.map(_.getAs[Long]("n_inc")).sum)
     }
 
   def annGraphRebalance(s: SparkSession, d: String): DataFrame =
@@ -1452,7 +1406,7 @@ object SimQueries {
       "gcell", knnGraphEdgesFused(s, d), col("vec_id") < 10,
       GraphEntryCells, GraphBeam, GraphHops, k = GraphBeam,
       centroids = Some(Similarity.localizeCentroids(s, graphCents(s, d))),
-      localHeads = Some(graphHeads(d, "full")(graphCorpus(s, d))),
+      localHeads = Some(graphHeads(s, d, "full")(graphCorpus(s, d))),
       localCents = Some(graphCents(s, d)))
     val lbl = emb(s, d).select(col("vec_id"), col("label"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("rank"))
@@ -1503,7 +1457,7 @@ object SimQueries {
     Similarity.graphBeamSearchLocal(graphCorpus(s, d), "vec_id", "embedding",
       "gcell", graphEdgeTableFused(s, d), qs,
       GraphEntryCells, GraphBeam, GraphHops, GraphK,
-      graphCents(s, d), Some(graphHeads(d, "full")(graphCorpus(s, d))))
+      graphCents(s, d), Some(graphHeads(s, d, "full")(graphCorpus(s, d))))
   }
 
   /** STREAMING SERVE for the persisted IVF index — the graph_serve
@@ -1522,16 +1476,12 @@ object SimQueries {
     */
   def ivfServeBatch(s: SparkSession, d: String, batch: DataFrame): DataFrame = {
     val (centT, corpT) = ivfIndexTables(s, d)
-    val loaded = ivfServeCentMemo.synchronized {
-      ivfServeCentMemo.getOrElseUpdate((d, centT), Similarity.loadCentroids(s, centT))
-    }
+    val loaded = Memo.value(s, d, "ivfServeCentroids")(Similarity.loadCentroids(s, centT))
     Similarity.ivfServe(s.table(corpT), "vec_id", "embedding", "kcell",
       batch.select(col("vec_id").cast("long").as("q_id"), col("embedding").as("q_vec")),
       k = 5, nProbe = Similarity.adaptiveNProbe(loaded.size),
       cent = Similarity.localizeCentroids(s, loaded))
   }
-  private val ivfServeCentMemo =
-    scala.collection.mutable.Map.empty[(String, String), Seq[Similarity.Centroid]]
 
   /** Streaming graph-index ADMISSION — the online stage of
     * [[annGraphAppend]]: each arriving vector is assigned its primary
@@ -1761,20 +1711,13 @@ object SimQueries {
     * consumers share ONE learning pass per configuration —
     * `ann_ivf_kmeans` and `ann_recall_kmeans` used to each rerun
     * identical learning (~0.5 s of duplicate corpus passes per bench
-    * lap). Values are plain data (no persisted plans → no session
-    * lifecycle to manage, unlike the dedup pipeline memo); the map stays
-    * bounded by the handful of (dir, config) pairs a process ever sees.
+    * lap).
     */
-  private val kmMemo =
-    scala.collection.mutable.Map.empty[(String, Int, Int), Seq[Similarity.Centroid]]
   private[graft] def kmCentroids(s: SparkSession, d: String,
                           planes: Int, iters: Int): Seq[Similarity.Centroid] =
-    kmMemo.synchronized {
-      kmMemo.getOrElseUpdate((d, planes, iters), {
-        MemoTrace.built("kmCentroids")
-        Similarity.collectCentroids(
-          Similarity.kmeansCentroids(emb(s, d), "embedding", planes, iters))
-      })
+    Memo.value(s, d, s"kmCentroids/$planes/$iters") {
+      Similarity.collectCentroids(
+        Similarity.kmeansCentroids(emb(s, d), "embedding", planes, iters))
     }
 
   def annIvfKmeans(s: SparkSession, d: String): DataFrame = {
@@ -1807,35 +1750,27 @@ object SimQueries {
   // bit-exactly; AnnPersistSpec pins top-k equality) and the oracle is
   // the adaptive re-learned pipeline.
   // ========================================================================
-  private val ivfIndexMemo = scala.collection.mutable.Map.empty[String, (String, String)]
-  private[graft] def ivfIndexTables(s: SparkSession, d: String): (String, String) =
-    ivfIndexMemo.synchronized {
-      // the memo is keyed by dir but records CATALOG tables: a second
-      // SparkSession in the same JVM has a fresh in-memory catalog, so
-      // a memo hit must re-verify the tables actually exist there
-      ivfIndexMemo.get(d)
-        .filter { case (c, t) => s.catalog.tableExists(c) && s.catalog.tableExists(t) }
-        .getOrElse {
-          MemoTrace.built("ivfIndexTables")
-          // per-dir table names: indexes for different corpora coexist
-          val suffix = MemoNames.dirSuffix(d)
-          val centT = s"graft_ivf_centroids_$suffix"
-          val corpT = s"graft_ivf_corpus_$suffix"
-          val cents = graphCents(s, d)
-          Similarity.saveCentroids(s, cents, centT)
-          graft.operators.Scale.writeBucketed(
-            emb(s, d).withColumn("kcell",
-              Similarity.nearestCentroid(col("embedding"), cents)),
-            corpT, "kcell", 8)
-          ivfIndexMemo(d) = (centT, corpT)
-          // r21 (ADVICE low): a REBUILD of the centroid table must drop
-          // any cached collected codebook for it — streaming ivf_serve
-          // would otherwise keep probing with the stale codebook against
-          // the freshly-written corpus table
-          ivfServeCentMemo.synchronized { ivfServeCentMemo.remove((d, centT)) }
-          (centT, corpT)
-        }
+  private[graft] def ivfIndexTables(s: SparkSession, d: String): (String, String) = {
+    val Seq(centT, corpT) = Memo.tables(s, d, "ivfIndexTables") {
+      // per-dir table names: indexes for different corpora coexist
+      val suffix = MemoNames.dirSuffix(d)
+      val centT = s"graft_ivf_centroids_$suffix"
+      val corpT = s"graft_ivf_corpus_$suffix"
+      val cents = graphCents(s, d)
+      Similarity.saveCentroids(s, cents, centT)
+      graft.operators.Scale.writeBucketed(
+        emb(s, d).withColumn("kcell",
+          Similarity.nearestCentroid(col("embedding"), cents)),
+        corpT, "kcell", 8)
+      // a REBUILD of the centroid table must drop
+      // any cached collected codebook for it — streaming ivf_serve
+      // would otherwise keep probing with the stale codebook against
+      // the freshly-written corpus table
+      Memo.invalidate(s, d, "ivfServeCentroids")
+      Seq(centT, corpT)
     }
+    (centT, corpT)
+  }
 
   def annIvfPersisted(s: SparkSession, d: String): DataFrame = {
     val (centT, corpT) = ivfIndexTables(s, d)
@@ -1869,37 +1804,28 @@ object SimQueries {
   // ========================================================================
   private val AppendBaseWhere = "vec_id % 5 <> 4"
 
-  private val ivfAppendMemo = scala.collection.mutable.Map.empty[String, (String, String)]
-  private[graft] def ivfAppendTables(s: SparkSession, d: String): (String, String) =
-    ivfAppendMemo.synchronized {
-      // same catalog-existence re-check as ivfIndexTables: a fresh
-      // session in this JVM must rebuild, not trust the memo
-      ivfAppendMemo.get(d)
-        .filter { case (c, t) => s.catalog.tableExists(c) && s.catalog.tableExists(t) }
-        .getOrElse(ivfAppendBuild(s, d))
+  private[graft] def ivfAppendTables(s: SparkSession, d: String): (String, String) = {
+    val Seq(centT, corpT) = Memo.tables(s, d, "ivfAppendTables") {
+      val suffix = MemoNames.dirSuffix(d)
+      val centT = s"graft_ivfadd_centroids_$suffix"
+      val corpT = s"graft_ivfadd_corpus_$suffix"
+      val base = emb(s, d).filter(expr(AppendBaseWhere))
+      val cents = graphAppendCents(s, d)
+      Similarity.saveCentroids(s, cents, centT)
+      graft.operators.Scale.writeBucketed(
+        base.withColumn("kcell",
+          Similarity.nearestCentroid(col("embedding"), cents)),
+        corpT, "kcell", 8)
+      // the incremental step: assign the NEW slice against the
+      // RELOADED codebook (no re-learning) and append in place
+      val loaded = Similarity.loadCentroids(s, centT)
+      graft.operators.Scale.appendBucketed(
+        emb(s, d).filter(not(expr(AppendBaseWhere)))
+          .withColumn("kcell",
+            Similarity.nearestCentroid(col("embedding"), loaded)),
+        corpT, "kcell", 8)
+      Seq(centT, corpT)
     }
-
-  private def ivfAppendBuild(s: SparkSession, d: String): (String, String) = {
-    MemoTrace.built("ivfAppendTables")
-    val suffix = MemoNames.dirSuffix(d)
-    val centT = s"graft_ivfadd_centroids_$suffix"
-    val corpT = s"graft_ivfadd_corpus_$suffix"
-    val base = emb(s, d).filter(expr(AppendBaseWhere))
-    val cents = graphAppendCents(s, d)
-    Similarity.saveCentroids(s, cents, centT)
-    graft.operators.Scale.writeBucketed(
-      base.withColumn("kcell",
-        Similarity.nearestCentroid(col("embedding"), cents)),
-      corpT, "kcell", 8)
-    // the incremental step: assign the NEW slice against the
-    // RELOADED codebook (no re-learning) and append in place
-    val loaded = Similarity.loadCentroids(s, centT)
-    graft.operators.Scale.appendBucketed(
-      emb(s, d).filter(not(expr(AppendBaseWhere)))
-        .withColumn("kcell",
-          Similarity.nearestCentroid(col("embedding"), loaded)),
-      corpT, "kcell", 8)
-    ivfAppendMemo(d) = (centT, corpT)
     (centT, corpT)
   }
 
@@ -1982,42 +1908,35 @@ object SimQueries {
     skew > RebalSkewMax || nAppended.toDouble / total > RebalIncFracMax
   }
 
-  private val ivfRebalMemo = scala.collection.mutable.Map.empty[String, (String, String)]
   /** (centroids table, corpus table) after applying the rebalance
     * policy to the appended index — fresh `ivfreb` tables when the
     * policy fired, the append tables unchanged otherwise. Exposed for
     * the spec, which asserts which path fired.
     */
-  private[graft] def ivfRebalanceTables(s: SparkSession, d: String): (String, String) =
-    ivfRebalMemo.synchronized {
-      ivfRebalMemo.get(d)
-        .filter { case (c, t) => s.catalog.tableExists(c) && s.catalog.tableExists(t) }
-        .getOrElse {
-          MemoTrace.built("ivfRebalanceTables")
-          val (baseCentT, baseCorpT) = ivfAppendTables(s, d)
-          val cnt = s.table(baseCorpT).groupBy(col("kcell"))
-            .agg(count(lit(1)).as("n"),
-              sum(when(expr(AppendBaseWhere), 0L).otherwise(1L)).as("n_inc"))
-            .collect()
-          val ns = cnt.map(_.getAs[Long]("n")).toSeq
-          val nAppended = cnt.map(_.getAs[Long]("n_inc")).sum
-          val t =
-            if (rebalancePolicyFires(ns, nAppended)) {
-              val suffix = MemoNames.dirSuffix(d)
-              val centT = s"graft_ivfreb_centroids_$suffix"
-              val corpT = s"graft_ivfreb_corpus_$suffix"
-              val cents = graphCents(s, d)
-              Similarity.saveCentroids(s, cents, centT)
-              graft.operators.Scale.writeBucketed(
-                emb(s, d).withColumn("kcell",
-                  Similarity.nearestCentroid(col("embedding"), cents)),
-                corpT, "kcell", 8)
-              (centT, corpT)
-            } else (baseCentT, baseCorpT)
-          ivfRebalMemo(d) = t
-          t
-        }
+  private[graft] def ivfRebalanceTables(s: SparkSession, d: String): (String, String) = {
+    val Seq(centT, corpT) = Memo.tables(s, d, "ivfRebalanceTables") {
+      val (baseCentT, baseCorpT) = ivfAppendTables(s, d)
+      val cnt = s.table(baseCorpT).groupBy(col("kcell"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(expr(AppendBaseWhere), 0L).otherwise(1L)).as("n_inc"))
+        .collect()
+      val ns = cnt.map(_.getAs[Long]("n")).toSeq
+      val nAppended = cnt.map(_.getAs[Long]("n_inc")).sum
+      if (rebalancePolicyFires(ns, nAppended)) {
+        val suffix = MemoNames.dirSuffix(d)
+        val centT = s"graft_ivfreb_centroids_$suffix"
+        val corpT = s"graft_ivfreb_corpus_$suffix"
+        val cents = graphCents(s, d)
+        Similarity.saveCentroids(s, cents, centT)
+        graft.operators.Scale.writeBucketed(
+          emb(s, d).withColumn("kcell",
+            Similarity.nearestCentroid(col("embedding"), cents)),
+          corpT, "kcell", 8)
+        Seq(centT, corpT)
+      } else Seq(baseCentT, baseCorpT)
     }
+    (centT, corpT)
+  }
 
   def annIvfRebalance(s: SparkSession, d: String): DataFrame = {
     val (centT, corpT) = ivfRebalanceTables(s, d)
@@ -2225,22 +2144,14 @@ object SimQueries {
   private val PqIters = 1
   private val PqShortlist = 100
 
-  /** Per-(dir, subspace) codebook memo — same contract as [[kmMemo]]:
-    * plain collected data, bounded by the few (dir, j) pairs a process
-    * sees.
-    */
-  private val pqMemo =
-    scala.collection.mutable.Map.empty[(String, Int), Seq[Similarity.Centroid]]
+  /** Per-subspace codebook memo — same contract as [[kmCentroids]]. */
   private def pqCentroids(s: SparkSession, d: String, j: Int): Seq[Similarity.Centroid] =
-    pqMemo.synchronized {
-      pqMemo.getOrElseUpdate((d, j), {
-        MemoTrace.built("pqCentroids")
-        Similarity.collectCentroids(
-          Similarity.kmeansCentroids(
-            emb(s, d).select(
-              slice(col("embedding"), j * PqSubDim + 1, PqSubDim).as("sub")),
-            "sub", PqPlanes, PqIters))
-      })
+    Memo.value(s, d, s"pqCentroids/$j") {
+      Similarity.collectCentroids(
+        Similarity.kmeansCentroids(
+          emb(s, d).select(
+            slice(col("embedding"), j * PqSubDim + 1, PqSubDim).as("sub")),
+          "sub", PqPlanes, PqIters))
     }
 
   /** The PQ encode+decode stage: corpus → (n_id, recon) where recon is
@@ -2477,12 +2388,8 @@ object SimQueries {
     * index build, the review-flagged multiplier on the dominant encode
     * cost at scale).
     */
-  private val ivfPqResidMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private def ivfPqResiduals(s: SparkSession, d: String): DataFrame = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    ivfPqResidMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val v = ivfPqResidMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("ivfPqResiduals")
+  private def ivfPqResiduals(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "ivfPqResiduals") {
       val coarse = graphCents(s, d)
       val coarseMap = typedLit(coarse.map(c => c.cell -> c.cvec).toMap)
       emb(s, d)
@@ -2490,32 +2397,20 @@ object SimQueries {
         .withColumn("resid", zip_with(col("embedding"),
           element_at(coarseMap, col("kcell")),
           (x, c) => x.cast("double") - c))
-        .persist()
-    })
-    if (v.storageLevel == StorageLevel.NONE) {
-      MemoTrace.built("ivfPqResiduals:repersist")
-      v.persist()
     }
-    v
-  }
 
-  /** Per-(dir, subspace) RESIDUAL codebook memo — the [[pqMemo]] contract
+  /** Per-subspace RESIDUAL codebook memo — the [[pqCentroids]] contract
     * applied to the residual space (global codebooks across cells, the
     * standard IVFADC layout — per-cell codebooks would need cells×
     * subspaces tables for marginal gain on isotropic data).
     */
-  private val ivfPqMemo =
-    scala.collection.mutable.Map.empty[(String, Int), Seq[Similarity.Centroid]]
   private[graft] def ivfPqCentroids(s: SparkSession, d: String, j: Int): Seq[Similarity.Centroid] =
-    ivfPqMemo.synchronized {
-      ivfPqMemo.getOrElseUpdate((d, j), {
-        MemoTrace.built("ivfPqCentroids")
-        Similarity.collectCentroids(
-          Similarity.kmeansCentroids(
-            ivfPqResiduals(s, d).select(
-              slice(col("resid"), j * PqSubDim + 1, PqSubDim).as("sub")),
-            "sub", PqPlanes, PqIters))
-      })
+    Memo.value(s, d, s"ivfPqCentroids/$j") {
+      Similarity.collectCentroids(
+        Similarity.kmeansCentroids(
+          ivfPqResiduals(s, d).select(
+            slice(col("resid"), j * PqSubDim + 1, PqSubDim).as("sub")),
+          "sub", PqPlanes, PqIters))
     }
 
   /** The PERSISTABLE index payload: corpus → (vec_id, cell, rcode0..3)

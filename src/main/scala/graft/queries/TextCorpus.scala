@@ -118,21 +118,19 @@ object TextCorpus {
   private val ZipfK = 64
 
   /** Per-source top-K vocabulary sets (|sources|·K rows), memoized per
-    * (session, dir) + persisted (the RelationMemo contract) — three
+    * (session, dir) + persisted ([[Memo]]) — three
     * consumers in one query tree (sizes + both intersection sides)
     * would otherwise each re-run the corpus count shuffle, and repeat
     * invocations (Verify, Bench laps, specs) would pile up anonymous
     * pinned copies.
     */
-  private val vocabTopkMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   /** Per-source ranked vocabulary head (source, w, c, rn), rn ≤ the
     * LARGEST head any consumer needs (ZipfK) — `vocab_overlap` slices
     * rn ≤ 15, `zipf_fit` reads all 64 — so one corpus count shuffle and
     * one |sources|·64-row persisted relation serve both families.
     */
   private def vocabRanked(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(vocabTopkMemo, (s, d), "vocabTopk") {
+    Memo.relation(s, d, "vocabTopk") {
       val cnt = docs(s, d)
         .select(col("source"), explode(TextOps.tokens(col("text"))).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
@@ -140,7 +138,6 @@ object TextCorpus {
         .orderBy(col("c").desc, col("w"))
       cnt.withColumn("rn", row_number().over(bySrc))
         .filter(col("rn") <= ZipfK)
-        .persist()
     }
   private def vocabTopk(s: SparkSession, d: String): DataFrame =
     vocabRanked(s, d).filter(col("rn") <= VocabOverlapK)
@@ -344,23 +341,15 @@ object TextCorpus {
   // n_distinct_base + |increment grams ∉ base|, over the same
   // doc_id % 3 slice convention the data-card refresh uses).
   // ========================================================================
-  // dedicated monitor: the base build runs a corpus-scale Spark job —
-  // holding the shared TextQueries lock for it would serialize every
-  // unrelated synchronized path in the object (the textClusterLabels
-  // lesson); this lock only ever serializes diversity-base publishers
-  private[this] val divBaseLock = new Object
   private[graft] def diversityBaseTable(s: SparkSession, d: String): String =
-    divBaseLock.synchronized {
+    Memo.tables(s, d, "diversityBaseTable") {
       val t = s"graft_div_base_${MemoNames.dirSuffix(d)}"
-      if (!s.catalog.tableExists(t)) {
-        MemoTrace.built("diversityBaseTable")
-        graft.operators.Scale.saveTable(
-          gramRelation(docs(s, d).filter(expr(TextQueries.CardBaseWhere)))
-            .groupBy(col("source"), col("n"), col("g"))
-            .agg(count(lit(1)).as("c")), t)
-      }
-      t
-    }
+      graft.operators.Scale.saveTable(
+        gramRelation(docs(s, d).filter(expr(TextQueries.CardBaseWhere)))
+          .groupBy(col("source"), col("n"), col("g"))
+          .agg(count(lit(1)).as("c")), t)
+      Seq(t)
+    }.head
 
   def corpusDiversityIncremental(s: SparkSession, d: String): DataFrame = {
     val base = s.table(diversityBaseTable(s, d))

@@ -100,12 +100,10 @@ object TextEval {
     * memo is batch-side reuse only, semantics shared via the one
     * definition.
     */
-  private val ruleFlagsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def ruleFlagsCore(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(ruleFlagsMemo, (s, d), "ruleFlagsCore") {
+    Memo.relation(s, d, "ruleFlagsCore") {
       qualityRuleFlags(docs(s, d).select(col("doc_id"), col("source"), col("text")))
-        .drop("text").persist()
+        .drop("text")
     }
 
   def qualityRulesReport(s: SparkSession, d: String): DataFrame = {

@@ -52,9 +52,8 @@ object TextLm {
     * `pipeline_dsir` (the selection report): the llr table and the
     * token-explosion join run once per corpus.
     */
-  private val dsirMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def dsirPerDoc(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(dsirMemo, (s, d), "dsirWeights") {
+    Memo.relation(s, d, "dsirWeights") {
       val corpus = TextQueries.unigramCounts(s, d)
       val tgt = docs(s, d).filter(col("lang") === DsirTargetLang)
         .select(explode(TextOps.tokens(col("text"))).as("w"))
@@ -86,7 +85,6 @@ object TextLm {
         .select(col("doc_id"), col("source"),
           coalesce(col("n_tok"), lit(0L)).as("n_tok"),
           coalesce(col("logw_e4"), lit(0L)).as("logw_e4"))
-        .persist()
     }
 
   def dsirWeight(s: SparkSession, d: String): DataFrame =
@@ -203,9 +201,6 @@ object TextLm {
   //    broadcast thresholds per lang; graft.streaming.StreamingCurate).
   // Population = LM-scorable docs (≥ 2 tokens), the lm_score contract.
   // ========================================================================
-  private val ccnetMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   /** The value-group tertile map of any (lang, mean_nll_e4, ...) frame:
     * (lang, mean_nll_e4, bucket), bucket(v) = (3·cum_before(v)) div
     * n_lang over per-lang value groups — ONE definition of the CCNet
@@ -237,14 +232,13 @@ object TextLm {
     * [[ccnetSketchThresholds]] — but share [[ccnetTertiles]].)
     */
   private[graft] def ccnetCore(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(ccnetMemo, (s, d), "ccnetBuckets") {
+    Memo.relation(s, d, "ccnetBuckets") {
       val lm = TextQueries.lmScoreCore(s, d).select(col("doc_id"), col("n_bg"),
         expr(ExactRound.spark("nll_sum_e4", "n_bg")).as("mean_nll_e4"))
       val ld = lm.join(docs(s, d).select(col("doc_id"), col("lang")), Seq("doc_id"))
       ld.join(ccnetTertiles(ld), Seq("lang", "mean_nll_e4"))
         .select(col("doc_id"), col("lang"), col("n_bg"),
           col("mean_nll_e4"), col("bucket"))
-        .persist()
     }
 
   /** The CMS sketch-scoring projection of any frame carrying `text`
@@ -379,14 +373,6 @@ object TextLm {
   private[queries] val BpeVocabTypes = 4096
   private[queries] val BpeMerges = 12
 
-  private val bpeMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), (Seq[(Long, String, String, String, Long)], Long)]
-  /** ((rank, w1, w2, merged, weighted count) merges, and the
-    * token-occurrence coverage of the capped type table in exact ppm) —
-    * the cap is a standard trainer bound but NEVER silent: coverage
-    * rides the query output so a reader sees what fraction of corpus
-    * tokens the learning actually saw (Zipf makes it ≈1 at any K).
-    */
   /** The in-process greedy merge loop over a collected type table —
     * pure function of the (word, count) array, shared by the full-corpus
     * learner and the base-slice twin `bpe_drift` compares against.
@@ -445,25 +431,27 @@ object TextLm {
     merges.toSeq
   }
 
+  /** ((rank, w1, w2, merged, weighted count) merges, and the
+    * token-occurrence coverage of the capped type table in exact ppm) —
+    * the cap is a standard trainer bound but NEVER silent: coverage
+    * rides the query output so a reader sees what fraction of corpus
+    * tokens the learning actually saw (Zipf makes it ≈1 at any K).
+    */
   private[queries] def bpeMergeList(s: SparkSession, d: String): (Seq[(Long, String, String, String, Long)], Long) =
-    synchronized {
-      bpeMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-      bpeMemo.getOrElseUpdate((s, d), {
-        MemoTrace.built("bpeMergeList")
-        // the type table rides the SHARED unigram-count memo (the
-        // collocations/text_rarity/lm relation) — no second corpus scan
-        val types = TextQueries.unigramCounts(s, d)
-          .orderBy(col("c").desc, col("w"))
-          .limit(BpeVocabTypes)
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        val totalTok = TextQueries.unigramCounts(s, d).agg(sum(col("c"))).first().getLong(0)
-        // BigInt: covered*1e6 overflows a long once head tokens pass
-        // ~9.2e12 — exactly the 100 TB regime; the oracle divides in
-        // HUGEINT for the same reason
-        val coverageE6 =
-          (BigInt(types.map(_._2).sum) * 1000000 / BigInt(totalTok)).toLong
-        (bpeMergesFrom(types), coverageE6)
-      })
+    Memo.value(s, d, "bpeMergeList") {
+      // the type table rides the SHARED unigram-count memo (the
+      // collocations/text_rarity/lm relation) — no second corpus scan
+      val types = TextQueries.unigramCounts(s, d)
+        .orderBy(col("c").desc, col("w"))
+        .limit(BpeVocabTypes)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val totalTok = TextQueries.unigramCounts(s, d).agg(sum(col("c"))).first().getLong(0)
+      // BigInt: covered*1e6 overflows a long once head tokens pass
+      // ~9.2e12 — exactly the 100 TB regime; the oracle divides in
+      // HUGEINT for the same reason
+      val coverageE6 =
+        (BigInt(types.map(_._2).sum) * 1000000 / BigInt(totalTok)).toLong
+      (bpeMergesFrom(types), coverageE6)
     }
 
   def bpeLearn(s: SparkSession, d: String): DataFrame = {

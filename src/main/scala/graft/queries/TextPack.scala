@@ -306,35 +306,30 @@ object TextPack {
   // codepoints, matching Spark substring/length and DuckDB substr/len;
   // SubwordSpec pins the multilingual fixtures).
   // ========================================================================
-  // keyed by (dir, data stamp): an in-place rewrite of the dir relearns
-  private val subwordMemo = scala.collection.mutable.Map.empty[(String, String), Set[String]]
   private[graft] def subwordVocab(s: SparkSession, d: String): Set[String] =
-    subwordMemo.synchronized {
-      subwordMemo.getOrElseUpdate((d, MemoNames.dataStamp(d)), {
-        MemoTrace.built("subwordVocab")
-        // The ≥1%-of-total-mass filter runs CLUSTER-SIDE against the
-        // broadcast one-row total, so the driver only ever collects the
-        // survivors — by construction ≤ 100 pieces (each holds ≥ 1% of
-        // the mass), regardless of charset. The full 2-gram histogram
-        // (charset² distinct pieces — 10⁶-10⁸ for a CJK/emoji-heavy web
-        // corpus) stays distributed; it is persisted for the duration of
-        // the two actions (total + filtered collect) so the corpus is
-        // scanned once.
-        val pieces = docs(s, d)
-          .select(explode(TextOps.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("piece"))
-          .groupBy(col("piece")).agg(count(lit(1)).as("cnt"))
-          .persist()
-        try {
-          val tot = pieces.agg(sum(col("cnt")).as("total"))
-          pieces.crossJoin(broadcast(tot))
-            .filter(col("cnt") * 100 >= col("total"))
-            .select(col("piece"))
-            .collect().map(_.getString(0)).toSet
-        } finally pieces.unpersist(false) // a failed action must not pin the histogram
-      })
+    Memo.value(s, d, "subwordVocab") {
+      // The ≥1%-of-total-mass filter runs CLUSTER-SIDE against the
+      // broadcast one-row total, so the driver only ever collects the
+      // survivors — by construction ≤ 100 pieces (each holds ≥ 1% of
+      // the mass), regardless of charset. The full 2-gram histogram
+      // (charset² distinct pieces — 10⁶-10⁸ for a CJK/emoji-heavy web
+      // corpus) stays distributed; it is persisted for the duration of
+      // the two actions (total + filtered collect) so the corpus is
+      // scanned once.
+      val pieces = docs(s, d)
+        .select(explode(TextOps.tokens(col("text"))).as("w"))
+        .filter(length(col("w")) >= 2)
+        .select(explode(expr(
+          "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("piece"))
+        .groupBy(col("piece")).agg(count(lit(1)).as("cnt"))
+        .persist()
+      try {
+        val tot = pieces.agg(sum(col("cnt")).as("total"))
+        pieces.crossJoin(broadcast(tot))
+          .filter(col("cnt") * 100 >= col("total"))
+          .select(col("piece"))
+          .collect().map(_.getString(0)).toSet
+      } finally pieces.unpersist(false) // a failed action must not pin the histogram
     }
 
   def tokenCountSubword(s: SparkSession, d: String): DataFrame =
@@ -694,25 +689,21 @@ object TextPack {
   private val EpochBaseWhere = "doc_id % 3 <> 0"
 
   private[graft] def epochFpTable(s: SparkSession, d: String): String =
-    synchronized {
+    Memo.tables(s, d, "epochFpTable") {
       val t = s"graft_epochplan_fp_${MemoNames.dirSuffix(d)}"
-      if (!s.catalog.tableExists(t)) {
-        MemoTrace.built("epochFpTable")
-        graft.operators.Scale.saveTable(
-          epochKeepFirst(epochDocFeatures(docs(s, d).filter(expr(EpochBaseWhere)))), t)
-      }
-      t
-    }
+      graft.operators.Scale.saveTable(
+        epochKeepFirst(epochDocFeatures(docs(s, d).filter(expr(EpochBaseWhere)))), t)
+      Seq(t)
+    }.head
 
-  private[graft] def epochBaseStatsTable(s: SparkSession, d: String): String =
-    synchronized {
+  private[graft] def epochBaseStatsTable(s: SparkSession, d: String): String = {
+    val fp = epochFpTable(s, d)
+    Memo.tables(s, d, "epochBaseStatsTable") {
       val t = s"graft_epochplan_stats_${MemoNames.dirSuffix(d)}"
-      if (!s.catalog.tableExists(t)) {
-        MemoTrace.built("epochBaseStatsTable")
-        graft.operators.Scale.saveTable(epochStats(s.table(epochFpTable(s, d))), t)
-      }
-      t
-    }
+      graft.operators.Scale.saveTable(epochStats(s.table(fp)), t)
+      Seq(t)
+    }.head
+  }
 
   /** The displacement-correct O(increment) stats merge — factored out of
     * [[epochPlanIncremental]] so the displacement branch (which the
@@ -869,23 +860,20 @@ object TextPack {
   // a data loader replays.
   //
   // Scale shape: the canonical inventory relation is built once and
-  // persisted (epochCanonMemo — RelationMemo contract); the per-source
+  // persisted (epochCanon, a [[Memo]] relation); the per-source
   // plan is ≤ |sources| rows and broadcasts onto it; the explode fans
   // out ≤ EpochMaxRepeat+1 rows per doc; ONE hashpartitioning(source,
   // epoch) exchange serves both the position window and the prefix
   // cumsum. Nothing corpus-sized crosses the driver.
   // ========================================================================
-  private val epochCanonMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   /** Canonical per-fingerprint inventory (doc_id, source, n, q_e6),
     * zero-token canonicals excluded — the allocator family's shared
     * base relation, persisted per (session, dir).
     */
   private def epochCanon(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(epochCanonMemo, (s, d), "epochCanon") {
+    Memo.relation(s, d, "epochCanon") {
       epochKeepFirst(epochDocFeatures(docs(s, d))).filter(col("n") > 0)
         .select(col("doc_id"), col("source"), col("n"), col("q_e6"))
-        .persist()
     }
 
   def epochOrder(s: SparkSession, d: String): DataFrame = {

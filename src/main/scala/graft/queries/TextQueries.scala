@@ -46,23 +46,12 @@ object TextQueries {
     * corpus to build the same (token, count) table). The 100 TB shape:
     * a vocabulary-statistics run computes corpus term counts once.
     */
-  private val uniMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private[queries] def unigramCounts(s: SparkSession, d: String): DataFrame = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    uniMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val v = uniMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("unigramCounts")
+  private[queries] def unigramCounts(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "unigramCounts") {
       docs(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
-        .persist()
-    })
-    if (v.storageLevel == StorageLevel.NONE) {
-      MemoTrace.built("unigramCounts:repersist")
-      v.persist()
     }
-    v
-  }
 
   // ========================================================================
   // text_stats — length/token statistics + stopword & lexical-diversity
@@ -402,17 +391,14 @@ object TextQueries {
     * relation serves both (the curateFullCore treatment for the
     * heuristic-only funnel).
     */
-  private val curateMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[queries] def pipelineCurateCore(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(curateMemo, (s, d), "curateCore") {
+    Memo.relation(s, d, "curateCore") {
       import org.apache.spark.sql.expressions.Window
       val feat = curateFeatures(docs(s, d))
       val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
       feat.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("doc_id"), col("source"), col("n_re"), col("score"))
-        .persist()
     }
 
   def pipelineCurate(s: SparkSession, d: String): DataFrame =
@@ -593,37 +579,25 @@ object TextQueries {
     * only docs with ≥ 1 benchmark hit — so caching it is bench-sized,
     * not corpus-sized, and safe at any scale.
     */
-  private val decontMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   /** Bench-slice (bench_id, grams) relation — bench-sized by definition
     * (1/DecontBenchMod of docs), persisted once per (session, dir) so the
     * corpus-screen build AND the evaluator report don't each re-run the
     * bench-side tokenize+shingle subtree (the report used to compute it
     * in two separate plan subtrees = a third full documents scan). */
-  private val decontBenchMemo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[queries] def decontBench(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(decontBenchMemo, (s, d), "decontBench") {
+    Memo.relation(s, d, "decontBench") {
       decontGrams(s, d, col("doc_id") % DecontBenchMod === 0)
-        .select(col("doc_id").as("bench_id"), col("grams")).persist()
+        .select(col("doc_id").as("bench_id"), col("grams"))
     }
-  private def decontHits(s: SparkSession, d: String): DataFrame = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    decontMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    val hits = decontMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("decontHits")
+  private def decontHits(s: SparkSession, d: String): DataFrame =
+    Memo.relation(s, d, "decontHits") {
       val bench = decontBench(s, d)
         .select(explode(col("grams")).as("gram")).distinct()
       decontGrams(s, d, col("doc_id") % DecontBenchMod =!= 0)
         .select(col("doc_id"), explode(col("grams")).as("gram"))
         .join(broadcast(bench), Seq("gram"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
-        .persist()
-    })
-    if (hits.storageLevel == StorageLevel.NONE) {
-      MemoTrace.built("decontHits:repersist")
-      hits.persist()
     }
-    hits
-  }
 
   def decontaminate(s: SparkSession, d: String): DataFrame =
     decontGrams(s, d, col("doc_id") % DecontBenchMod =!= 0)
@@ -690,20 +664,15 @@ object TextQueries {
     * is the 1/DecontBenchMod slice, and the count is an aggregate
     * action, not a collect).
     */
-  private val benchBloomMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), org.apache.spark.util.sketch.BloomFilter]
-  private[graft] def benchBloom(s: SparkSession, d: String): org.apache.spark.util.sketch.BloomFilter = synchronized {
-    benchBloomMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-    benchBloomMemo.getOrElseUpdate((s, d), {
-      MemoTrace.built("benchBloom")
+  private[graft] def benchBloom(s: SparkSession, d: String): org.apache.spark.util.sketch.BloomFilter =
+    Memo.value(s, d, "benchBloom") {
       val bench = decontGrams(s, d, col("doc_id") % DecontBenchMod === 0)
         .select(explode(col("grams")).as("gram")).distinct()
       // deterministic (the filter's bits are an OR of per-item bit sets,
       // order-independent), so memoizing cannot change any result —
       // it only drops the per-call count + treeAggregate actions
       bench.stat.bloomFilter("gram", math.max(bench.count(), 1L), BloomFpp)
-    })
-  }
+    }
 
   /** Production path of the bloom screen: ONE projection over the corpus
     * — per-doc gram count and sketch hit count — no join, no exchange.
@@ -837,10 +806,8 @@ object TextQueries {
     * window — per consumer. The survivor set is id-sized (no text
     * column), so the persisted footprint is small at any scale.
     */
-  private val curateFullMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[queries] def pipelineCurateFullCore(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(curateFullMemo, (s, d), "curateFullCore") {
+    Memo.relation(s, d, "curateFullCore") {
       import org.apache.spark.sql.expressions.Window
       val rep = curateFullFeatures(docs(s, d))
       val contaminated = decontHits(s, d).select(col("doc_id"))
@@ -852,7 +819,6 @@ object TextQueries {
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("doc_id"), col("source"), col("n_re"), col("score"),
           col("top2_frac"))
-        .persist()
     }
 
   def pipelineCurateFull(s: SparkSession, d: String): DataFrame =
@@ -1147,10 +1113,8 @@ object TextQueries {
     * and the scoring join — are cached only for the build and released
     * once the small per-doc relation materializes.
     */
-  private val lmScoreMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[queries] def lmScoreCore(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(lmScoreMemo, (s, d), "lmScoreCore") {
+    Memo.relation(s, d, "lmScoreCore") {
       val uni = unigramCounts(s, d)
       val vocab = uni.agg(count(lit(1)).as("v_size"))
       val bg = docs(s, d).select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
@@ -1280,22 +1244,16 @@ object TextQueries {
   // initializes earlier in the object and must not read a default-0 val
   private[queries] final val GateNllE4PerBigram = 34200L
 
-  private val lmSketchMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), graft.plans.LmSketchModel]
   private[graft] def lmSketchModel(s: SparkSession, d: String): graft.plans.LmSketchModel =
-    synchronized {
-      lmSketchMemo.filterInPlace { case ((ks, _), _) => !ks.sparkContext.isStopped }
-      lmSketchMemo.getOrElseUpdate((s, d), {
-          MemoTrace.built("lmSketchModel")
-          val bc = docs(s, d).select(TextOps.tokens(col("text")).as("t"))
-            .filter(size(col("t")) >= 2)
-            .select(explode(expr(
-              "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1)," +
-                " (a, b) -> struct(a AS w1, b AS w2))")).as("b"))
-            .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
-            .agg(count(lit(1)).as("c_ab"))
-          graft.text.LmSketch.learn(bc, unigramCounts(s, d))
-      })
+    Memo.value(s, d, "lmSketchModel") {
+      val bc = docs(s, d).select(TextOps.tokens(col("text")).as("t"))
+        .filter(size(col("t")) >= 2)
+        .select(explode(expr(
+          "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1)," +
+            " (a, b) -> struct(a AS w1, b AS w2))")).as("b"))
+        .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
+        .agg(count(lit(1)).as("c_ab"))
+      graft.text.LmSketch.learn(bc, unigramCounts(s, d))
     }
 
   def lmGateSketch(s: SparkSession, d: String): DataFrame = {
@@ -1609,37 +1567,27 @@ object TextQueries {
     * tables next to the base counters — the refresh path screens the
     * increment against the published artifacts, not per-session memos
     * (a nightly job restarts its session; the artifacts must outlive
-    * it). Same tableExists rebuild guard as the IVF index tables.
+    * it). The same [[Memo.tables]] entries as the IVF index tables.
     */
-  private[graft] def dataCardMembershipTables(s: SparkSession, d: String): (String, String) =
-    synchronized {
-      val suffix = MemoNames.dirSuffix(d)
-      val dupT = s"graft_datacard_dup_$suffix"
-      val conT = s"graft_datacard_contam_$suffix"
-      if (!s.catalog.tableExists(dupT)) {
-        MemoTrace.built("dataCardDupTable")
-        graft.operators.Scale.saveTable(dataCardDup(s, d), dupT)
-      }
-      if (!s.catalog.tableExists(conT)) {
-        MemoTrace.built("dataCardContamTable")
-        graft.operators.Scale.saveTable(dataCardContam(s, d), conT)
-      }
-      (dupT, conT)
-    }
+  private[graft] def dataCardMembershipTables(s: SparkSession, d: String): (String, String) = {
+    val suffix = MemoNames.dirSuffix(d)
+    def saved(label: String, t: String)(df: => DataFrame): String =
+      Memo.tables(s, d, label) { graft.operators.Scale.saveTable(df, t); Seq(t) }.head
+    (saved("dataCardDupTable", s"graft_datacard_dup_$suffix")(dataCardDup(s, d)),
+      saved("dataCardContamTable", s"graft_datacard_contam_$suffix")(dataCardContam(s, d)))
+  }
 
-  private[graft] def dataCardBaseTable(s: SparkSession, d: String): String =
-    synchronized {
+  private[graft] def dataCardBaseTable(s: SparkSession, d: String): String = {
+    val (dupT, conT) = dataCardMembershipTables(s, d)
+    Memo.tables(s, d, "dataCardBaseTable") {
       val t = s"graft_datacard_base_${MemoNames.dirSuffix(d)}"
-      if (!s.catalog.tableExists(t)) {
-        MemoTrace.built("dataCardBaseTable")
-        val (dupT, conT) = dataCardMembershipTables(s, d)
-        val base = dataCardCounters(dataCardRows(
-          docs(s, d).filter(expr(CardBaseWhere)),
-          s.table(dupT), s.table(conT)))
-        graft.operators.Scale.saveTable(base, t)
-      }
-      t
-    }
+      val base = dataCardCounters(dataCardRows(
+        docs(s, d).filter(expr(CardBaseWhere)),
+        s.table(dupT), s.table(conT)))
+      graft.operators.Scale.saveTable(base, t)
+      Seq(t)
+    }.head
+  }
 
   def dataCardIncremental(s: SparkSession, d: String): DataFrame = {
     val base = s.table(dataCardBaseTable(s, d))

@@ -481,10 +481,8 @@ object WindowQueries {
     * ORDER BY range exchange just to destroy it with a groupBy. The
     * interval relation is session-sized (id columns only).
     */
-  private val sessionMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private def sessionCore(s: SparkSession, d: String): DataFrame =
-    RelationMemo.relation(sessionMemo, (s, d), "sessionCore") {
+    Memo.relation(s, d, "sessionCore") {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id")).orderBy(col("e_us"), col("event_id"))
       val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -498,7 +496,6 @@ object WindowQueries {
         .agg(count(lit(1)).as("n_events"),
           min(col("e_us")).as("start_us"), max(col("e_us")).as("end_us"))
         .withColumn("duration_us", col("end_us") - col("start_us"))
-        .persist()
     }
 
   def sessionize(s: SparkSession, d: String): DataFrame =

@@ -14,8 +14,15 @@ import org.apache.spark.sql.types.{DateType, LongType, TimestampNTZType, Timesta
   * source in [[CsvSource]].
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The schema is read once per (session, dir, data stamp) through
+    * [[graft.queries.Memo]], so building the DataFrame runs no
+    * schema-inference job.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val schema = graft.queries.Memo.value(spark, sfDir, s"schema/$name")(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Timestamp-column normalization — the driver's testdata generator has
     * shipped two physical encodings across rounds, and the engine accepts

@@ -65,4 +65,13 @@ class BenchSpec extends SparkSpec {
     assert(h.get("queries").fieldNames().asScala.toSeq == Seq("q1_agg", "project", "stub"))
     assert(h.get("failed").elements().asScala.map(_.asText).toSeq == Seq("stub"))
   }
+
+  test("memo_mb holds each memo label's cached MB, read before the family's cache clear") {
+    val (lapFull, _) = Bench.lap(spark, sf, Seq(
+      "window" -> Seq("session_concurrency" -> SparkEntry.queries("session_concurrency"))))
+    val mb = mapper.readTree(lapFull).get("memo_mb")
+    assert(mb != null && mb.isObject)
+    assert(mb.get("sessionCore").asDouble > 0, mb.toString)
+    assert(fullJson.has("memo_mb"))
+  }
 }

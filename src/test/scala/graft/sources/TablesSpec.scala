@@ -78,4 +78,34 @@ class TablesSpec extends SparkSpec {
     assert(Tables.orders(spark, sf).schema("o_orderdate").dataType == TimestampType)
     assert(Tables.lineitem(spark, sf).schema("l_shipdate").dataType == TimestampType)
   }
+
+  test("building a table DataFrame in a warm session runs no job; an in-place rewrite is read") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tables")
+    tmp.toFile.deleteOnExit()
+    val path = tmp.resolve("events.parquet").toString
+    Tables.events(spark, sf).write.mode("overwrite").parquet(path)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Tables.events(spark, tmp.toString) // the warm-up build may read the schema
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      jobs.set(0)
+      val df = Tables.events(spark, tmp.toString)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      assert(jobs.get == 0, s"${jobs.get} job(s) ran while building the DataFrame")
+      assert(df.columns.toSeq == Tables.events(spark, sf).columns.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // rewritten in place with one more column: the new column is read
+    Tables.events(spark, sf).withColumn("extra", $"event_id" * 2)
+      .write.mode("overwrite").parquet(path)
+    val re = Tables.events(spark, tmp.toString)
+    assert(re.columns.contains("extra"))
+    assert(re.filter($"extra" =!= $"event_id" * 2).count() == 0)
+    assert(re.count() == Tables.events(spark, sf).count())
+  }
 }
