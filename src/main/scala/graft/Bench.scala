@@ -5,8 +5,9 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.queries.{Memo, MemoTrace, Registry}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.GraftBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions.{avg, col}
 import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
@@ -55,7 +56,8 @@ object Bench {
     .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
 
   /** A Spark job: its stage and task counts at submission, and its job
-    * description, else its call site, else its result stage's name.
+    * description, else its SQL execution's description, else its call
+    * site, else its result stage's name.
     */
   private final case class Job(stages: Int, tasks: Int, site: String)
 
@@ -77,14 +79,28 @@ object Bench {
     * property set around the sample would miss those: a pool thread keeps
     * the property of the sample that created it, and 22 of
     * ann_recall_kmeans's 25 warm jobs carried its cold sample's tag.)
+    *
+    * Adaptive query execution submits its query-stage jobs from Spark's own
+    * pool, with no job description and that pool's call site; such a job
+    * carries its SQL execution id, so it is named by the description of
+    * the execution it belongs to (recorded at the execution's start).
     */
   private final class Profile extends SparkListener {
     private var jobs = Vector.empty[Job]
     private var evicted = 0L
+    private var executions = Map.empty[Long, String]
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized { executions += s.executionId -> s.description }
+      case s: SparkListenerSQLExecutionEnd => synchronized { executions -= s.executionId }
+      case _ => ()
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-      val site = prop("spark.job.description").orElse(prop("callSite.short"))
+      val execution = prop("spark.sql.execution.id")
+        .flatMap(id => synchronized(executions.get(id.toLong)))
+      val site = prop("spark.job.description").orElse(execution).orElse(prop("callSite.short"))
         .getOrElse(e.stageInfos.maxBy(_.stageId).name)
       val job = Job(e.stageInfos.size, e.stageInfos.map(_.numTasks).sum, site)
       synchronized { jobs :+= job }

@@ -76,9 +76,8 @@ object Resample {
     val anchor = (floor(epoch / lit(newSec)) * newSec).cast("long")
     val up = upsampleRepeatEpoch(df, epoch, origSec, newSec)
     val vAtAnchor = when(col("ts_up") === anchor, col(valueCol))
-    up.withColumn(s"${valueCol}_lin",
-      Fill.interpolateForward(vAtAnchor, col("ts_up").cast("double"),
-        partitionBy, "ts_up" +: tieBreak))
+    Fill.interpolateForward(up, s"${valueCol}_lin", vAtAnchor, col("ts_up").cast("double"),
+      partitionBy, "ts_up" +: tieBreak)
   }
 
   /** Time-bucket mean: group rows into `intervalSec` buckets and average

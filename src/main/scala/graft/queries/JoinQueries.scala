@@ -128,10 +128,12 @@ object JoinQueries {
         epochUs.as("e_us"))
     val (key, order) = (Seq("user_id"), Seq("e_us", "event_id"))
     val click = col("event_type") === "click"
-    e.withColumn("bv", Fill.ffill(when(click, col("value")), key, order))
-      .withColumn("bt", Fill.ffill(when(click, col("e_us")), key, order))
-      .withColumn("fv", Fill.bfill(when(click, col("value")), key, order))
-      .withColumn("ft", Fill.bfill(when(click, col("e_us")), key, order))
+    // one select: the four fills plan as one Window node
+    e.select(col("*"),
+        Fill.ffill(when(click, col("value")), key, order).as("bv"),
+        Fill.ffill(when(click, col("e_us")), key, order).as("bt"),
+        Fill.bfill(when(click, col("value")), key, order).as("fv"),
+        Fill.bfill(when(click, col("e_us")), key, order).as("ft"))
       .filter(col("event_type") === "purchase")
       .withColumn("nearest_click_value",
         when(col("bt").isNull, col("fv"))

@@ -300,8 +300,8 @@ object WindowQueries {
     // unrounded: v and t are identical doubles in both engines, so the
     // interpolation arithmetic is bit-identical; the interpolated value
     // is a rational that can sit exactly on rounding half-boundaries
-    e.select(col("event_id"),
-        Fill.interpolate(col("v"), col("t"), Seq("user_id"), orderCols).as("v_interp"))
+    Fill.interpolate(e, "v_interp", col("v"), col("t"), Seq("user_id"), orderCols)
+      .select(col("event_id"), col("v_interp"))
       .orderBy(col("event_id"))
   }
 

@@ -38,6 +38,12 @@ class BenchSpec extends SparkSpec {
     assert(key("stub").get("jobs").asInt == 0)
   }
 
+  test("adaptive query-stage jobs are named by their SQL execution, not Spark's pool call site") {
+    val sites = key("q1_agg").get("job_sites").elements().asScala.map(_.asText).toSeq
+    assert(sites.nonEmpty)
+    assert(!sites.exists(_.contains("CompletableFuture")), sites)
+  }
+
   test("a key that throws is failed, with its exception class and message, and a negative time") {
     assert(fullJson.get("failed").elements().asScala.map(_.asText).toSeq == Seq("stub"))
     val errors = key("stub").get("errors").elements().asScala.toSeq

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -26,8 +26,8 @@ class FillSpec extends SparkSpec {
   }
 
   test("interpolate is linear in the time axis with edge fallbacks") {
-    val got = df.select(col("id"),
-        Fill.interpolate(col("v"), col("t"), Seq.empty, Seq("id")).as("x"))
+    val got = Fill.interpolate(df, "x", col("v"), col("t"), Seq.empty, Seq("id"))
+      .select(col("id"), col("x"))
       .orderBy("id").collect().map(_.getDouble(1))
     assert(got.toSeq == Seq(1.0, 2.0, 3.0, 4.0, 4.0)) // 1 + (4-1)*(10-0)/(30-0) = 2.0 etc
   }
@@ -35,8 +35,8 @@ class FillSpec extends SparkSpec {
   test("duplicate timestamps around a null fall back to ffill, not NaN") {
     val dup = Seq((0L, 10.0, Some(1.0)), (1L, 10.0, Option.empty[Double]), (2L, 10.0, Some(4.0)))
       .toDF("id", "t", "v")
-    val got = dup.select(Fill.interpolate(col("v"), col("t"), Seq.empty, Seq("id")).as("x"))
-      .orderBy("x").collect().map(_.getDouble(0))
+    val got = Fill.interpolate(dup, "x", col("v"), col("t"), Seq.empty, Seq("id"))
+      .select(col("x")).orderBy("x").collect().map(_.getDouble(0))
     assert(!got.exists(_.isNaN))
     assert(got.toSeq == Seq(1.0, 1.0, 4.0))
   }
@@ -44,8 +44,8 @@ class FillSpec extends SparkSpec {
   test("leading nulls fall back to bfill") {
     val lead = Seq((0L, 0.0, Option.empty[Double]), (1L, 10.0, Some(5.0)))
       .toDF("id", "t", "v")
-    val got = lead.select(Fill.interpolate(col("v"), col("t"), Seq.empty, Seq("id")).as("x"))
-      .collect().map(_.getDouble(0))
+    val got = Fill.interpolate(lead, "x", col("v"), col("t"), Seq.empty, Seq("id"))
+      .select(col("x")).collect().map(_.getDouble(0))
     assert(got.toSeq == Seq(5.0, 5.0))
   }
 
@@ -55,8 +55,8 @@ class FillSpec extends SparkSpec {
     val s = Seq((0L, 0.0, Option.empty[Double]), (1L, 10.0, Some(1.0)),
       (2L, 20.0, Option.empty[Double]), (3L, 30.0, Some(3.0)), (4L, 40.0, Option.empty[Double]))
       .toDF("id", "t", "v")
-    val got = s.select(col("id"),
-        Fill.interpolateForward(col("v"), col("t"), Seq.empty, Seq("id")).as("x"))
+    val got = Fill.interpolateForward(s, "x", col("v"), col("t"), Seq.empty, Seq("id"))
+      .select(col("id"), col("x"))
       .orderBy("id").collect().map(r => Option(r.get(1)))
     assert(got.toSeq == Seq(None, Some(1.0), Some(2.0), Some(3.0), Some(3.0)))
   }
@@ -97,6 +97,36 @@ class FillSpec extends SparkSpec {
     assert(got.toSeq == Seq(None, Some(5.0), Some(5.0)))
   }
 
+  test("interpolate, interpolateForward and fillMissing keep every input column in place and add exactly out") {
+    // input columns named like the helpers' temporaries (one differing
+    // only in case) and one that needs quoting
+    val in = df.select(col("id"), col("t"), col("v"), lit("p").as("__fill_0"),
+      lit("n").as("__FILL_1"), lit(7).as("__fill_3"), (col("id") * 2).as("a.b"))
+    val inRows = in.orderBy("id").collect().toSeq
+    def without(rows: Seq[Row], i: Int) = rows.map(r => Row.fromSeq(r.toSeq.patch(i, Nil, 1)))
+    // every column but `out` holds the input's values; `out` holds `want`
+    def check(name: String, got: DataFrame, out: String, want: Seq[Double]): Unit = {
+      val i = got.columns.indexOf(out)
+      val rows = got.orderBy("id").collect().toSeq
+      assert(without(rows, i) == (if (in.columns.contains(out)) without(inRows, i) else inRows), name)
+      assert(rows.map(_.getDouble(i)) == want, name)
+    }
+    val added = Seq(
+      "interpolate" -> Fill.interpolate(in, "x", col("v"), col("t"), Seq.empty, Seq("id")),
+      "interpolateForward" -> Fill.interpolateForward(in, "x", col("v"), col("t"), Seq.empty, Seq("id")))
+    added.foreach { case (name, got) =>
+      assert(got.columns.toSeq == in.columns.toSeq :+ "x", name)
+      check(name, got, "x", Seq(1.0, 2.0, 3.0, 4.0, 4.0))
+    }
+    // the policy replaces its value column in place
+    val policy = Fill.fillMissing(in, Seq("v"), Set.empty, col("t"), Seq.empty, Seq("id"))
+    assert(policy.columns.toSeq == in.columns.toSeq)
+    check("fillMissing", policy, "v", Seq(1.0, 1.0, 1.0, 4.0, 4.0))
+    val cum = Fill.fillMissing(in, Seq("v"), Set("v"), col("t"), Seq.empty, Seq("id"))
+    assert(cum.columns.toSeq == in.columns.toSeq)
+    check("fillMissing cum", cum, "v", Seq(1.0, 2.0, 3.0, 4.0, 4.0))
+  }
+
   // ---- several series keys: every fill runs per key, never across keys
 
   // key 1: leading nulls; key 2: trailing nulls; key 3: all null;
@@ -111,9 +141,13 @@ class FillSpec extends SparkSpec {
     (5, 15L, 10.0, Some(6.0)), (5, 16L, 20.0, None), (5, 17L, 30.0, Some(9.0))
   ).toDF("k", "id", "t", "v")
 
-  private def keyedFill(f: (Column, Seq[String], Seq[String]) => Column): Seq[Option[Double]] =
-    keyed.select(col("id"), f(col("v"), Seq("k"), Seq("t", "id")).as("x"))
+  /** Column `x` of `add(keyed)`, in id order. */
+  private def keyedOut(add: DataFrame => DataFrame): Seq[Option[Double]] =
+    add(keyed).select(col("id"), col("x"))
       .orderBy("id").collect().map(r => Option(r.get(1)).map(_.asInstanceOf[Double])).toSeq
+
+  private def keyedFill(f: (Column, Seq[String], Seq[String]) => Column): Seq[Option[Double]] =
+    keyedOut(_.select(col("id"), f(col("v"), Seq("k"), Seq("t", "id")).as("x")))
 
   test("keyed ffill / bfill stay inside each series") {
     assert(keyedFill(Fill.ffill) == Seq(
@@ -131,7 +165,7 @@ class FillSpec extends SparkSpec {
   }
 
   test("keyed interpolate: edges fall back per series, duplicate-ts gap carries forward") {
-    assert(keyedFill(Fill.interpolate(_, col("t"), _, _)) == Seq(
+    assert(keyedOut(Fill.interpolate(_, "x", col("v"), col("t"), Seq("k"), Seq("t", "id"))) == Seq(
       Some(2.0), Some(2.0), Some(2.0), Some(5.0),
       Some(1.0), Some(3.0), Some(3.0), Some(3.0),
       None, None, None,
@@ -142,7 +176,7 @@ class FillSpec extends SparkSpec {
   }
 
   test("keyed interpolateForward: leading nulls stay null in each series") {
-    assert(keyedFill(Fill.interpolateForward(_, col("t"), _, _)) == Seq(
+    assert(keyedOut(Fill.interpolateForward(_, "x", col("v"), col("t"), Seq("k"), Seq("t", "id"))) == Seq(
       None, None, Some(2.0), Some(5.0),
       Some(1.0), Some(3.0), Some(3.0), Some(3.0),
       None, None, None,
@@ -203,10 +237,9 @@ class FillSpec extends SparkSpec {
       }
       val df = rows.map(o => (o.k, o.id, o.t, o.v)).toDF("k", "id", "t", "v")
       val (key, order) = (Seq("k"), Seq("t", "id"))
-      val got = df.select(col("id"),
-          Fill.bfill(col("v"), key, order).as("b"),
-          Fill.interpolate(col("v"), col("t"), key, order).as("i"),
-          Fill.interpolateForward(col("v"), col("t"), key, order).as("f"))
+      val interpolated = Fill.interpolateForward(
+        Fill.interpolate(df, "i", col("v"), col("t"), key, order), "f", col("v"), col("t"), key, order)
+      val got = interpolated.select(col("id"), Fill.bfill(col("v"), key, order).as("b"), col("i"), col("f"))
         .collect().map(r => r.getLong(0) -> (1 to 3).map(j => Option(r.get(j)))).toMap
       def column(j: Int) = got.map { case (id, xs) => id -> xs(j).map(_.asInstanceOf[Double]) }
       assert(column(0) == reference(rows)(bfillRef), s"bfill, seed $seed")

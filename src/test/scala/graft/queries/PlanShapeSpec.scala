@@ -660,6 +660,35 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("fill keys: each fill neighbour is ONE window function; join_asof_nearest's fills share one Window node") {
+    import org.apache.spark.sql.catalyst.expressions.WindowExpression
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.execution.window.WindowExec
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def windows(key: String) = {
+      val exec = graft.SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan
+      (exec, aqe.collect(exec) { case w: WindowExec => w })
+    }
+    // the sorted names of the window functions the executed plan evaluates
+    def functions(key: String): (String, Seq[String]) = {
+      val (exec, ws) = windows(key)
+      exec.toString -> ws.flatMap(_.windowExpression).flatMap(_.collect {
+        case WindowExpression(a: AggregateExpression, _) => a.aggregateFunction.prettyName
+        case WindowExpression(f, _) => f.prettyName
+      }).sorted
+    }
+    for (key <- Seq("resample_up_linear", "fill_interpolate")) {
+      val (exec, fns) = functions(key)
+      assert(fns.count(_ == "lag") == 1 && fns.count(_ == "lead") == 1, s"$key: $fns\n$exec")
+    }
+    // v_inst: ffill (last), its backfill (lead), the residual count (sum);
+    // v_cum: the interpolation's two neighbours (lag, lead)
+    val (policy, policyFns) = functions("fill_policy")
+    assert(policyFns == Seq("lag", "last", "lead", "lead", "sum"), s"fill_policy: $policyFns\n$policy")
+    val (asof, asofWindows) = windows("join_asof_nearest")
+    assert(asofWindows.size == 1, asof)
+  }
+
   test("data_card: one scan, broadcast membership joins, map-side-combined rollup") {
     val p = plan("data_card")
     assert(!p.contains("CartesianProduct"), p)
