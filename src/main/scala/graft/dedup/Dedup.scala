@@ -318,7 +318,15 @@ object Dedup {
     */
   val DriverComponentsMaxEdges: Int = 1 << 20
 
-  def clusterLabels(pairs: DataFrame): DataFrame = {
+  def clusterLabels(pairs: DataFrame): DataFrame =
+    localClusterLabels(pairs).getOrElse(clusterLabelsWithRounds(pairs)._1)
+
+  /** [[clusterLabels]]' small-graph fast path alone: the labels as a
+    * driver-local relation, or None when the edge list overflows the
+    * probe and the distributed fixpoint must run. Callers that memoize
+    * the small result key on this branch, not on the plan's shape.
+    */
+  private[graft] def localClusterLabels(pairs: DataFrame): Option[DataFrame] = {
     import org.apache.spark.storage.StorageLevel
     val sel = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
     val lim = sel.limit(DriverComponentsMaxEdges + 1)
@@ -342,8 +350,7 @@ object Dedup {
     // count and collect are separate jobs, so a row set that grew in
     // between (moving source) must fall through to the distributed
     // fixpoint rather than silently truncate at the limit
-    if (overflow || probe.length > DriverComponentsMaxEdges)
-      clusterLabelsWithRounds(pairs)._1
+    if (overflow || probe.length > DriverComponentsMaxEdges) None
     else {
       val parent = new scala.collection.mutable.LongMap[Long]()
       def find(x: Long): Long = {
@@ -366,7 +373,7 @@ object Dedup {
       }
       val spark = pairs.sparkSession
       import spark.implicits._
-      parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("doc_id", "canonical")
+      Some(parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("doc_id", "canonical"))
     }
     } finally if (pinned) lim.unpersist(false)
   }

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
   * metadata, processed in partition-local batches.
@@ -19,6 +20,18 @@ import org.apache.spark.sql.types._
   * `mapInPandas`: one iterator per partition, batch-amortized setup, no
   * per-row codec init). Payload bytes stay partition-local; features
   * detach from payloads before any wide operation.
+  *
+  * One walk per container owns its quarantine contract (which payloads
+  * are admitted, which are dropped), and every consumer is a body passed
+  * to it:
+  *  - [[walkWav]]: the RIFF/WAVE chunk walk, up to the PCM-16 `data`
+  *    chunk ([[decodeWav]], [[audioDhashes]], [[audioEntropy]]);
+  *  - [[decodeImages]]: the per-partition ImageIO decode
+  *    ([[decodePixels]], [[resizePixels]], [[dhash56]], [[imageEntropy]]);
+  *  - [[walkY4mMono]]: the mono YUV4MPEG2 frame walk ([[sampleFrames]],
+  *    [[frameDhashes]], [[clipSignatures]], [[videoEntropy]]).
+  * Every decoder enters through [[perPartition]] and every synthetic corpus
+  * through [[generated]].
   */
 object Multimodal {
 
@@ -43,6 +56,45 @@ object Multimodal {
       lit("text/plain").as("media_type"),
       struct(length(col("text").cast("binary")).cast("long").as("n_bytes"),
         col("source").as("source")).as("meta"))
+
+  /** The decoder entry: `(asset_id, payload)` rows, one iterator per
+    * partition (`batch` may set up per-partition state before it maps).
+    */
+  private def perPartition[T <: Product : TypeTag](spark: SparkSession, assets: DataFrame)(
+      batch: Iterator[(Long, Array[Byte])] => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])].mapPartitions(batch)
+  }
+
+  /** [[perPartition]] with a per-asset body: each payload yields zero
+    * (quarantined) or more rows.
+    */
+  private def perAsset[T <: Product : TypeTag](spark: SparkSession, assets: DataFrame)(
+      body: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] =
+    perPartition(spark, assets)(_.flatMap { case (id, bytes) => body(id, bytes) })
+
+  /** A synthetic `(asset_id, payload)` corpus from `docs.doc_id`; `batch`
+    * maps one partition's ids to payload rows.
+    */
+  private def generated(spark: SparkSession, docs: DataFrame)(
+      batch: Iterator[Long] => Iterator[(Long, Array[Byte])]): DataFrame = {
+    import spark.implicits._
+    docs.select(col("doc_id")).as[Long].mapPartitions(batch).toDF("asset_id", "payload")
+  }
+
+  /** The quantized entropy core Σ round(k·ln k·10⁴) over a histogram's
+    * counts (bins holding 0 or 1 add nothing), summed in bin order.
+    */
+  private def entropySumE4(hist: Array[Int]): Long = {
+    var acc = 0L
+    var c = 0
+    while (c < hist.length) {
+      val k = hist(c)
+      if (k > 1) acc += Math.round(k * Math.log(k) * 10000.0)
+      c += 1
+    }
+    acc
+  }
 
   // ------------------------------------------------------------------
   // Real header decode: PNG IHDR + JPEG SOFn, pure byte arithmetic
@@ -119,17 +171,12 @@ object Multimodal {
     * well-formed PNG/JPEG are dropped (a production run would route them
     * to a quarantine sink instead).
     */
-  def decodeHeaders(spark: SparkSession, assets: DataFrame): Dataset[ImageHeader] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          parseImageHeader(bytes).map { case (f, w, h, d, c) =>
-            ImageHeader(id, f, w.toLong, h.toLong, d.toLong, c.toLong)
-          }
-        }
+  def decodeHeaders(spark: SparkSession, assets: DataFrame): Dataset[ImageHeader] =
+    perAsset(spark, assets) { (id, bytes) =>
+      parseImageHeader(bytes).map { case (f, w, h, d, c) =>
+        ImageHeader(id, f, w.toLong, h.toLong, d.toLong, c.toLong)
       }
-  }
+    }
 
   /** Deterministic synthetic image payloads derived from `doc_id` — the
     * test stand-in for real media bytes (this container ships no image
@@ -293,16 +340,12 @@ object Multimodal {
     * statistics from `generate_series` without touching bytes, while the
     * Spark side decodes the REAL bytes through ImageIO.
     */
-  def syntheticBmpPayloads(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val w = (id % 7 + 2).toInt
-        val h = (id % 5 + 2).toInt
-        (id, bmp24(w, h, imgPx(id)))
-      }
-    }.toDF("asset_id", "payload")
-  }
+  def syntheticBmpPayloads(spark: SparkSession, docs: DataFrame): DataFrame =
+    generated(spark, docs)(_.map { id =>
+      val w = (id % 7 + 2).toInt
+      val h = (id % 5 + 2).toInt
+      (id, bmp24(w, h, imgPx(id)))
+    })
 
   /** [[syntheticBmpPayloads]] widened to the format mix a real corpus
     * has: even ids stay 24-bit BMP, odd ids become truecolor PNG
@@ -311,18 +354,12 @@ object Multimodal {
     * exercises both containers (PNG being what image corpora
     * overwhelmingly ship).
     */
-  def syntheticPixelPayloads(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val w = (id % 7 + 2).toInt
-        val h = (id % 5 + 2).toInt
-        val bytes =
-          if (id % 2 == 0) bmp24(w, h, imgPx(id)) else pngRgb24(w, h, imgPx(id))
-        (id, bytes)
-      }
-    }.toDF("asset_id", "payload")
-  }
+  def syntheticPixelPayloads(spark: SparkSession, docs: DataFrame): DataFrame =
+    generated(spark, docs)(_.map { id =>
+      val w = (id % 7 + 2).toInt
+      val h = (id % 5 + 2).toInt
+      (id, if (id % 2 == 0) bmp24(w, h, imgPx(id)) else pngRgb24(w, h, imgPx(id)))
+    })
 
   // ------------------------------------------------------------------
   // Real audio decode: RIFF/WAV PCM-16 chunk walk, pure byte arithmetic
@@ -366,18 +403,14 @@ object Multimodal {
     * A SQL oracle recomputes every sample statistic from the formula; the
     * Spark side walks the REAL bytes.
     */
-  def syntheticWavPayloads(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val n = (id % 50 + 10).toInt
-        val rate = (8000 + (id % 3) * 4000).toInt
-        val samples = Array.tabulate(n)(i =>
-          ((id * 31 + i.toLong * 17) % 65536 - 32768).toShort)
-        (id, wavPcm16Mono(rate, samples, infoBytes = (id % 7).toInt))
-      }
-    }.toDF("asset_id", "payload")
-  }
+  def syntheticWavPayloads(spark: SparkSession, docs: DataFrame): DataFrame =
+    generated(spark, docs)(_.map { id =>
+      val n = (id % 50 + 10).toInt
+      val rate = (8000 + (id % 3) * 4000).toInt
+      val samples = Array.tabulate(n)(i =>
+        ((id * 31 + i.toLong * 17) % 65536 - 32768).toShort)
+      (id, wavPcm16Mono(rate, samples, infoBytes = (id % 7).toInt))
+    })
 
   case class AudioStats(asset_id: Long, sample_rate: Long, n_channels: Long,
                         n_samples: Long, sum_s: Long, sum_abs: Long,
@@ -389,22 +422,25 @@ object Multimodal {
     * stats (sum, sum of |s|, min, max) plus the derived mean — one IEEE
     * division on exact integers, bit-equal cross-engine. Only
     * uncompressed PCM-16 is admitted; anything else (float WAV, ADPCM,
-    * truncated/corrupt chunks) is dropped, mirroring [[decodePixels]]'s
+    * truncated/corrupt chunks) is dropped under [[walkWav]]'s
     * quarantine contract. Batched per partition like every decode here.
     */
-  def decodeWav(spark: SparkSession, assets: DataFrame): Dataset[AudioStats] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(it => it.flatMap { case (id, bytes) => parseWav(id, bytes) })
-  }
+  def decodeWav(spark: SparkSession, assets: DataFrame): Dataset[AudioStats] =
+    perAsset(spark, assets)(parseWav)
 
-  private[multimodal] def parseWav(id: Long, b: Array[Byte]): Option[AudioStats] = {
+  /** The RIFF/WAVE chunk walk, and the one definition of the WAV
+    * quarantine contract: a payload of at least 44 bytes tagged
+    * `RIFF`…`WAVE`, chunks walked in order (sizes padded to even, per the
+    * RIFF spec), no chunk running past the payload, a `fmt ` chunk of at
+    * least 16 bytes before the first `data` chunk, and uncompressed PCM-16
+    * with at least one channel. `data` gets
+    * `(sampleRate, channels, dataOffset, dataSize)` and applies its own
+    * channel and sample-count rule; anything else is None.
+    */
+  private def walkWav[T](b: Array[Byte])(data: (Long, Int, Int, Long) => Option[T]): Option[T] = {
     if (b == null || b.length < 44) return None
-    def u8(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
     def tag(i: Int) = new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
+    def le32(i: Int) = (le16(b, i) | (le16(b, i + 2) << 16)).toLong & 0xffffffffL
     if (tag(0) != "RIFF" || tag(8) != "WAVE") return None
     var pos = 12
     var fmt: Option[(Int, Int, Long, Int)] = None // (audioFormat, channels, rate, bits)
@@ -416,30 +452,45 @@ object Multimodal {
       id4 match {
         case "fmt " =>
           if (size < 16) return None
-          fmt = Some((le16(body), le16(body + 2), le32(body + 4), le16(body + 14)))
+          fmt = Some((le16(b, body), le16(b, body + 2), le32(body + 4), le16(b, body + 14)))
         case "data" =>
           val (audioFmt, ch, rate, bits) = fmt.getOrElse(return None)
           if (audioFmt != 1 || bits != 16 || ch < 1) return None // PCM-16 only
-          val n = (size / 2).toInt
-          if (n == 0 || size % (2L * ch) != 0) return None
-          var sum = 0L; var sabs = 0L
-          var mn = Long.MaxValue; var mx = Long.MinValue
-          var i = 0
-          while (i < n) {
-            val s = le16(body + 2 * i).toShort.toLong
-            sum += s; sabs += math.abs(s)
-            if (s < mn) mn = s
-            if (s > mx) mx = s
-            i += 1
-          }
-          return Some(AudioStats(id, rate, ch.toLong, n.toLong / ch, sum, sabs,
-            mn, mx, sum.toDouble / n))
+          return data(rate, ch, body, size)
         case _ => () // LIST/INFO/fact/...: skip
       }
       pos = body + size.toInt + (size & 1).toInt // chunks pad to even
     }
     None
   }
+
+  /** Unsigned little-endian 16-bit field at `i`. */
+  private def le16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+
+  /** Signed 16-bit PCM sample at byte offset `i`. */
+  private def s16(b: Array[Byte], i: Int): Int = le16(b, i).toShort.toInt
+
+  /** Multi-channel audio is admitted; the data must hold at least one
+    * sample and whole frames.
+    */
+  private[multimodal] def parseWav(id: Long, b: Array[Byte]): Option[AudioStats] =
+    walkWav(b) { (rate, ch, body, size) =>
+      val n = (size / 2).toInt
+      if (n == 0 || size % (2L * ch) != 0) None
+      else {
+        var sum = 0L; var sabs = 0L
+        var mn = Long.MaxValue; var mx = Long.MinValue
+        var i = 0
+        while (i < n) {
+          val s = s16(b, body + 2 * i).toLong
+          sum += s; sabs += math.abs(s)
+          if (s < mn) mn = s
+          if (s > mx) mx = s
+          i += 1
+        }
+        Some(AudioStats(id, rate, ch.toLong, n.toLong / ch, sum, sabs, mn, mx, sum.toDouble / n))
+      }
+    }
 
   /** [[syntheticWavPayloads]]' shape WITH PLANTED NEAR-DUP CLIPS for
     * the audio dedup path: assets whose `doc_id % 10 == 3` are
@@ -470,29 +521,25 @@ object Multimodal {
     * Everything is a closed form of (rep id, i), so a SQL oracle
     * reproduces every hash bit of originals and replicas.
     */
-  def syntheticWavReplicaPayloads(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val rep = if (id % 10 == 3) id - 1 else id
-        val n = (rep % 50 + 57).toInt
-        val rate = (8000 + (rep % 3) * 4000).toInt
-        val samples = Array.tabulate(n) { i =>
-          val bump = if (id % 10 == 3 && i == 0) 7000L else 0L
-          val v = (rep * 31 + i.toLong * 17 + bump) % 65536
-          ((v * v / 7 + v * 13) % 65536 - 32768).toShort
-        }
-        (id, wavPcm16Mono(rate, samples, infoBytes = (rep % 7).toInt))
+  def syntheticWavReplicaPayloads(spark: SparkSession, docs: DataFrame): DataFrame =
+    generated(spark, docs)(_.map { id =>
+      val rep = if (id % 10 == 3) id - 1 else id
+      val n = (rep % 50 + 57).toInt
+      val rate = (8000 + (rep % 3) * 4000).toInt
+      val samples = Array.tabulate(n) { i =>
+        val bump = if (id % 10 == 3 && i == 0) 7000L else 0L
+        val v = (rep * 31 + i.toLong * 17 + bump) % 65536
+        ((v * v / 7 + v * 13) % 65536 - 32768).toShort
       }
-    }.toDF("asset_id", "payload")
-  }
+      (id, wavPcm16Mono(rate, samples, infoBytes = (rep % 7).toInt))
+    })
 
   case class AudioHash(asset_id: Long, n_samples: Long, ahash: Long)
 
   /** 56-bit amplitude dHash of a mono PCM-16 WAV — [[frameDhashes]]'
     * delta scheme applied to the waveform: the |sample| envelope is
     * floor-resampled onto a 57-point grid (`src = j · n / 57`, the
-    * [[decodeResize]] mapping, so clips of any length hash to the same
+    * [[resizePixels]] mapping, so clips of any length hash to the same
     * width), and bit `j` is set iff `|grid(j+1)| > |grid(j)|`. Pure
     * integer arithmetic end to end — grid indices are floor divisions
     * and comparisons are on exact |s16| values — so a SQL oracle
@@ -503,57 +550,31 @@ object Multimodal {
     * track edit size. Samples are read in place from the data chunk
     * (no sample array materializes); only (id, n, hash) rows shuffle.
     * Mono only — the multi-channel interleave has no single envelope —
-    * and anything non-PCM-16 or malformed quarantines via the same
-    * drop contract as [[decodeWav]].
+    * and anything non-PCM-16 or malformed quarantines via
+    * [[walkWav]].
     */
-  def audioDhashes(spark: SparkSession, assets: DataFrame): Dataset[AudioHash] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(it => it.flatMap { case (id, bytes) => audioDhash56(id, bytes) })
-  }
+  def audioDhashes(spark: SparkSession, assets: DataFrame): Dataset[AudioHash] =
+    perAsset(spark, assets)(audioDhash56)
 
-  private[multimodal] def audioDhash56(id: Long, b: Array[Byte]): Option[AudioHash] = {
-    if (b == null || b.length < 44) return None
-    def u8(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    def tag(i: Int) = new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    if (tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    var pos = 12
-    var fmt: Option[(Int, Int, Int)] = None // (audioFormat, channels, bits)
-    while (pos + 8 <= b.length) {
-      val id4 = tag(pos)
-      val size = le32(pos + 4)
-      val body = pos + 8
-      if (body + size > b.length) return None // truncated chunk
-      id4 match {
-        case "fmt " =>
-          if (size < 16) return None
-          fmt = Some((le16(body), le16(body + 2), le16(body + 14)))
-        case "data" =>
-          val (audioFmt, ch, bits) = fmt.getOrElse(return None)
-          if (audioFmt != 1 || bits != 16 || ch != 1) return None // mono PCM-16 only
-          val n = (size / 2).toInt
-          if (n < 2 || size % 2 != 0) return None
-          def gridAbs(j: Int): Long =
-            math.abs(le16(body + 2 * ((j.toLong * n / 57).toInt)).toShort.toLong)
-          var hash = 0L
-          var last = gridAbs(0)
-          var j = 0
-          while (j < 56) {
-            val cur = gridAbs(j + 1)
-            if (cur > last) hash |= 1L << j
-            last = cur
-            j += 1
-          }
-          return Some(AudioHash(id, n.toLong, hash))
-        case _ => () // LIST/INFO/fact/...: skip
+  /** Mono only, at least two samples. */
+  private[multimodal] def audioDhash56(id: Long, b: Array[Byte]): Option[AudioHash] =
+    walkWav(b) { (_, ch, body, size) =>
+      val n = (size / 2).toInt
+      if (ch != 1 || n < 2 || size % 2 != 0) None
+      else {
+        def gridAbs(j: Int): Long = math.abs(s16(b, body + 2 * ((j.toLong * n / 57).toInt)).toLong)
+        var hash = 0L
+        var last = gridAbs(0)
+        var j = 0
+        while (j < 56) {
+          val cur = gridAbs(j + 1)
+          if (cur > last) hash |= 1L << j
+          last = cur
+          j += 1
+        }
+        Some(AudioHash(id, n.toLong, hash))
       }
-      pos = body + size.toInt + (size & 1).toInt // chunks pad to even
     }
-    None
-  }
 
   case class ResizeStats(asset_id: Long, src_w: Long, src_h: Long,
                          dst_w: Long, dst_h: Long,
@@ -570,49 +591,66 @@ object Multimodal {
     * (`getScaledInstance`, `AffineTransformOp`) are deliberately NOT used:
     * their kernels are implementation-defined, which would make the result
     * unverifiable cross-engine. Payload bytes stay partition-local; only
-    * the O(1) stats rows shuffle. Undecodable rows are dropped under the
-    * same quarantine contract as [[decodePixels]].
+    * the O(1) stats rows shuffle. Undecodable rows are dropped by
+    * [[decodeImages]].
     */
   def resizePixels(spark: SparkSession, assets: DataFrame,
                    dstW: Int, dstH: Int): Dataset[ResizeStats] = {
-    import spark.implicits._
     require(dstW > 0 && dstH > 0, s"resize needs positive dims, got ${dstW}x$dstH")
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { case (id, bytes) =>
-          val img =
-            if (bytes == null) None
-            // NonFatal, not just IOException: several ImageIO plugins throw
-            // RuntimeExceptions (IllegalArgument, IndexOutOfBounds) on
-            // corrupt payloads — those must quarantine, not kill the job
-            else try {
-              Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-            } catch { case scala.util.control.NonFatal(_) => None }
-          img.map { im =>
-            val w = im.getWidth
-            val h = im.getHeight
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var y = 0
-            while (y < dstH) {
-              val sy = y * h / dstH
-              var x = 0
-              while (x < dstW) {
-                val sx = x * w / dstW
-                val rgb = im.getRGB(sx, sy)
-                sr += (rgb >> 16) & 0xff
-                sg += (rgb >> 8) & 0xff
-                sb += rgb & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            val n = dstW.toLong * dstH
-            ResizeStats(id, w.toLong, h.toLong, dstW.toLong, dstH.toLong, sr, sg, sb,
-              sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
-          }
-        }
+    decodeImages(spark, assets) { (id, im) =>
+      val (sr, sg, sb) = channelSums(im, dstW, dstH)
+      val n = dstW.toLong * dstH
+      ResizeStats(id, im.getWidth.toLong, im.getHeight.toLong, dstW.toLong, dstH.toLong,
+        sr, sg, sb, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+    }
+  }
+
+  /** The per-partition ImageIO decode, and the one definition of the
+    * image quarantine contract: a null payload, one no reader recognizes
+    * (the read returns null) and one a reader throws on are all
+    * dropped; `body` sees every decoded image.
+    */
+  private def decodeImages[T <: Product : TypeTag](spark: SparkSession, assets: DataFrame)(
+      body: (Long, java.awt.image.BufferedImage) => T): Dataset[T] =
+    perPartition(spark, assets) { it =>
+      // ImageIO scans its reader registry per MIME sniff; disabling the
+      // on-disk cache keeps the decode entirely in-memory per batch
+      javax.imageio.ImageIO.setUseCache(false)
+      it.flatMap { case (id, bytes) =>
+        val img =
+          if (bytes == null) None
+          // NonFatal, not just IOException: several ImageIO plugins throw
+          // RuntimeExceptions (IllegalArgument, IndexOutOfBounds) on
+          // corrupt payloads — those must quarantine, not kill the job
+          else try {
+            Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+          } catch { case scala.util.control.NonFatal(_) => None }
+        img.map(body(id, _))
       }
+    }
+
+  /** Exact per-channel (r, g, b) sums over the `dstW × dstH` floor-mapped
+    * grid `src = dst · srcDim / dstDim`; at the image's own dims that is
+    * every pixel once.
+    */
+  private def channelSums(im: java.awt.image.BufferedImage, dstW: Int, dstH: Int): (Long, Long, Long) = {
+    val w = im.getWidth
+    val h = im.getHeight
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var y = 0
+    while (y < dstH) {
+      val sy = y * h / dstH
+      var x = 0
+      while (x < dstW) {
+        val rgb = im.getRGB(x * w / dstW, sy)
+        sr += (rgb >> 16) & 0xff
+        sg += (rgb >> 8) & 0xff
+        sb += rgb & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (sr, sg, sb)
   }
 
   /** Encode a true JPEG via the JDK's ImageIO writer at an explicit
@@ -677,9 +715,8 @@ object Multimodal {
     * here at q=0.9), which is what makes a tight bound-flag tolerance
     * possible downstream.
     */
-  def syntheticJpegPayloads(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
+  def syntheticJpegPayloads(spark: SparkSession, docs: DataFrame): DataFrame =
+    generated(spark, docs) { it =>
       // one writer per task, reused across the batch (§4.5) — the
       // registry walk + writer construction is per-partition, not
       // per-image; bytes identical (jpegRgb24With resets per image)
@@ -692,8 +729,7 @@ object Multimodal {
       // `++` evaluates its argument only once `images` is exhausted:
       // the writer's native encoder is released when the batch is done
       images ++ { writer.dispose(); Iterator.empty }
-    }.toDF("asset_id", "payload")
-  }
+    }
 
   case class PHash(asset_id: Long, phash: Long)
 
@@ -715,41 +751,28 @@ object Multimodal {
     * (id, hash) rows shuffle. Undecodable rows quarantine as in
     * [[decodePixels]].
     */
-  def dhash56(spark: SparkSession, assets: DataFrame): Dataset[PHash] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { case (id, bytes) =>
-          val img =
-            if (bytes == null) None
-            else try {
-              Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-            } catch { case scala.util.control.NonFatal(_) => None }
-          img.map { im =>
-            val w = im.getWidth
-            val h = im.getHeight
-            var hash = 0L
-            var j = 0
-            while (j < 8) {
-              val sy = j * h / 8
-              var last = 0L
-              var i = 0
-              while (i < 8) {
-                val rgb = im.getRGB(i * w / 8, sy)
-                val lum = 299L * ((rgb >> 16) & 0xff) +
-                  587L * ((rgb >> 8) & 0xff) + 114L * (rgb & 0xff)
-                if (i > 0 && lum > last) hash |= 1L << (j * 7 + (i - 1))
-                last = lum
-                i += 1
-              }
-              j += 1
-            }
-            PHash(id, hash)
-          }
+  def dhash56(spark: SparkSession, assets: DataFrame): Dataset[PHash] =
+    decodeImages(spark, assets) { (id, im) =>
+      val w = im.getWidth
+      val h = im.getHeight
+      var hash = 0L
+      var j = 0
+      while (j < 8) {
+        val sy = j * h / 8
+        var last = 0L
+        var i = 0
+        while (i < 8) {
+          val rgb = im.getRGB(i * w / 8, sy)
+          val lum = 299L * ((rgb >> 16) & 0xff) +
+            587L * ((rgb >> 8) & 0xff) + 114L * (rgb & 0xff)
+          if (i > 0 && lum > last) hash |= 1L << (j * 7 + (i - 1))
+          last = lum
+          i += 1
         }
+        j += 1
       }
-  }
+      PHash(id, hash)
+    }
 
   // ------------------------------------------------------------------
   // Real video frame-sampling: YUV4MPEG2 (y4m) stream walk, pure byte
@@ -782,22 +805,18 @@ object Multimodal {
     * parameter line length shifts per asset. A SQL oracle recomputes every
     * frame statistic from the formula; the Spark side walks REAL bytes.
     */
-  def syntheticY4mPayloads(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val w = (id % 5 + 2).toInt
-        val h = (id % 3 + 2).toInt
-        val nf = (id % 7 + 3).toInt
-        val frames = (0 until nf).map { f =>
-          Array.tabulate(w * h) { i =>
-            ((id * 7 + f * 19L + (i % w) * 13L + (i / w) * 31L) % 256).toByte
-          }
+  def syntheticY4mPayloads(spark: SparkSession, docs: DataFrame): DataFrame =
+    generated(spark, docs)(_.map { id =>
+      val w = (id % 5 + 2).toInt
+      val h = (id % 3 + 2).toInt
+      val nf = (id % 7 + 3).toInt
+      val frames = (0 until nf).map { f =>
+        Array.tabulate(w * h) { i =>
+          ((id * 7 + f * 19L + (i % w) * 13L + (i / w) * 31L) % 256).toByte
         }
-        (id, y4mMono(w, h, frames, extraParams = " Xz" + ("q" * (id % 3).toInt)))
       }
-    }.toDF("asset_id", "payload")
-  }
+      (id, y4mMono(w, h, frames, extraParams = " Xz" + ("q" * (id % 3).toInt)))
+    })
 
   case class FrameStats(asset_id: Long, frame_idx: Long, width: Long, height: Long,
                         n_frames: Long, sum_y: Long, mean_y: Double)
@@ -812,24 +831,17 @@ object Multimodal {
     * chroma-subsampled) are dropped under the decode quarantine contract.
     */
   def sampleFrames(spark: SparkSession, assets: DataFrame, step: Int): Dataset[FrameStats] = {
-    import spark.implicits._
     require(step > 0, s"frame-sample step must be positive, got $step")
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(it => it.flatMap { case (id, bytes) => parseY4m(id, bytes, step) })
+    perAsset(spark, assets)(parseY4m(_, _, step))
   }
 
-  /** Parse a mono y4m stream and return stats for frames at indices
-    * `0, step, 2·step, …`, each row carrying the TOTAL frame count (so a
-    * consumer can tell sampling density without a second pass). `Nil` for
-    * anything malformed: missing magic, non-mono chroma, a frame line not
-    * starting `FRAME`, or a truncated luma plane.
-    */
   /** The shared mono-y4m stream walk: validate the header, step through
     * FRAME records, and reduce every `step`-th luma plane with `reduce
     * (w, h, bodyOffset)` reading the plane in place (no copy). Returns
     * `(w, h, totalFrames, sampled (idx, value))`, or None for anything
-    * malformed — the single definition of the quarantine contract for
-    * both the frame-stat sampler and the per-frame perceptual hash.
+    * malformed: missing magic, non-mono chroma, a frame line not starting
+    * `FRAME`, or a truncated luma plane — the single definition of the
+    * y4m quarantine contract for every video consumer.
     */
   private def walkY4mMono[T](b: Array[Byte], step: Int)(
       reduce: (Int, Int, Int) => T): Option[(Int, Int, Long, Seq[(Int, T)])] = {
@@ -900,40 +912,27 @@ object Multimodal {
     * Everything is a closed form of (rep id, frame, x, y), so a SQL
     * oracle reproduces every hash bit of originals and replicas.
     */
-  def syntheticY4mReplicaPayloads(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val rep = if (id % 10 == 3) id - 1 else id
-        val w = (rep % 9 + 8).toInt
-        val h = (rep % 5 + 8).toInt
-        val nf = (rep % 7 + 3).toInt
-        val frames = (0 until nf).map { f =>
-          Array.tabulate(w * h) { i =>
-            val x = (i % w).toLong
-            val y = (i / w).toLong
-            val base = (rep * 7 + f * 19L + x * 13L + y * 31L +
-              (x * y + 3L) * (rep % 23)) % 250
-            val bump = if (id % 10 == 3 && f == 0 && i == 0) 60L else 0L
-            ((base + bump) % 250).toByte
-          }
+  def syntheticY4mReplicaPayloads(spark: SparkSession, docs: DataFrame): DataFrame =
+    generated(spark, docs)(_.map { id =>
+      val rep = if (id % 10 == 3) id - 1 else id
+      val w = (rep % 9 + 8).toInt
+      val h = (rep % 5 + 8).toInt
+      val nf = (rep % 7 + 3).toInt
+      val frames = (0 until nf).map { f =>
+        Array.tabulate(w * h) { i =>
+          val x = (i % w).toLong
+          val y = (i / w).toLong
+          val base = (rep * 7 + f * 19L + x * 13L + y * 31L +
+            (x * y + 3L) * (rep % 23)) % 250
+          val bump = if (id % 10 == 3 && f == 0 && i == 0) 60L else 0L
+          ((base + bump) % 250).toByte
         }
-        (id, y4mMono(w, h, frames))
       }
-    }.toDF("asset_id", "payload")
-  }
+      (id, y4mMono(w, h, frames))
+    })
 
   case class FrameHash(asset_id: Long, frame_idx: Long, n_frames: Long, fhash: Long)
 
-  /** Per-frame 56-bit dHash of a mono y4m stream at sampling `step` —
-    * [[dhash56]]'s grid/compare scheme applied to each sampled luma
-    * plane: 8×8 floor-mapped samples (`src = dst · dim / 8`), lum = the
-    * raw luma byte (the plane IS luminance — no RGB weights), bit
-    * `j·7 + (i−1)` set iff `lum(i,j) > lum(i−1,j)`. Planes are read in
-    * place inside the walk — payload bytes never copy, and only
-    * (id, frame, hash) rows shuffle. Malformed streams quarantine via
-    * the shared walker.
-    */
   /** The per-frame 56-bit dHash core shared by [[frameDhashes]] and
     * [[clipSignatures]] — one definition or the streaming signature and
     * the batch hash silently diverge.
@@ -956,17 +955,22 @@ object Multimodal {
     hash
   }
 
+  /** Per-frame 56-bit dHash of a mono y4m stream at sampling `step` —
+    * [[dhash56]]'s grid/compare scheme applied to each sampled luma
+    * plane: 8×8 floor-mapped samples (`src = dst · dim / 8`), lum = the
+    * raw luma byte (the plane IS luminance — no RGB weights), bit
+    * `j·7 + (i−1)` set iff `lum(i,j) > lum(i−1,j)`. Planes are read in
+    * place inside the walk — payload bytes never copy, and only
+    * (id, frame, hash) rows shuffle. Malformed streams quarantine via
+    * the shared walker.
+    */
   def frameDhashes(spark: SparkSession, assets: DataFrame, step: Int): Dataset[FrameHash] = {
-    import spark.implicits._
     require(step > 0, s"frame-sample step must be positive, got $step")
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(it => it.flatMap { case (id, bytes) =>
-        walkY4mMono(bytes, step)(frameDhash(bytes, _, _, _)) match {
-          case None => Nil
-          case Some((_, _, nf, sampled)) =>
-            sampled.map { case (f, hsh) => FrameHash(id, f.toLong, nf, hsh) }
-        }
-      })
+    perAsset(spark, assets) { (id, bytes) =>
+      walkY4mMono(bytes, step)(frameDhash(bytes, _, _, _)).toSeq.flatMap { case (_, _, nf, sampled) =>
+        sampled.map { case (f, hsh) => FrameHash(id, f.toLong, nf, hsh) }
+      }
+    }
   }
 
   case class ClipSig(asset_id: Long, csig: String, frame_idxs: Seq[Long],
@@ -986,27 +990,30 @@ object Multimodal {
     */
   def clipSignatures(spark: SparkSession, assets: DataFrame,
                      step: Int = 2): Dataset[ClipSig] = {
-    import spark.implicits._
     require(step > 0, s"frame-sample step must be positive, got $step")
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(it => it.flatMap { case (id, bytes) =>
-        walkY4mMono(bytes, step)(frameDhash(bytes, _, _, _)) match {
-          // a valid zero-frame stream emits NOTHING — frameDhashes (and
-          // therefore the batch signature groupBy it feeds) has no rows
-          // for such an asset, and an md5-of-empty signature here would
-          // make every frameless clip an "exact dup" of every other,
-          // breaking streaming/batch membership parity
-          case Some((_, _, _, sampled)) if sampled.nonEmpty =>
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val joined = sampled.map(_._2).mkString(",")
-            val sig = md.digest(joined.getBytes("UTF-8"))
-              .map(b => f"${b & 0xff}%02x").mkString
-            Seq(ClipSig(id, sig, sampled.map(_._1.toLong), sampled.map(_._2)))
-          case _ => Nil
-        }
-      })
+    perAsset(spark, assets) { (id, bytes) =>
+      walkY4mMono(bytes, step)(frameDhash(bytes, _, _, _)) match {
+        // a valid zero-frame stream emits NOTHING — frameDhashes (and
+        // therefore the batch signature groupBy it feeds) has no rows
+        // for such an asset, and an md5-of-empty signature here would
+        // make every frameless clip an "exact dup" of every other,
+        // breaking streaming/batch membership parity
+        case Some((_, _, _, sampled)) if sampled.nonEmpty =>
+          val md = java.security.MessageDigest.getInstance("MD5")
+          val joined = sampled.map(_._2).mkString(",")
+          val sig = md.digest(joined.getBytes("UTF-8"))
+            .map(b => f"${b & 0xff}%02x").mkString
+          Some(ClipSig(id, sig, sampled.map(_._1.toLong), sampled.map(_._2)))
+        case _ => None
+      }
+    }
   }
 
+  /** Stats for the frames of a mono y4m stream at indices
+    * `0, step, 2·step, …`, each row carrying the TOTAL frame count (so a
+    * consumer can tell sampling density without a second pass); `Nil`
+    * for a stream [[walkY4mMono]] quarantines.
+    */
   private[multimodal] def parseY4m(id: Long, b: Array[Byte], step: Int): Seq[FrameStats] =
     walkY4mMono(b, step) { (w, h, body) =>
       val frameSize = w * h
@@ -1036,44 +1043,15 @@ object Multimodal {
     * Rows ImageIO cannot decode are dropped (a production run would
     * route them to a quarantine sink instead).
     */
-  def decodePixels(spark: SparkSession, assets: DataFrame): Dataset[PixelStats] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // ImageIO scans its reader registry per MIME sniff; disabling the
-        // on-disk cache keeps the decode entirely in-memory per batch
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { case (id, bytes) =>
-          val img =
-            if (bytes == null) None
-            // NonFatal (see resizePixels): plugin RuntimeExceptions on
-            // corrupt payloads quarantine instead of failing the job
-            else try {
-              Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-            } catch { case scala.util.control.NonFatal(_) => None }
-          img.map { im =>
-            val w = im.getWidth
-            val h = im.getHeight
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = im.getRGB(x, y)
-                sr += (rgb >> 16) & 0xff
-                sg += (rgb >> 8) & 0xff
-                sb += rgb & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            val n = w.toLong * h
-            PixelStats(id, w.toLong, h.toLong, n, sr, sg, sb,
-              sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
-          }
-        }
-      }
-  }
+  def decodePixels(spark: SparkSession, assets: DataFrame): Dataset[PixelStats] =
+    decodeImages(spark, assets) { (id, im) =>
+      val w = im.getWidth
+      val h = im.getHeight
+      val (sr, sg, sb) = channelSums(im, w, h)
+      val n = w.toLong * h
+      PixelStats(id, w.toLong, h.toLong, n, sr, sg, sb,
+        sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+    }
 
   case class AudioEntropy(asset_id: Long, n_samples: Long, ent_sum_e4: Long)
 
@@ -1083,63 +1061,28 @@ object Multimodal {
     * (|s| >> 8), and the order-free quantized core
     * Σ round(cnt·ln(cnt)·10⁴) is exact-integer reproducible from the
     * synthetic sample generator by a SQL oracle. Silence/DC clips
-    * score 0; dithered noise saturates toward ln(min(n, 129)). Same
-    * RIFF chunk-walk contract as [[audioDhash56]] (mono PCM-16,
-    * quarantine on anything else); samples are read in place.
+    * score 0; dithered noise saturates toward ln(min(n, 129)).
+    * [[walkWav]]'s quarantine contract, mono only; samples are read in
+    * place.
     */
-  def audioEntropy(spark: SparkSession, assets: DataFrame): Dataset[AudioEntropy] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(it => it.flatMap { case (id, bytes) =>
-        audioAmpEntropy(id, bytes)
-      })
-  }
+  def audioEntropy(spark: SparkSession, assets: DataFrame): Dataset[AudioEntropy] =
+    perAsset(spark, assets)(audioAmpEntropy)
 
-  private[multimodal] def audioAmpEntropy(id: Long, b: Array[Byte]): Option[AudioEntropy] = {
-    if (b == null || b.length < 44) return None
-    def u8(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    def tag(i: Int) = new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    if (tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    var pos = 12
-    var fmt: Option[(Int, Int, Int)] = None
-    while (pos + 8 <= b.length) {
-      val id4 = tag(pos)
-      val size = le32(pos + 4)
-      val body = pos + 8
-      if (body + size > b.length) return None
-      id4 match {
-        case "fmt " =>
-          if (size < 16) return None
-          fmt = Some((le16(body), le16(body + 2), le16(body + 14)))
-        case "data" =>
-          val (audioFmt, ch, bits) = fmt.getOrElse(return None)
-          if (audioFmt != 1 || bits != 16 || ch != 1) return None
-          val n = (size / 2).toInt
-          if (n < 1 || size % 2 != 0) return None
-          val hist = new Array[Int](129)
-          var i = 0
-          while (i < n) {
-            val s = le16(body + 2 * i).toShort.toInt
-            hist(math.abs(s) >> 8) += 1
-            i += 1
-          }
-          var acc = 0L
-          var c = 0
-          while (c < 129) {
-            val k = hist(c)
-            if (k > 1) acc += Math.round(k * Math.log(k) * 10000.0)
-            c += 1
-          }
-          return Some(AudioEntropy(id, n.toLong, acc))
-        case _ => ()
+  /** Mono only, at least one sample. */
+  private[multimodal] def audioAmpEntropy(id: Long, b: Array[Byte]): Option[AudioEntropy] =
+    walkWav(b) { (_, ch, body, size) =>
+      val n = (size / 2).toInt
+      if (ch != 1 || n < 1 || size % 2 != 0) None
+      else {
+        val hist = new Array[Int](129)
+        var i = 0
+        while (i < n) {
+          hist(math.abs(s16(b, body + 2 * i)) >> 8) += 1
+          i += 1
+        }
+        Some(AudioEntropy(id, n.toLong, entropySumE4(hist)))
       }
-      pos = body + size.toInt + (size & 1).toInt
     }
-    None
-  }
 
   case class VideoEntropy(asset_id: Long, n_samples: Long, ent_sum_e4: Long)
 
@@ -1151,35 +1094,23 @@ object Multimodal {
     * across every frame; normal footage spreads. Shares
     * [[walkY4mMono]]'s quarantine contract; planes are read in place.
     */
-  def videoEntropy(spark: SparkSession, assets: DataFrame, step: Int): Dataset[VideoEntropy] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(it => it.flatMap { case (id, bytes) =>
-        val hist = new Array[Int](256)
-        walkY4mMono(bytes, step) { (w, h, body) =>
-          var j = 0
-          while (j < 8) {
-            val sy = j * h / 8
-            var i = 0
-            while (i < 8) {
-              hist(bytes(body + sy * w + i * w / 8) & 0xff) += 1
-              i += 1
-            }
-            j += 1
+  def videoEntropy(spark: SparkSession, assets: DataFrame, step: Int): Dataset[VideoEntropy] =
+    perAsset(spark, assets) { (id, bytes) =>
+      val hist = new Array[Int](256)
+      walkY4mMono(bytes, step) { (w, h, body) =>
+        var j = 0
+        while (j < 8) {
+          val sy = j * h / 8
+          var i = 0
+          while (i < 8) {
+            hist(bytes(body + sy * w + i * w / 8) & 0xff) += 1
+            i += 1
           }
-          0
-        }.map { case (_, _, _, sampled) =>
-          var acc = 0L
-          var c = 0
-          while (c < 256) {
-            val k = hist(c)
-            if (k > 1) acc += Math.round(k * Math.log(k) * 10000.0)
-            c += 1
-          }
-          VideoEntropy(id, 64L * sampled.size, acc)
+          j += 1
         }
-      })
-  }
+        0
+      }.map { case (_, _, _, sampled) => VideoEntropy(id, 64L * sampled.size, entropySumE4(hist)) }
+    }
 
   case class ImageEntropy(asset_id: Long, n_px: Long, ent_sum_e4: Long)
 
@@ -1194,43 +1125,23 @@ object Multimodal {
     * closed-form pixel generator by a SQL oracle. Per-partition work;
     * only (id, n, sum) rows shuffle.
     */
-  def imageEntropy(spark: SparkSession, assets: DataFrame): Dataset[ImageEntropy] = {
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.flatMap { case (id, bytes) =>
-          val img =
-            if (bytes == null) None
-            else try {
-              Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-            } catch { case scala.util.control.NonFatal(_) => None }
-          img.map { im =>
-            val w = im.getWidth
-            val h = im.getHeight
-            val hist = new Array[Int](256)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = im.getRGB(x, y)
-                val lum = (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff)
-                  + 114 * (rgb & 0xff)) / 1000
-                hist(lum) += 1
-                x += 1
-              }
-              y += 1
-            }
-            var acc = 0L
-            var c = 0
-            while (c < 256) {
-              val k = hist(c)
-              if (k > 1) acc += Math.round(k * Math.log(k) * 10000.0)
-              c += 1
-            }
-            ImageEntropy(id, w.toLong * h, acc)
-          }
+  def imageEntropy(spark: SparkSession, assets: DataFrame): Dataset[ImageEntropy] =
+    decodeImages(spark, assets) { (id, im) =>
+      val w = im.getWidth
+      val h = im.getHeight
+      val hist = new Array[Int](256)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val rgb = im.getRGB(x, y)
+          val lum = (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff)
+            + 114 * (rgb & 0xff)) / 1000
+          hist(lum) += 1
+          x += 1
         }
+        y += 1
       }
-  }
+      ImageEntropy(id, w.toLong * h, entropySumE4(hist))
+    }
 }

@@ -145,7 +145,7 @@ object FeatureSpace {
     * post-collect check, so the cap semantics stay exact.
     */
   def adapt(df: DataFrame, specs: Seq[FeatureSpec], adaptRows: Option[Long] = None,
-            onePass: Boolean = false, maxVocab: Int = DefaultMaxVocab): FeatureStats = {
+            maxVocab: Int = DefaultMaxVocab): FeatureStats = {
     // "first N rows" is only deterministic if the caller passes an
     // ordered frame (Pipeline orders by row_idx); clamp >Int.MaxValue
     // requests to "all rows" instead of wrapping via toInt
@@ -155,7 +155,7 @@ object FeatureSpace {
       case Normalized(c) => c
       case Rescaled(c) => c
     }.distinct
-    val numeric: Map[String, ColumnStats] = numericStats(sample, numericCols, onePass)
+    val numeric: Map[String, ColumnStats] = numericStats(sample, numericCols)
     val vocabCols = specs.collect {
       case OneHotString(c) => c
       case StringIndexed(c) => c
@@ -182,34 +182,17 @@ object FeatureSpace {
     FeatureStats(numeric, vocab)
   }
 
-  /** Numeric stats for `cols` in ONE aggregation job. Two formulations,
-    * both single-scan with map-side partial aggregation:
-    *
-    *  - `onePass = false` (default): the built-in `avg`/`var_pop`/`min`/
-    *    `max` expression set — 4·N expressions, but every one lives
-    *    inside WholeStageCodegen. Measured at sf0.1 (1M rows × 4 cols,
-    *    local[32], median of 5): **0.19 s**.
-    *  - `onePass = true`: one [[WelfordAgg]] struct buffer per column via
-    *    `udaf` — N mergeable (count, mean, M2, min, max) buffers,
-    *    numerically stable (Welford update, Chan parallel merge), but the
-    *    ScalaAggregator path abandons codegen and pays an encoder
-    *    round-trip per row. Measured: **0.37 s** on the same input — ~2×
-    *    the codegen path, and the gap is CPU-bound so it survives a
-    *    scale-up. Use it when catastrophic cancellation in `var_pop`'s
-    *    sum-of-squares is a real risk (huge means, tiny variances) or
-    *    from the typed/streaming surface, not as the batch default.
+  /** Numeric stats for `cols` in ONE aggregation job: the built-in
+    * `avg`/`var_pop`/`min`/`max` expression set, 4·N expressions, every
+    * one inside WholeStageCodegen with map-side partial aggregation.
+    * Measured at sf0.1 (1M rows × 4 cols, local[32], median of 5):
+    * 0.19 s, against 0.37 s for one [[WelfordAgg]] buffer per column
+    * through `udaf` (the ScalaAggregator path abandons codegen and pays
+    * an encoder round-trip per row).
     */
-  def numericStats(sample: DataFrame, cols: Seq[String], onePass: Boolean): Map[String, ColumnStats] =
+  def numericStats(sample: DataFrame, cols: Seq[String]): Map[String, ColumnStats] =
     if (cols.isEmpty) Map.empty
-    else if (onePass) {
-      val exprs = cols.map(c => WelfordAgg.statsUdaf(col(c).cast("double")).as(s"${c}__w"))
-      val row = sample.agg(exprs.head, exprs.tail: _*).head()
-      cols.map { c =>
-        val r = row.getAs[org.apache.spark.sql.Row](s"${c}__w")
-        c -> ColumnStats(r.getAs[Double]("mean"), r.getAs[Double]("varPop"),
-          r.getAs[Double]("min"), r.getAs[Double]("max"))
-      }.toMap
-    } else {
+    else {
       val exprs = cols.flatMap { c =>
         Seq(avg(col(c)).as(s"${c}__mean"), var_pop(col(c)).as(s"${c}__var"),
             min(col(c)).cast("double").as(s"${c}__min"), max(col(c)).cast("double").as(s"${c}__max"))

@@ -63,14 +63,12 @@ object Fill {
     * temporary column of a first `select`, and `fill` reads those columns
     * in a second `select` that drops them. Every input column keeps its
     * name, values and position; an input column named `out` is replaced in
-    * place, as `withColumn` does. The temporaries, `__fill_<i>`, match no
-    * input column and not `out`, compared case-insensitively as Spark's
-    * default resolver does.
+    * place, as `withColumn` does. The temporaries are named by
+    * [[tempNames]].
     */
   private def bindOnce(df: DataFrame, out: String, windows: Column*)
                       (fill: Seq[Column] => Column): DataFrame = {
-    val taken = (df.columns :+ out).map(_.toLowerCase(Locale.ROOT)).toSet
-    val temps = Iterator.from(0).map(i => s"__fill_$i").filterNot(taken).take(windows.size).toSeq
+    val temps = tempNames(df, out, windows.size)
     val bound = df.select(col("*") +: windows.zip(temps).map { case (w, t) => w.as(t) }: _*)
     val value = fill(temps.map(col)).as(out)
     def same(c: String) = c.equalsIgnoreCase(out)
@@ -78,19 +76,34 @@ object Fill {
     bound.select((if (df.columns.exists(same)) kept else kept :+ value): _*)
   }
 
+  /** `n` temporary column names, `__fill_<i>`, that match no column of
+    * `df` and not `out`, compared case-insensitively as Spark's default
+    * resolver does.
+    */
+  private def tempNames(df: DataFrame, out: String, n: Int): Seq[String] = {
+    val taken = (df.columns :+ out).map(_.toLowerCase(Locale.ROOT)).toSet
+    Iterator.from(0).map(i => s"__fill_$i").filterNot(taken).take(n).toSeq
+  }
+
   /** `df` with `out` = `fill(prev, next)`, where `prev` / `next` are the
     * nearest non-null observation of `v` strictly before / after each row,
     * as `(t, v)` structs (null when there is none), each bound once. `t`
     * and `v` always come from the same row, so `fill` reads a consistent
-    * pair.
+    * pair. The observation struct is itself bound once, as a temporary
+    * column below the window: were `lag` and `lead` handed the struct
+    * expression, Catalyst would extract it once per window function and
+    * shuffle every row with two identical structs.
     */
   private def withNeighbours(df: DataFrame, out: String, v: Column, tsSec: Column,
                              partitionBy: Seq[String], orderBy: Seq[String])
                             (fill: (Column, Column) => Column): DataFrame = {
     val w = part(partitionBy, orderBy)
-    val s = when(v.isNotNull, struct(tsSec.as("t"), v.as("v")))
-    bindOnce(df, out, lag(s, 1, null, ignoreNulls = true).over(w),
-      lead(s, 1, null, ignoreNulls = true).over(w)) { case Seq(prev, next) => fill(prev, next) }
+    val Seq(obs) = tempNames(df, out, 1)
+    val s = col(obs)
+    bindOnce(df.select(col("*"), when(v.isNotNull, struct(tsSec.as("t"), v.as("v"))).as(obs)), out,
+        lag(s, 1, null, ignoreNulls = true).over(w), lead(s, 1, null, ignoreNulls = true).over(w)) {
+      case Seq(prev, next) => fill(prev, next)
+    }.drop(obs)
   }
 
   /** The observed value, else the linear value between `prev` and `next`,

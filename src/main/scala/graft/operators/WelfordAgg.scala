@@ -56,26 +56,4 @@ object WelfordAgg {
 
   /** Typed column for `Dataset[Double].select(...)` / typed agg. */
   def stats: TypedColumn[Double, Stats] = aggregator.toColumn
-
-  /** Null-skipping variant for untyped (DataFrame) aggregation — boxed
-    * input so SQL NULLs reach `reduce` as `null` and are ignored, matching
-    * the built-in `avg`/`var_pop`/`min`/`max` null semantics.
-    */
-  val nullSafeAggregator: Aggregator[java.lang.Double, Buf, Stats] =
-    new Aggregator[java.lang.Double, Buf, Stats] {
-      override def zero: Buf = WelfordAgg.zero
-      override def reduce(b: Buf, x: java.lang.Double): Buf =
-        if (x == null) b else update(b, x.doubleValue())
-      override def merge(a: Buf, b: Buf): Buf = WelfordAgg.merge(a, b)
-      override def finish(b: Buf): Stats = WelfordAgg.finish(b)
-      override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-      override def outputEncoder: Encoder[Stats] = Encoders.product[Stats]
-    }
-
-  /** Untyped aggregate function: `statsUdaf(col)` yields one struct
-    * `(n, mean, varPop, min, max)` — the one-buffer-per-column adapt
-    * primitive (vs 4 separate aggregate expressions per column).
-    */
-  lazy val statsUdaf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(nullSafeAggregator, Encoders.DOUBLE)
 }

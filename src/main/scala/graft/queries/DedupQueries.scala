@@ -81,26 +81,22 @@ object DedupQueries {
   /** Text-LSH cluster labels (doc_id, canonical), shared by FOUR
     * consumers (dedup_cluster, dedup_cluster_best, split_leak_safe,
     * split_leakage), which each used to re-run the union-find probe
-    * over the same verified pair set. Only the small-graph result (a
-    * driver-local LocalRelation — plan-literal rows, nothing to lose)
-    * is memoized; the memo holds None for a large graph. The
-    * distributed fixpoint result is rooted in localCheckpoint blocks
-    * with TRUNCATED lineage: pinning it session-wide would turn one
-    * lost executor into a sticky, unrecoverable failure for all four
-    * consumers, so the large path rebuilds per call (recoverable, and
-    * already the pre-memo behavior).
+    * over the same verified pair set. The memo keys on which branch of
+    * [[Dedup.clusterLabels]] ran: the small-graph result (a driver-local
+    * relation — plan-literal rows, nothing to lose) is memoized, and for
+    * a large graph the memo holds None, so the size probe runs once per
+    * data stamp. The distributed fixpoint result is rooted in
+    * localCheckpoint blocks with TRUNCATED lineage: pinning it
+    * session-wide would turn one lost executor into a sticky,
+    * unrecoverable failure for all four consumers, so the large path
+    * rebuilds per call (recoverable, and already the pre-memo behavior).
     */
-  private def textClusterLabels(s: SparkSession, d: String): DataFrame = {
-    var built: Option[DataFrame] = None
-    Memo.value(s, d, "textClusterLabels") {
-      built = Some(Dedup.clusterLabels(verifiedPairs(s, d)))
-      built.filter(_.queryExecution.logical
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-    }.orElse(built).getOrElse {
-      MemoTrace.built("textClusterLabels")
-      Dedup.clusterLabels(verifiedPairs(s, d))
-    }
-  }
+  private def textClusterLabels(s: SparkSession, d: String): DataFrame =
+    Memo.value(s, d, "textClusterLabels")(Dedup.localClusterLabels(verifiedPairs(s, d)))
+      .getOrElse {
+        MemoTrace.built("textClusterLabels")
+        Dedup.clusterLabelsWithRounds(verifiedPairs(s, d))._1
+      }
 
   // ========================================================================
   // dedup_exact — canonical-fingerprint group-by: one map-side-combined

@@ -338,7 +338,7 @@ object RelQueries {
   // key idle longer than the horizon "expires" and its next occurrence
   // is kept again. The batch analog of the streaming `dedup_ttl`
   // pipeline (dropDuplicatesWithinWatermark /
-  // StreamingDedup.keepFirstFn's idle-TTL state): both re-arm the
+  // KeepFirst.keepFirstFn's idle-TTL state): both re-arm the
   // horizon on EVERY occurrence, kept or dropped — gap > horizon from
   // the PREVIOUS row, not from the last kept row — because that is what
   // idle-timeout state eviction does. This is the dedup a rolling-

@@ -263,54 +263,12 @@ object Similarity {
   val MaxExprCells: Int = 48
 
   /** Attach a learned-quantizer cell column as a [[nearestCentroid]]
-    * pure projection — zero exchanges at any k (plan-guarded). Pass
-    * `useJoin = true` to route through [[kmeansAssignJoin]] instead for
-    * the memory-constrained regime where even one flattened codebook
-    * per task is too much (k·dims in the tens of millions); both paths
-    * score `dot(vec, cvec) / cnrm` with ties to the smallest cell, so
-    * the switch is result-transparent.
+    * pure projection — zero exchanges at any k (plan-guarded); scores
+    * `dot(vec, cvec) / cnrm` with ties to the smallest cell.
     */
   def kmeansAssign(df: DataFrame, vecCol: String, cent: DataFrame,
-                   cellName: String, useJoin: Boolean = false): DataFrame = {
-    val cents = collectCentroids(cent)
-    if (useJoin)
-      kmeansAssignJoin(df, vecCol, localizeCentroids(df.sparkSession, cents), cellName)
-    else
-      df.withColumn(cellName, nearestCentroid(col(vecCol), cents))
-  }
-
-  /** Relational argmax assignment — the memory-constrained fallback
-    * behind [[kmeansAssign]]'s `useJoin` flag: broadcast the centroid
-    * frame (k rows), score every (row, centroid) pair with the codegen
-    * dot, reduce to the best cell per row with ONE
-    * `max(struct(score, negcell))` aggregation. The k-fold intermediate
-    * stays partition-local (broadcast join) and the max
-    * partial-aggregates map-side, but the `groupBy` still EXCHANGES one
-    * aggregated row per input row per assignment pass — the projection
-    * path exchanges nothing, which is why it is the default. Scoring
-    * and tie-break (`dot/cnrm`, smallest cell wins) are bit-identical
-    * to [[nearestCentroid]] — SimilaritySpec asserts path equivalence.
-    *
-    * Original columns ride through `first(...)` aggregates: every group
-    * is the k broadcast copies of ONE input row, so `first` is
-    * deterministic by construction. The row key is
-    * `monotonically_increasing_id` taken BEFORE the join — unique per
-    * physical row, never exposed downstream.
-    */
-  def kmeansAssignJoin(df: DataFrame, vecCol: String, cent: DataFrame,
-                       cellName: String): DataFrame = {
-    val others = df.columns.toSeq
-    val scored = df.withColumn("__aj_id", monotonically_increasing_id())
-      .crossJoin(broadcast(cent.select(col("cell"), col("cvec"), col("cnrm"))))
-      .withColumn("__aj_s",
-        struct((dot(col(vecCol), col("cvec")) / col("cnrm")).as("score"),
-          (-col("cell")).as("negcell")))
-    val aggs = others.map(c => first(col(c)).as(c)) :+ max(col("__aj_s")).as("__aj_best")
-    scored.groupBy(col("__aj_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn(cellName, -col("__aj_best").getField("negcell"))
-      .select(others.map(col) :+ col(cellName): _*)
-  }
+                   cellName: String): DataFrame =
+    df.withColumn(cellName, nearestCentroid(col(vecCol), collectCentroids(cent)))
 
   /** Re-materialize collected centroids as a LOCAL relation (cell, cvec,
     * cnrm). A learned-centroid DataFrame's plan re-runs the whole Lloyd

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** The streaming curation funnel — the continuous counterpart of the
   * batch `pipeline_curate` flagship (and the `use_streaming` promise the
@@ -32,44 +32,25 @@ object StreamingCurate {
 
   case class CurateDoc(fp: String, doc_id: Long, source: String,
                        n_re: Long, score: Double)
-  case class CuratedRow(doc_id: Long, source: String, n_re: Long, score: Double)
-
-  /** Per-fingerprint admission: emit the first-ever arrival (smallest
-    * id within the micro-batch), swallow every later duplicate —
-    * including redeliveries of the keeper itself (at-least-once
-    * sources must not emit a document twice).
-    */
-  def keepFirstPassFn(ttl: Option[String])(fp: String, rows: Iterator[CurateDoc],
-      state: GroupState[Long]): Iterator[CuratedRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val sorted = rows.toSeq.sortBy(_.doc_id)
-    val out =
-      if (state.exists) Iterator.empty
-      else sorted.headOption
-        .map(d => CuratedRow(d.doc_id, d.source, d.n_re, d.score)).iterator
-    val keeper = if (state.exists) state.get else sorted.head.doc_id
-    state.update(keeper)
-    ttl.foreach(state.setTimeoutDuration)
-    out
-  }
 
   /** Wire the funnel over a streaming document frame (`doc_id`,
     * `source`, `text` columns): emits one (doc_id, source, n_re, score)
     * row per admitted document — the streaming rendering of the batch
-    * funnel's survivor set. Pass `ttl` (e.g. `"1 hour"`) to bound
-    * per-fingerprint state on unbounded corpora.
+    * funnel's survivor set. Admission is [[KeepFirst.passFirstFn]]: per
+    * fingerprint the first-ever arrival passes and every later duplicate,
+    * keeper redeliveries included, is swallowed. Pass `ttl` (e.g.
+    * `"1 hour"`) to bound per-fingerprint state on unbounded corpora.
     */
   def curate(spark: SparkSession, docs: DataFrame,
              ttl: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val timeout = if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
     graft.queries.TextQueries.curateFeatures(docs)
       .select(col("fp"), col("doc_id"), col("source"), col("n_re"), col("score"))
       .as[CurateDoc]
       .groupByKey(_.fp)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(keepFirstPassFn(ttl))
-      .toDF("doc_id", "source", "n_re", "score")
+      .flatMapGroupsWithState(OutputMode.Append, KeepFirst.timeout(ttl))(
+        KeepFirst.passFirstFn(ttl, (_: CurateDoc).doc_id))
+      .drop("fp")
   }
 
   /** Stateless Gopher-rule admission on a document stream: evaluate
@@ -116,23 +97,6 @@ object StreamingCurate {
 
   case class CurateFullDoc(fp: String, doc_id: Long, source: String,
                            n_re: Long, score: Double, top2_frac: Double)
-  case class CuratedFullRow(doc_id: Long, source: String, n_re: Long,
-                            score: Double, top2_frac: Double)
-
-  private def keepFirstFullFn(ttl: Option[String])(fp: String,
-      rows: Iterator[CurateFullDoc],
-      state: GroupState[Long]): Iterator[CuratedFullRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val sorted = rows.toSeq.sortBy(_.doc_id)
-    val out =
-      if (state.exists) Iterator.empty
-      else sorted.headOption.map(d =>
-        CuratedFullRow(d.doc_id, d.source, d.n_re, d.score, d.top2_frac)).iterator
-    val keeper = if (state.exists) state.get else sorted.head.doc_id
-    state.update(keeper)
-    ttl.foreach(state.setTimeoutDuration)
-    out
-  }
 
   /** The ALL-GATES funnel over a document stream — the continuous
     * counterpart of the batch `pipeline_curate_full`: benchmark
@@ -149,16 +113,15 @@ object StreamingCurate {
                  contaminatedIds: DataFrame,
                  ttl: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val timeout = if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
     graft.queries.TextQueries.curateFullFeatures(docs)
       .join(contaminatedIds.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("fp"), col("doc_id"), col("source"), col("n_re"),
         col("score"), col("top2_frac"))
       .as[CurateFullDoc]
       .groupByKey(_.fp)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(keepFirstFullFn(ttl))
-      .toDF("doc_id", "source", "n_re", "score", "top2_frac")
+      .flatMapGroupsWithState(OutputMode.Append, KeepFirst.timeout(ttl))(
+        KeepFirst.passFirstFn(ttl, (_: CurateFullDoc).doc_id))
+      .drop("fp")
   }
 
   /** [[curateFull]] with the contamination screen as a Bloom SKETCH of
@@ -183,8 +146,6 @@ object StreamingCurate {
                       bloom: org.apache.spark.util.sketch.BloomFilter,
                       ttl: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val timeout = if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
     // the probe precedes the feature projection (which drops `text`);
     // every gate is per-row, so ordering cannot change the admitted set
     graft.queries.TextQueries.curateFullFeatures(
@@ -194,8 +155,9 @@ object StreamingCurate {
         col("score"), col("top2_frac"))
       .as[CurateFullDoc]
       .groupByKey(_.fp)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(keepFirstFullFn(ttl))
-      .toDF("doc_id", "source", "n_re", "score", "top2_frac")
+      .flatMapGroupsWithState(OutputMode.Append, KeepFirst.timeout(ttl))(
+        KeepFirst.passFirstFn(ttl, (_: CurateFullDoc).doc_id))
+      .drop("fp")
   }
 
   /** The LM-perplexity admission gate as a CONTINUOUS stage: each

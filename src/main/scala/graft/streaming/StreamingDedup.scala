@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 import graft.text.TextOps
 
@@ -37,60 +37,27 @@ object StreamingDedup {
 
   case class FpDoc(fp: String, docId: Long)
 
-  /** Incremental keep-first resolution (the streaming `dupOfFirst`):
-    * per fingerprint, the first-admitted document becomes the keeper;
-    * every later arrival emits (doc_id, dup_of = keeper). Within one
-    * micro-batch arrival order is nondeterministic, so the batch's
-    * members are ordered by id before admission (smallest id = keeper,
-    * matching the batch `exactGroups`/`dupOfFirst` tie-break); across
+  /** Incremental keep-first resolution (the streaming `dupOfFirst`) over
+    * a streaming document frame, keyed by fingerprint
+    * ([[KeepFirst.keepFirstFn]]): emits one (doc_id, dup_of) row per
+    * detected duplicate. The smallest id of a micro-batch is the keeper,
+    * matching the batch `exactGroups`/`dupOfFirst` tie-break; across
     * micro-batches the EARLIER batch's keeper wins — true streaming
-    * semantics.
-    *
-    * `ttl` bounds state on an unbounded corpus: a fingerprint idle
-    * longer than the TTL is evicted (processing-time timeout), so a
-    * later re-arrival of the same text is admitted as a NEW keeper —
-    * the same retention trade [[exactDedup]] makes via its watermark.
-    * `None` keeps state forever (bounded corpora / upstream retention).
-    */
-  def keepFirstFn(ttl: Option[String])(fp: String, rows: Iterator[FpDoc],
-                  state: GroupState[Long]): Iterator[(Long, Long)] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val sorted = rows.map(_.docId).toSeq.sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var keeper = if (state.exists) Some(state.get) else None
-    sorted.foreach { id =>
-      keeper match {
-        case None => keeper = Some(id) // first ever seen: admit silently
-        // a redelivery of the keeper itself (at-least-once sources) must
-        // not emit (k, k) — that would mark the only copy a duplicate
-        case Some(k) if id != k => out += ((id, k))
-        case _ => ()
-      }
-    }
-    keeper.foreach { k =>
-      state.update(k)
-      // re-arm on every batch that touches the key: TTL measures IDLE
-      // time, so hot duplicates never expire mid-stream
-      ttl.foreach(state.setTimeoutDuration)
-    }
-    out.iterator
-  }
-
-  /** Wire [[keepFirstFn]] over a streaming document frame: emits one
-    * (doc_id, dup_of) row per detected duplicate. Pass `ttl` (e.g.
-    * `"1 hour"`) to bound per-fingerprint state on unbounded corpora.
+    * semantics. Pass `ttl` (e.g. `"1 hour"`) to bound per-fingerprint
+    * state on unbounded corpora: an evicted fingerprint's re-arrival is
+    * a NEW keeper, the retention trade [[exactDedup]] makes via its
+    * watermark.
     */
   def keepFirst(spark: SparkSession, docs: DataFrame,
                 textCol: String, idCol: String,
                 ttl: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val timeout = if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
     docs
       .select(TextOps.fingerprint(col(textCol)).as("fp"), col(idCol).cast("long").as("docId"))
       .as[FpDoc]
       .groupByKey(_.fp)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(keepFirstFn(ttl))
+      .flatMapGroupsWithState(OutputMode.Append, KeepFirst.timeout(ttl))(
+        KeepFirst.keepFirstFn(ttl, (_: FpDoc).docId))
       .toDF("doc_id", "dup_of")
   }
 
@@ -185,8 +152,7 @@ object StreamingDedup {
       .as[BandedDoc]
       .groupByKey(d => (d.band, d.bandKey))
       .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(lshCandidatesFn(ttl))
+        KeepFirst.timeout(ttl))(lshCandidatesFn(ttl))
       .toDF("id_a", "id_b")
   }
 
@@ -274,8 +240,7 @@ object StreamingDedup {
       .as[BandedDocSet]
       .groupByKey(d => (d.band, d.bandKey))
       .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(lshVerifiedFn(threshold, ttl))
+        KeepFirst.timeout(ttl))(lshVerifiedFn(threshold, ttl))
       .toDF("id_a", "id_b", "jaccard")
   }
 
@@ -404,8 +369,7 @@ object StreamingDedup {
       .as[BucketVec]
       .groupByKey(_.bucket)
       .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(embeddingLshFn(threshold, ttl))
+        KeepFirst.timeout(ttl))(embeddingLshFn(threshold, ttl))
       .toDF("id_a", "id_b", "cos")
   }
 
@@ -515,13 +479,11 @@ object StreamingDedup {
   def clusterKeepFirst(spark: SparkSession, pairs: DataFrame,
                        ttl: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val timeout = if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
     pairs
       .select(col("id_a").cast("long"), col("id_b").cast("long"))
       .as[(Long, Long)]
       .groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(clusterKeepFirstFn(ttl))
+      .flatMapGroupsWithState(OutputMode.Append, KeepFirst.timeout(ttl))(clusterKeepFirstFn(ttl))
       .toDF("doc_id", "canonical")
   }
 

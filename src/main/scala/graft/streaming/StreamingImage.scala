@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 /** Streaming counterpart of the IMAGE near-dup family
   * ([[graft.queries.DedupQueries]] `dedup_image_phash` /
@@ -51,40 +51,14 @@ object StreamingImage {
 
   case class PhAsset(phash: Long, assetId: Long)
 
-  /** Exact perceptual keep-first, keyed by the 56-bit hash: per hash the
-    * first-admitted asset becomes the keeper; every later arrival emits
-    * (asset_id, dup_of, phash). Within one micro-batch arrival order is
-    * nondeterministic, so members are admitted in sorted asset-id order
-    * (smallest id = keeper, matching the batch `min(asset_id)` keeper
-    * election in `imageShared.grp`); across micro-batches the EARLIER
-    * batch's keeper wins. Redeliveries of the keeper itself emit
-    * nothing. `ttl` bounds state per the idle-eviction contract.
-    */
-  def keepFirstFn(ttl: Option[String])(phash: Long, rows: Iterator[PhAsset],
-                  state: GroupState[Long]): Iterator[(Long, Long, Long)] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val sorted = rows.map(_.assetId).toSeq.sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var keeper = if (state.exists) Some(state.get) else None
-    sorted.foreach { id =>
-      keeper match {
-        case None => keeper = Some(id)
-        case Some(k) if id != k => out += ((id, k, phash))
-        case _ => ()
-      }
-    }
-    keeper.foreach { k =>
-      state.update(k)
-      ttl.foreach(state.setTimeoutDuration)
-    }
-    out.iterator
-  }
-
-  /** Keyed keep-first over ANY streaming (id, 64-bit-hash) relation —
-    * the admission stage shared by every perceptual-hash modality
-    * (image dHash, audio amplitude dHash; the video clip signature is a
-    * string — [[StreamingVideo.sigKeepFirst]] is its string-keyed
-    * twin). Emits (asset_id, dup_of, hash) per exact duplicate.
+  /** Keyed keep-first ([[KeepFirst.keepFirstFn]]) over ANY streaming
+    * (id, 64-bit-hash) relation — the admission stage shared by every
+    * perceptual-hash modality (image dHash, audio amplitude dHash; the
+    * video clip signature is a string — [[StreamingVideo.sigKeepFirst]]
+    * is its string-keyed twin). Per hash the smallest id is the keeper
+    * (the batch `min(asset_id)` keeper election in `imageShared.grp`);
+    * emits (asset_id, dup_of, hash) per exact duplicate. `ttl` bounds
+    * state per the idle-eviction contract.
     */
   def hashKeepFirst(spark: SparkSession, hashed: DataFrame,
                     hashCol: String, idCol: String,
@@ -94,13 +68,14 @@ object StreamingImage {
       .select(col(hashCol).cast("long").as("phash"), col(idCol).cast("long").as("assetId"))
       .as[PhAsset]
       .groupByKey(_.phash)
-      .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(keepFirstFn(ttl))
+      .flatMapGroupsWithState(OutputMode.Append, KeepFirst.timeout(ttl)) {
+        (h: Long, rows: Iterator[PhAsset], s: GroupState[Long]) =>
+          KeepFirst.keepFirstFn(ttl, (_: PhAsset).assetId)(h, rows, s).map { case (i, k) => (i, k, h) }
+      }
       .toDF("asset_id", "dup_of", "phash")
   }
 
-  /** Wire decode→hash→[[keepFirstFn]] over a streaming asset frame:
+  /** Wire decode→hash→[[hashKeepFirst]] over a streaming asset frame:
     * emits one (asset_id, dup_of, phash) row per exact perceptual
     * duplicate detected.
     */
@@ -160,8 +135,7 @@ object StreamingImage {
       .as[BandedHash]
       .groupByKey(h => (h.band, h.bkey))
       .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(bandPairsFn(maxHamming, ttl))
+        KeepFirst.timeout(ttl))(bandPairsFn(maxHamming, ttl))
       .toDF("phash_a", "phash_b", "hamming")
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 /** Streaming counterpart of the VIDEO near-dup family
   * ([[graft.queries.DedupQueries]] `dedup_video_phash` /
@@ -49,37 +49,12 @@ object StreamingVideo {
 
   case class SigAsset(csig: String, assetId: Long)
 
-  /** Exact perceptual keep-first keyed by the clip-signature string:
-    * per signature the first-admitted clip is the keeper; later
-    * arrivals emit (asset_id, dup_of, csig). In-batch arrival order is
-    * nondeterministic so members admit in sorted asset-id order
-    * (min id = keeper, the batch `min(asset_id)` rep election in the
-    * video signature groups); across micro-batches the earlier batch's
-    * keeper wins.
-    */
-  def sigKeepFirstFn(ttl: Option[String])(csig: String, rows: Iterator[SigAsset],
-                     state: GroupState[Long]): Iterator[(Long, Long, String)] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val sorted = rows.map(_.assetId).toSeq.sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-    var keeper = if (state.exists) Some(state.get) else None
-    sorted.foreach { id =>
-      keeper match {
-        case None => keeper = Some(id)
-        case Some(k) if id != k => out += ((id, k, csig))
-        case _ => ()
-      }
-    }
-    keeper.foreach { k =>
-      state.update(k)
-      ttl.foreach(state.setTimeoutDuration)
-    }
-    out.iterator
-  }
-
-  /** Wire walk→signature→[[sigKeepFirstFn]] over a streaming clip frame
-    * (`asset_id`, `payload`): emits one (asset_id, dup_of, csig) row per
-    * exact perceptual duplicate clip.
+  /** Exact perceptual keep-first keyed by the clip-signature string
+    * ([[KeepFirst.keepFirstFn]]) over a streaming clip frame
+    * (`asset_id`, `payload`): per signature the smallest id is the
+    * keeper (the batch `min(asset_id)` rep election in the video
+    * signature groups); emits one (asset_id, dup_of, csig) row per exact
+    * perceptual duplicate clip.
     */
   def sigKeepFirst(spark: SparkSession, assets: DataFrame,
                    ttl: Option[String] = None): DataFrame = {
@@ -88,9 +63,10 @@ object StreamingVideo {
       .select(col("csig"), col("asset_id").as("assetId"))
       .as[SigAsset]
       .groupByKey(_.csig)
-      .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(sigKeepFirstFn(ttl))
+      .flatMapGroupsWithState(OutputMode.Append, KeepFirst.timeout(ttl)) {
+        (sig: String, rows: Iterator[SigAsset], s: GroupState[Long]) =>
+          KeepFirst.keepFirstFn(ttl, (_: SigAsset).assetId)(sig, rows, s).map { case (i, k) => (i, k, sig) }
+      }
       .toDF("asset_id", "dup_of", "csig")
   }
 
@@ -131,8 +107,7 @@ object StreamingVideo {
       }
       .groupByKey(c => (c.band, c.bkey))
       .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(
+        KeepFirst.timeout(ttl))(
         clipBandPairsFn(maxTotalHamming, minAligned, ttl))
       .toDF("sig_a", "sig_b", "n_aligned", "total_hamming")
   }

@@ -413,4 +413,85 @@ class MultimodalSpec extends SparkSpec {
     assert(s1.ent_sum_e4 < s0.ent_sum_e4)                            // spread bins
     assert(math.abs(math.log(64) - s0.ent_sum_e4 / (64 * 10000.0)) < 1e-4)
   }
+
+  // ------------------------------------------------------------------
+  // The quarantine contracts, one table per container, run through
+  // every consumer of that container's walk
+  // ------------------------------------------------------------------
+
+  /** A RIFF/WAVE payload built chunk by chunk: a `fmt ` chunk of
+    * `fmtSize` bytes (the first 16 hold format, channels, rate, byte
+    * rate, block align and bits), then a `data` chunk of `data` bytes,
+    * or the two in the other order.
+    */
+  private def wav(data: Array[Byte], format: Int = 1, channels: Int = 1, bits: Int = 16,
+                  fmtSize: Int = 16, dataFirst: Boolean = false): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4096).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def tag(t: String): Unit = bb.put(t.getBytes("US-ASCII"))
+    def fmt(): Unit = {
+      tag("fmt "); bb.putInt(fmtSize)
+      val body = java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      body.putShort(format.toShort).putShort(channels.toShort).putInt(8000)
+        .putInt(8000 * channels * bits / 8).putShort((channels * bits / 8).toShort)
+        .putShort(bits.toShort)
+      bb.put(body.array(), 0, fmtSize)
+    }
+    def dat(): Unit = { tag("data"); bb.putInt(data.length); bb.put(data) }
+    tag("RIFF"); bb.putInt(0); tag("WAVE")
+    if (dataFirst) { dat(); fmt() } else { fmt(); dat() }
+    val out = java.util.Arrays.copyOf(bb.array(), bb.position())
+    java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(4, out.length - 8)
+    out
+  }
+
+  private def s16le(samples: Int*): Array[Byte] =
+    samples.flatMap(s => Seq((s & 0xff).toByte, ((s >> 8) & 0xff).toByte)).toArray
+
+  test("the WAV quarantine table: each of the three WAV consumers admits or drops each payload") {
+    val four = s16le(100, -200, 3000, -4000)
+    val valid = Multimodal.wavPcm16Mono(8000, Array[Short](100, -200, 3000, -4000), infoBytes = 3)
+    // payload -> (parseWav, audioDhash56, audioAmpEntropy) admits
+    val table = Seq[(String, Array[Byte], (Boolean, Boolean, Boolean))](
+      ("valid mono", valid, (true, true, true)),
+      ("hand-built mono", wav(four), (true, true, true)),
+      ("null", null, (false, false, false)),
+      ("non-RIFF", "RIFX".getBytes("US-ASCII") ++ wav(four).drop(4), (false, false, false)),
+      ("non-WAVE", wav(four).updated(8, 'A'.toByte), (false, false, false)),
+      ("text", "not audio at all, just text bytes here".getBytes, (false, false, false)),
+      ("truncated chunk", valid.dropRight(3), (false, false, false)),
+      ("data before fmt", wav(four, dataFirst = true), (false, false, false)),
+      ("fmt under 16 bytes", wav(four, fmtSize = 14), (false, false, false)),
+      ("float", wav(s16le(0, 0, 0, 0), format = 3, bits = 32), (false, false, false)),
+      ("8-bit PCM", wav(four, bits = 8), (false, false, false)),
+      ("stereo", wav(four, channels = 2), (true, false, false)),
+      ("odd data size", wav(four.dropRight(1)), (false, false, false)),
+      ("0 samples", wav(Array.emptyByteArray), (false, false, false)),
+      ("1 sample", wav(s16le(1234)), (true, false, true)))
+    table.foreach { case (name, b, want) =>
+      val got = (Multimodal.parseWav(7L, b).isDefined,
+        Multimodal.audioDhash56(7L, b).isDefined,
+        Multimodal.audioAmpEntropy(7L, b).isDefined)
+      assert(got == want, name)
+    }
+  }
+
+  test("the image quarantine table: each of the four ImageIO consumers admits or drops each payload") {
+    import spark.implicits._
+    val png = Multimodal.pngRgb24(6, 4, (x, y) => (10 * x, 20 * y, x + y))
+    val rnd = new scala.util.Random(11)
+    val payloads = Seq[(Long, Array[Byte])](
+      1L -> png,
+      2L -> Multimodal.bmp24(3, 2, (x, y) => (x, y, 7)),
+      3L -> null,
+      4L -> Array.fill(64)(rnd.nextInt(256).toByte),
+      5L -> png.take(png.length / 2))
+    val assets = payloads.toDF("asset_id", "payload")
+    def admitted(ds: org.apache.spark.sql.Dataset[_]): Set[Long] =
+      ds.toDF().select("asset_id").as[Long].collect().toSet
+    val want = Set(1L, 2L)
+    assert(admitted(Multimodal.decodePixels(spark, assets)) == want)
+    assert(admitted(Multimodal.resizePixels(spark, assets, 2, 2)) == want)
+    assert(admitted(Multimodal.dhash56(spark, assets)) == want)
+    assert(admitted(Multimodal.imageEntropy(spark, assets)) == want)
+  }
 }

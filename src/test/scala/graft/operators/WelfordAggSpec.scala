@@ -31,24 +31,4 @@ class WelfordAggSpec extends SparkSpec {
     val st = WelfordAgg.finish(WelfordAgg.zero)
     assert(st.n == 0 && st.mean.isNaN)
   }
-
-  test("statsUdaf skips nulls like the built-in aggregates") {
-    val df = Seq(Some(1.0), None, Some(3.0), None, Some(8.0)).toDF("v")
-    val r = df.agg(WelfordAgg.statsUdaf(col("v")).as("s")).select("s.*").head()
-    assert(r.getAs[Long]("n") == 3)
-    assert(math.abs(r.getAs[Double]("mean") - 4.0) < 1e-12)
-    assert(r.getAs[Double]("min") == 1.0 && r.getAs[Double]("max") == 8.0)
-  }
-
-  test("FeatureSpace.numericStats one-pass and built-in formulations agree") {
-    val df = Tables.events(spark, sf)
-      .select(col("value"), (col("value") * 2).as("v2"))
-    val w = FeatureSpace.numericStats(df, Seq("value", "v2"), onePass = true)
-    val b = FeatureSpace.numericStats(df, Seq("value", "v2"), onePass = false)
-    Seq("value", "v2").foreach { c =>
-      assert(math.abs(w(c).mean - b(c).mean) < 1e-9)
-      assert(math.abs(w(c).varPop - b(c).varPop) < 1e-6 * math.max(1.0, b(c).varPop))
-      assert(w(c).min == b(c).min && w(c).max == b(c).max)
-    }
-  }
 }

@@ -63,7 +63,7 @@ class DedupWindowSpec extends SparkSpec {
     // each within 50 of their PREDECESSOR (the kept row at 0 re-armed
     // by the dropped 40), so only 0 and 131 are kept — a from-last-KEPT
     // rule would also keep 80 (80 - 0 > 50). This pins the idle-TTL
-    // contract shared with StreamingDedup.keepFirstFn. The boundary is
+    // contract shared with KeepFirst.keepFirstFn. The boundary is
     // strict: a gap EXACTLY equal to the horizon is still a duplicate
     // (80 -> 130 would stay one group), hence 131 here.
     val probe = spark.sql(

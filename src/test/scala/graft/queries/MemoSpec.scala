@@ -143,4 +143,24 @@ class MemoSpec extends graft.SparkSpec {
     Seq("corpus_diversity_incremental", "epoch_plan_incremental", "data_card_incremental")
       .foreach(k => drill(k, "documents", docs, docs.filter(col("doc_id") % 2 === 0)))
   }
+
+  test("a warm build of dedup_cluster runs no job and rebuilds no textClusterLabels") {
+    val dedupCluster = graft.SparkEntry.queries("dedup_cluster")
+    dedupCluster(spark, sf) // the warm-up build runs the size probe
+    val jobs = new AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
+    MemoTrace.drain()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      dedupCluster(spark, sf)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} job(s) ran while building the DataFrame")
+    val events = MemoTrace.drain()
+    assert(!events.exists(_.startsWith("textClusterLabels")), events)
+  }
 }

@@ -463,21 +463,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("kmeansAssignJoin (the useJoin fallback) broadcasts centroids and partial-aggregates the argmax") {
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-    val cents = graft.sim.Similarity.collectCentroids(
-      graft.sim.Similarity.kmeansCentroids(emb, "embedding", 3, 1))
-    val p = graft.sim.Similarity.kmeansAssignJoin(emb, "embedding",
-        graft.sim.Similarity.localizeCentroids(spark, cents), "cell")
-      .queryExecution.explainString(FormattedMode)
-    assert(p.contains("Broadcast"), p)
-    // the k-fold scored intermediate reduces map-side: partial max/first
-    // before the exchange, so one row per input row crosses the wire
-    assert(p.contains("partial_max"), p)
-    assert(!p.contains("Window"), p)
-    assert(!p.contains("CartesianProduct"), p)
-  }
-
   test("ann_ivf_kmeans64 search plan stays equi/broadcast (no cartesian, no explode)") {
     val p = plan("ann_ivf_kmeans64")
     assert(!p.contains("CartesianProduct"), p)
@@ -687,6 +672,35 @@ class PlanShapeSpec extends SparkSpec {
     assert(policyFns == Seq("lag", "last", "lead", "lead", "sum"), s"fill_policy: $policyFns\n$policy")
     val (asof, asofWindows) = windows("join_asof_nearest")
     assert(asofWindows.size == 1, asof)
+  }
+
+  test("fill keys: one neighbour struct per interpolated column, bound below the window that reads it") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, CreateNamedStruct, NamedExpression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def structs(p: ProjectExec): Seq[NamedExpression] =
+      p.projectList.filter(_.find(_.isInstanceOf[CreateNamedStruct]).isDefined)
+    // fill_policy interpolates v_cum only; v_inst's fills read no struct.
+    // Were lag and lead handed the struct expression, Catalyst would
+    // extract it once per window function (_w0, _w1).
+    for (key <- Seq("resample_up_linear", "fill_interpolate", "fill_policy")) {
+      val exec = graft.SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan
+      val bound = aqe.collect(exec) { case p: ProjectExec => structs(p) }.flatten
+      assert(bound.size == 1, s"$key: ${bound.mkString(", ")}\n$exec")
+    }
+    // where the struct is shuffled, the series-key Exchange carries it once
+    for (key <- Seq("resample_up_linear", "fill_interpolate")) {
+      val exec = graft.SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan
+      val shuffled = aqe.collect(exec) {
+        case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case HashPartitioning(Seq(a: Attribute), _) => a.name == "user_id"
+          case _ => false
+        }) => e.child.collectFirst { case p: ProjectExec => structs(p) }
+      }.flatten.flatten
+      assert(shuffled.size == 1, s"$key: ${shuffled.mkString(", ")}\n$exec")
+    }
   }
 
   test("data_card: one scan, broadcast membership joins, map-side-combined rollup") {

@@ -131,35 +131,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("kmeansAssignJoin equals the expression-path argmax on real data") {
-    val emb = Tables.embeddings(spark, sf)
-    val cent = Similarity.kmeansCentroids(emb, "embedding", nPlanes = 3, iters = 1)
-    val cents = Similarity.collectCentroids(cent)
-    val viaExpr = emb.withColumn("cell", Similarity.argmaxCell(col("embedding"), cents))
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaJoin = Similarity.kmeansAssignJoin(emb, "embedding",
-        Similarity.localizeCentroids(spark, cents), "cell")
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaExpr == viaJoin)
-    // the join path must also preserve row count and the original columns
-    val joined = Similarity.kmeansAssignJoin(emb, "embedding",
-      Similarity.localizeCentroids(spark, cents), "cell")
-    assert(joined.count() == emb.count())
-    assert(joined.columns.toSeq == emb.columns.toSeq :+ "cell")
-  }
-
-  test("kmeansAssign default (projection) and useJoin paths agree") {
-    val emb = Tables.embeddings(spark, sf)
-    val cent = Similarity.kmeansCentroids(emb, "embedding", nPlanes = 3, iters = 1)
-    def cells(useJoin: Boolean): Map[Long, Long] =
-      Similarity.kmeansAssign(emb, "embedding", cent, "cell", useJoin)
-        .select(col("vec_id"), col("cell"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cells(useJoin = false) == cells(useJoin = true))
-  }
-
   test("nearestCentroid matches the retired expression-tree argmax and the HOF fold") {
     val emb = Tables.embeddings(spark, sf)
     val cents = Similarity.collectCentroids(
@@ -216,32 +187,6 @@ class SimilaritySpec extends SparkSpec {
     val got = df.select(Similarity.nearestCentroid(col("v"), cents).as("c"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     assert(got.toSeq == Seq(None, None, Some(1L)))
-  }
-
-  test("kmeansAssignJoin handles k=512 cells — the k≈√N IVF shape — with correct argmax") {
-    // the expression path compiles k dot products into one projection and
-    // dies by codegen size around k≈64; the join path must stay
-    // k-independent. 512 synthetic unit-ish centroids, deterministic in
-    // (cell, dim), assignments cross-checked against a driver-side argmax.
-    val emb = Tables.embeddings(spark, sf)
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val cents = (0 until 512).map { c =>
-      val v = Seq.tabulate(dim)(i => math.sin(c * 37.0 + i * 11.0))
-      Similarity.Centroid(c.toLong, v, math.sqrt(v.map(x => x * x).sum))
-    }
-    val assigned = Similarity.kmeansAssignJoin(emb, "embedding",
-        Similarity.localizeCentroids(spark, cents), "cell")
-      .select(col("vec_id"), col("embedding"), col("cell")).collect()
-    assert(assigned.length == emb.count())
-    assert(assigned.map(_.getLong(2)).distinct.length > 1) // not all one cell
-    assigned.take(25).foreach { r =>
-      val vec = r.getSeq[Float](1)
-      val best = cents.map { c =>
-        val s = vec.zip(c.cvec).map { case (a, b) => a * b }.sum / c.cnrm
-        (s, -c.cell)
-      }.max._2 * -1
-      assert(r.getLong(2) == best, s"vec ${r.getLong(0)}")
-    }
   }
 
   test("large-k learning (nPlanes=6) converges through the projection path and stays deterministic") {

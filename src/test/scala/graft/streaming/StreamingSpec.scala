@@ -230,20 +230,20 @@ class StreamingSpec extends SparkSpec {
     val s1 = TestGroupState.create[Long](Optional.empty[Long](),
       GroupStateTimeout.ProcessingTimeTimeout, batchProcessingTimeMs = 0L,
       eventTimeWatermarkMs = Optional.empty[Long](), hasTimedOut = false)
-    val out1 = StreamingDedup.keepFirstFn(ttl)("fp", Iterator(FpDoc("fp", 3L), FpDoc("fp", 10L)), s1).toSeq
+    val out1 = KeepFirst.keepFirstFn(ttl, (_: FpDoc).docId)("fp", Iterator(FpDoc("fp", 3L), FpDoc("fp", 10L)), s1).toSeq
     assert(out1 == Seq((10L, 3L)) && s1.get == 3L)
     assert(s1.getTimeoutTimestampMs.isPresent) // TTL armed, state evictable
     // expiry: the timed-out invocation clears the fingerprint
     val s2 = TestGroupState.create[Long](Optional.of(3L),
       GroupStateTimeout.ProcessingTimeTimeout, batchProcessingTimeMs = 3600001L,
       eventTimeWatermarkMs = Optional.empty[Long](), hasTimedOut = true)
-    assert(StreamingDedup.keepFirstFn(ttl)("fp", Iterator.empty, s2).isEmpty)
+    assert(KeepFirst.keepFirstFn(ttl, (_: FpDoc).docId)("fp", Iterator.empty, s2).isEmpty)
     assert(s2.isRemoved)
     // post-expiry re-arrival: admitted as a NEW keeper (retention trade)
     val s3 = TestGroupState.create[Long](Optional.empty[Long](),
       GroupStateTimeout.ProcessingTimeTimeout, batchProcessingTimeMs = 7200000L,
       eventTimeWatermarkMs = Optional.empty[Long](), hasTimedOut = false)
-    assert(StreamingDedup.keepFirstFn(ttl)("fp", Iterator(FpDoc("fp", 20L)), s3).isEmpty)
+    assert(KeepFirst.keepFirstFn(ttl, (_: FpDoc).docId)("fp", Iterator(FpDoc("fp", 20L)), s3).isEmpty)
     assert(s3.get == 20L)
   }
 
