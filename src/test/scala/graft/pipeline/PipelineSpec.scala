@@ -1,9 +1,12 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.config.PipelineConfig
+import graft.operators.WindowOps
 import graft.sources.CsvSource
 
 /** Reference-parity tests: synthesize the three CSV shapes of FIXTURES.md
@@ -281,6 +284,114 @@ class PipelineSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Pipeline.run(spark, cfg, pathOverride = Some(bad), auditInterval = true)
     }
+  }
+
+  // --- the chunk-keyed examples against the composition they replaced ---
+
+  /** 40 half-hourly smart-meter rows: 240 rows once upsampled to 300 s. */
+  lazy val smLongCsv: String = {
+    val rows = (0 until 40).map { i =>
+      f"2016-02-01,${i / 2}%02d:${i % 2 * 30}%02d:00,${1.0 + i * i % 7},${2.0 + i % 5},${3.0 + i}"
+    }
+    writeTemp("sm_long.csv", ("date_block,time_block,Load_residential_single_0," +
+      "Load_residential_single_1,Load_residential_single_2") +: rows)
+  }
+
+  /** 30,000 one-second DER rows: 100 rows once downsampled to 300 s. */
+  lazy val derLongCsv: String = writeTemp("der_long.csv", "datetimestampseconds,W,DCW,AphA,PhVphA" +:
+    (0 until 30000).map { i =>
+      s"${1672531200 + i}.0,${100.0 + i % 977},${50.0 + i % 313},${1.0 + i * 0.1},${230.0 + i * 0.01}"
+    })
+
+  private def rows(df: DataFrame, order: String*): Seq[Row] = df.orderBy(order.map(col): _*).collect().toSeq
+
+  /** `prep.df`'s `row_idx` is exactly 1..rows. */
+  private def assertDense(prep: Pipeline.Prepared): Unit =
+    assert(rows(prep.df.select("row_idx"), "row_idx").map(_.getLong(0)) == (1L to prep.rows))
+
+  /** All three builders and `batchedExamples` against the old composition:
+    * `WindowOps.prefixSplit`'s own global index, the window partitioned by
+    * `split`, and `fixedBatches` (examples without positions take it).
+    */
+  private def assertParity(prep: Pipeline.Prepared, w: Int, fractions: (Double, Double, Double),
+                           batch: Int): Unit = {
+    val vec = array(prep.outputColumns.map(c => col(c).cast("double")): _*)
+    val split = WindowOps.prefixSplit(prep.df.withColumn("vec", vec), fractions, Seq.empty,
+      Seq("row_idx")).drop("rn")
+    val by = (Seq("split"), Seq("row_idx"))
+    val (inNames, targetNames) = (prep.outputColumns.take(2).reverse, prep.outputColumns.take(1))
+    val idx = prep.outputColumns.zipWithIndex.toMap
+    val variants = Seq(
+      "v1" -> (Pipeline.supervisedExamples(prep, w, fractions),
+        WindowOps.supervisedWindow(split, col("vec"), w, by._1, by._2)),
+      "v2" -> (Pipeline.supervisedExamplesV2(prep, w, fractions),
+        WindowOps.supervisedWindowV2(split, col("vec"), w, by._1, by._2)),
+      "select" -> (Pipeline.supervisedExamplesSelect(prep, w, inNames, targetNames, fractions),
+        WindowOps.windowGather(split, col("vec"), w, inNames.map(idx), targetNames.map(idx),
+          by._1, by._2)))
+    val cols = Seq("split", "row_idx", "input", "target").map(col)
+    variants.foreach { case (name, (got, old)) =>
+      val want = rows(old.select(cols: _*), "row_idx")
+      assert(rows(got.select(cols: _*), "row_idx") == want, s"$name W=$w $fractions")
+      assert(rows(Pipeline.batchedExamples(got, batch), "split", "batch_id") ==
+        rows(Pipeline.batchedExamples(old.select(cols: _*), batch), "split", "batch_id"),
+        s"$name W=$w $fractions batch $batch")
+    }
+  }
+
+  test("chunk-keyed examples equal the split-partitioned composition on an upsampled series") {
+    val prep = Pipeline.run(spark, PipelineConfig.fromJson(smConfigJson),
+      pathOverride = Some(smLongCsv), auditInterval = true)
+    assert(prep.rows == 240)
+    assertDense(prep)
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    // halos and split ends inside a chunk: n spans more than two chunks
+    assert(prep.rows > 2 * WindowOps.chunkRows(prep.rows, 9, partitions))
+    assertParity(prep, 10, (0.7, 0.2, 0.1), 4)
+    // eval (24 rows) is shorter than the window: no eval examples
+    assert(prep.rows > 2 * WindowOps.chunkRows(prep.rows, 29, partitions))
+    assertParity(prep, 30, (0.7, 0.2, 0.1), 3)
+    assertParity(prep, 10, (0.8, 0.2, 0.0), 5)
+    assertParity(prep, 1, (0.7, 0.2, 0.1), 7)
+    prep.release()
+  }
+
+  test("skip and downsample branches end with row_idx dense 1..rows and keep example parity") {
+    val noResample = PipelineConfig.fromJson(derConfigJson.replace(
+      "\"time_interval_desired\": 300", "\"time_interval_desired\": 1"))
+    val skipped = Pipeline.run(spark, noResample, pathOverride = Some(derCsv), skipRows = 600)
+    assert(skipped.rows == 600)
+    assertDense(skipped)
+    // the rebase: row_idx 1 is the first kept row, epoch 1672531200 + 600
+    assert(skipped.df.filter(col("row_idx") === 1).count() == 1)
+    assertParity(skipped, 4, (0.7, 0.2, 0.1), 8)
+    skipped.release()
+
+    val down = Pipeline.run(spark, PipelineConfig.fromJson(derConfigJson),
+      pathOverride = Some(derLongCsv), auditInterval = true)
+    assert(down.rows == 100)
+    assertDense(down)
+    assertParity(down, 3, (0.7, 0.2, 0.1), 4)
+    down.release()
+  }
+
+  test("building the examples and batches runs no Spark job") {
+    val prep = Pipeline.run(spark, PipelineConfig.fromJson(smConfigJson), pathOverride = Some(smLongCsv))
+    val jobs = new AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val built = Seq(Pipeline.supervisedExamples(prep, 10), Pipeline.supervisedExamplesV2(prep, 10),
+        Pipeline.supervisedExamplesSelect(prep, 10, prep.outputColumns.take(1), prep.outputColumns.take(1)))
+      (built :+ Pipeline.batchedExamples(built.head, 10)).foreach(_.queryExecution.executedPlan)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} job(s) ran while building the examples")
+    prep.release()
   }
 
   test("CSV validation: header detection, empty-cell audit, schema typing") {

@@ -797,6 +797,54 @@ class PlanShapeSpec extends SparkSpec {
     assert(bad.linesIterator.exists(l => l.contains("Sort [") && l.contains(", true,")), bad)
   }
 
+  test("pipeline examples, batches and interval audit: no window is global or keyed by split alone") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
+    import graft.pipeline.Pipeline
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan")
+    val csv = dir.resolve("sm.csv")
+    java.nio.file.Files.write(csv, ("date_block,time_block,L0,L1" +: (0 until 24).map(i =>
+      f"2016-02-01,${i / 2}%02d:${i % 2 * 30}%02d:00,${1.0 + i},${2.0 + i % 3}")).mkString("\n").getBytes)
+    val cfg = graft.config.PipelineConfig.fromJson("""{"data_pipeline": {"extraction": {
+      |  "csv_folder": "x", "csv_file_train": "sm.csv", "use_existing_columnnames": true,
+      |  "n_rows": 1000, "columns_original": [], "columns_selected": ["date_block","time_block","L0","L1"],
+      |  "column_datetimedict": {"column_date":"date_block","column_time":"time_block"},
+      |  "columns_added": ["datetimestamp","datetimestampseconds"],
+      |  "column_datetime": "datetimestampseconds", "time_interval_original": 1800},
+      |  "transformation": {"features": [
+      |    {"feature_type":"numerical","output_mode":"normalized","features":["L0","L1"]}],
+      |  "time_interval_desired": 300, "n_rows_to_adapt_featurespace": 100}},
+      |  "logging": {"plot_enabled": false, "plot_directory": "plots/"}}""".stripMargin)
+    val prep = Pipeline.run(spark, cfg, pathOverride = Some(csv.toString))
+    val examples = Pipeline.supervisedExamples(prep, 10)
+    val plans = Seq(
+      "supervisedExamples" -> examples,
+      "supervisedExamplesV2" -> Pipeline.supervisedExamplesV2(prep, 10),
+      "supervisedExamplesSelect" -> Pipeline.supervisedExamplesSelect(prep, 10, Seq("L1"), Seq("L0")),
+      "batchedExamples" -> Pipeline.batchedExamples(examples, 10),
+      "audit" -> Pipeline.intervals(prep.df.withColumn("t", col("row_idx") * 300), "t", prep.rows))
+    def unscalable(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+      aqe.collect(df.queryExecution.executedPlan) { case w: WindowExec => w.partitionSpec.map {
+        case a: Attribute => a.name
+        case e => e.sql
+      } }.filter(k => k.isEmpty || k == Seq("split"))
+    for ((name, df) <- plans) {
+      val exec = df.queryExecution.executedPlan
+      assert(aqe.collect(exec) { case w: WindowExec => w }.nonEmpty, s"$name plans no window:\n$exec")
+      assert(unscalable(df).isEmpty, s"$name:\n$exec")
+    }
+    // sanity that the detector CAN fire: on a split-keyed window and on a
+    // global lead
+    val ordered = prep.df.withColumn("split", col("row_idx") % 3)
+    assert(unscalable(graft.operators.WindowOps.slidingWindow(ordered, col("L0"), 10,
+      Seq("split"), Seq("row_idx"))).nonEmpty)
+    assert(unscalable(ordered.select(graft.operators.WindowOps.lagInterval(col("row_idx"),
+      Seq.empty, Seq("row_idx")))).nonEmpty)
+    prep.release()
+  }
+
   test("ts_seasonal: map-side combined cell agg; the type-total window keys on event_type") {
     val p = plan("ts_seasonal")
     assert(p.contains("partial_sum"), p)        // corpus collapses map-side
